@@ -39,22 +39,4 @@ object SparkEntry {
 
   def oracleSql: Map[String, String] =
     Shared.uniqueMap[String]("oracle")(oracleSlices.flatten: _*)
-
-  // ---- forwarders: externally-referenced members whose definitions moved
-  // to registry.Shared in the r12 split (Bench warmups, MimicPipeline,
-  // specs) — the public surface is unchanged.
-  private[graft] def dupClustersCached(s: SparkSession, d: String): DataFrame =
-    Shared.dupClustersCached(s, d)
-  private[graft] def curatedStagesCached(s: SparkSession, d: String): DataFrame =
-    Shared.curatedStagesCached(s, d)
-  private[graft] def lshBaseIndexCached(s: SparkSession, d: String): DataFrame =
-    Shared.lshBaseIndexCached(s, d)
-  private[graft] def joinSnapshotCached(s: SparkSession, d: String): DataFrame =
-    Shared.joinSnapshotCached(s, d)
-  private[graft] def permilleHash1M(key: org.apache.spark.sql.Column, salt: String): org.apache.spark.sql.Column =
-    Shared.permilleHash1M(key, salt)
-  private[graft] val icd9Ranges: Seq[(Int, Int, String)] = Shared.icd9Ranges
-  private[graft] def icd9Category(code3: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    Shared.icd9Category(code3)
-  val windowTopSql: String = Shared.windowTopSql
 }

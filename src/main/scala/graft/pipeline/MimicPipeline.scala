@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.sources.MimicSynth
 import org.apache.spark.ml.feature.{CountVectorizerModel, Tokenizer, VectorAssembler}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's §3 modeling pipeline at ITS OWN published scale,
@@ -20,9 +20,74 @@ import org.apache.spark.sql.functions._
   */
 object MimicPipeline {
 
+  /** The reference's ICD-9 main-category ranges (py:128-141): FIRST
+    * matching range wins (np.where applied sequentially) and bounds are
+    * INCLUSIVE on both ends (pandas .between) — so 140 is 'infectious',
+    * 999 (the V/E/null bucket) is 'injury', both the reference's own
+    * behavior, faithfully replicated.
+    */
+  private[graft] val icd9Ranges: Seq[(Int, Int, String)] = Seq(
+    (1, 140, "infectious"), (140, 240, "neoplasms"), (240, 280, "endocrine"),
+    (280, 290, "blood"), (290, 320, "mental"), (320, 390, "nervous"),
+    (390, 460, "circulatory"), (460, 520, "respiratory"), (520, 580, "digestive"),
+    (580, 630, "genitourinary"), (630, 680, "pregnancy"), (680, 710, "skin"),
+    (710, 740, "muscular"), (740, 760, "congenital"), (760, 780, "prenatal"),
+    (780, 800, "misc"), (800, 1000, "injury"), (1000, 2000, "misc"))
+
   /** The 17 distinct ICD-9 category names (18 ranges, 'misc' twice). */
-  val diagCats: Seq[String] =
-    graft.SparkEntry.icd9Ranges.map(_._3).distinct
+  val diagCats: Seq[String] = icd9Ranges.map(_._3).distinct
+
+  /** The reference's ICD-9 recode (py:120-147) of `ICD9_CODE`: codes with
+    * a letter (V/E) or null → 999, else the 3-digit slice, then the
+    * first [[icd9Ranges]] range that holds it. Mirrored by
+    * `icd9CategorySql(mimicCode3Sql)`.
+    */
+  val icd9Category: Column = {
+    val code3 = coalesce(
+      when(col("ICD9_CODE").rlike("[A-Za-z]"), lit(999))
+        .otherwise(substring(col("ICD9_CODE"), 1, 3).cast("int")),
+      lit(999))
+    icd9Ranges.foldRight(lit(null).cast("string")) { case ((lo, hi, cat), acc) =>
+      when(code3.between(lo, hi), cat).otherwise(acc)
+    }
+  }
+
+  private[graft] def icd9CategorySql(expr: String): String =
+    "CASE " + icd9Ranges.map { case (lo, hi, c) =>
+      s"WHEN $expr BETWEEN $lo AND $hi THEN '$c'"
+    }.mkString(" ") + " END"
+
+  /** The DuckDB code3 recode shared by the diagnosis oracles. */
+  private[graft] val mimicCode3Sql: String =
+    "COALESCE(CASE WHEN regexp_matches(icd9_code, '[A-Za-z]') THEN 999 " +
+      "ELSE CAST(substr(icd9_code, 1, 3) AS INTEGER) END, 999)"
+
+  /** Each subject's first admission time, `_admit_min`, over the
+    * caller's own admissions frame (all of them, or survivors only).
+    */
+  def firstAdmission(adm: DataFrame): DataFrame =
+    adm.groupBy("SUBJECT_ID").agg(min("ADMITTIME").as("_admit_min"))
+
+  /** Adds `age` (long): whole years from `DOB` to `_admit_min`, with the
+    * reference's >89 date-shift clamp (py:205-215: over-89 and negative
+    * ages, the pandas int64-ns overflow form, become 90).
+    */
+  def withAge(df: DataFrame): DataFrame =
+    df.withColumn("_age_raw",
+        floor(graft.ops.CohortOps.fractionalDays(col("_admit_min"), col("DOB")) / 365.0))
+      .withColumn("age",
+        when(col("_age_raw") > 89 || col("_age_raw") < 0, 90L).otherwise(col("_age_raw")))
+      .drop("_age_raw")
+
+  /** The top-3,000 vocabulary cut over a (…, word) token stream:
+    * (word, cnt) ordered by count desc, word asc — the deterministic
+    * tie-break, so words tied at the cut boundary cannot make the
+    * vocabulary session-dependent. Computed distributed; only the
+    * 3,000 winners leave the aggregation.
+    */
+  def topWords(tokens: DataFrame): DataFrame =
+    tokens.groupBy("word").agg(count(lit(1)).as("cnt"))
+      .orderBy(desc("cnt"), asc("word")).limit(3000)
 
   private val memo =
     new java.util.WeakHashMap[SparkSession, (DataFrame, Array[String])]()
@@ -56,9 +121,7 @@ object MimicPipeline {
   private def build(s: SparkSession, f: Long): (DataFrame, Array[String]) = {
     {
       val rows = MimicSynth.modelingRowsAt(s, f)
-      val notes = MimicSynth.notesAt(s, f)
-        .filter(col("CATEGORY") === "Discharge summary")
-        .select(col("HADM_ID"), col("TEXT"))
+      val notes = MimicSynth.dischargeSummariesAt(s, f)
       // missing-note rows stay in the matrix as all-zero text (the
       // reference's fillna(' '))
       // tokenize ONCE and pin the token frame: synthetic TEXT generation
@@ -74,43 +137,25 @@ object MimicPipeline {
           .na.fill(" ", Seq("TEXT")))
         .drop("TEXT")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // deterministic top-3000 vocabulary (count desc, word asc — the
-      // SAME tie-break the oracled mimic_notes_vocab query pins):
-      // CountVectorizer.fit orders by frequency only, so ties at the cut
-      // boundary would make the matrix content session-dependent. The cut
-      // is computed distributed and only the 3,000 winners are collected.
-      val vocab = toksed
-        .select(explode(col("_toks")).as("word"))
-        .groupBy("word").agg(count(lit(1)).as("_c"))
-        .orderBy(desc("_c"), asc("word")).limit(3000)
+      // the deterministic top-3000 cut (CountVectorizer.fit orders by
+      // frequency only, so ties at the cut boundary would make the
+      // matrix content session-dependent)
+      val vocab = topWords(toksed.select(explode(col("_toks")).as("word")))
         .collect().map(_.getString(0))
       val bowed = new CountVectorizerModel(vocab)
         .setInputCol("_toks").setOutputCol("_bow")
         .transform(toksed)
       // 17 per-admission diagnosis-category counts (explicit sums — no
       // pivot distinct-values pre-job)
-      val dg = MimicSynth.diagnosesAt(s, f)
-      val code3 = coalesce(
-        when(col("ICD9_CODE").rlike("[A-Za-z]"), lit(999))
-          .otherwise(substring(col("ICD9_CODE"), 1, 3).cast("int")),
-        lit(999))
       val catCols = diagCats.map(c =>
         sum(when(col("cat") === c, 1.0).otherwise(0.0)).as(s"diag_$c"))
-      val cats = dg.withColumn("cat", graft.SparkEntry.icd9Category(code3))
+      val cats = MimicSynth.diagnosesAt(s, f).withColumn("cat", icd9Category)
         .groupBy("HADM_ID")
         .agg(catCols.head, catCols.tail: _*)
-      val pat = MimicSynth.patientsAt(s, f)
-      val admMin = MimicSynth.admissionsAt(s, f)
-        .groupBy("SUBJECT_ID").agg(min("ADMITTIME").as("_admit_min"))
-      val aged = bowed
+      val aged = withAge(bowed
         .join(cats, Seq("HADM_ID"))
-        .join(admMin, Seq("SUBJECT_ID"))
-        .join(pat, Seq("SUBJECT_ID"))
-        .withColumn("_age_raw",
-          floor(graft.ops.CohortOps.fractionalDays(col("_admit_min"), col("DOB")) / 365.0))
-        .withColumn("age",
-          when(col("_age_raw") > 89 || col("_age_raw") < 0, 90.0)
-            .otherwise(col("_age_raw").cast("double")))
+        .join(firstAdmission(MimicSynth.admissionsAt(s, f)), Seq("SUBJECT_ID"))
+        .join(MimicSynth.patientsAt(s, f), Seq("SUBJECT_ID")))
         .withColumn("gender_m", when(col("GENDER") === "M", 1.0).otherwise(0.0))
       val asm = new VectorAssembler()
         .setInputCols(("_bow" +: diagCats.map(c => s"diag_$c")).toArray
@@ -126,6 +171,24 @@ object MimicPipeline {
       (out, vocab)
     }
   }
+
+  /** The matrix vocabulary as the MI ranking derives it: [[topWords]]
+    * over the modeling rows' [[MimicSynth.noteTokens]] — the SET
+    * [[assembled]] turns into BoW slots, without forcing the full 45k ×
+    * 3,019 assembly + its session-lifetime cache pin (a select-only
+    * session shouldn't pay the matrix build). COUPLING CAUTION: the
+    * token stream splits on a single space where the matrix build runs
+    * ml.Tokenizer (lowercase, \\s+) over the left-joined fillna(" ")
+    * frame; both feed the same cut. They are equivalent on the generated
+    * text (lowercase, single-spaced, non-empty notes), and MimicSynthSpec
+    * pins SET equality with [[vocabulary]] so a generator change that
+    * breaks the equivalence fails the suite instead of crashing the
+    * sweep's slot lookup.
+    */
+  private[graft] def rankingVocabulary(s: SparkSession): DataFrame =
+    topWords(MimicSynth.noteTokens(s)
+      .join(MimicSynth.modelingRows(s).select("HADM_ID"), "HADM_ID"))
+      .select("word")
 
   /** The reference's feature-selection ranking (py:633-638,
     * `mutual_info_classif(X_train_tf, y_train)` → sort desc): plug-in MI
@@ -146,26 +209,6 @@ object MimicPipeline {
     * combined), a broadcast vocab join, and windows over the ≤|features|
     * × |values| × 2 joint-count frame — never over the data.
     */
-  /** The MI ranking's own derivation of the matrix vocabulary: the
-    * top-3000 cut (count desc, word asc) over the modeling rows' note
-    * tokens — the SET [[assembled]] turns into BoW slots, without forcing
-    * the full 45k × 3,019 assembly + its session-lifetime cache pin (a
-    * select-only session shouldn't pay the matrix build). COUPLING
-    * CAUTION: this splits on a single space where the matrix build runs
-    * ml.Tokenizer (lowercase, \\s+) over the left-joined fillna(" ")
-    * frame — equivalent on the generated text (lowercase, single-spaced,
-    * non-empty notes), and MimicSynthSpec pins SET equality with
-    * [[vocabulary]] so a generator change that breaks the equivalence
-    * fails the suite instead of crashing the sweep's slot lookup.
-    */
-  private[graft] def rankingVocabulary(s: SparkSession): DataFrame =
-    MimicSynth.notes(s)
-      .filter(col("CATEGORY") === "Discharge summary")
-      .select(col("HADM_ID"), explode(split(col("TEXT"), " ")).as("word"))
-      .join(MimicSynth.modelingRows(s).select("HADM_ID"), "HADM_ID")
-      .groupBy("word").agg(count(lit(1)).as("_c"))
-      .orderBy(desc("_c"), asc("word")).limit(3000).select("word")
-
   def miRanking(s: SparkSession): DataFrame = {
     import s.implicits._
     // r14 (guide §2.4 "don't compute things twice"): the note TOKEN
@@ -188,37 +231,26 @@ object MimicPipeline {
     // sort-merge (measured: the un-hinted version shuffled the 1.5M-row
     // token stream twice, 17.6 MB exchanges).
     val mrows = MimicSynth.modelingRows(s).localCheckpoint()
-    val tokens = MimicSynth.notes(s)
-      .filter(col("CATEGORY") === "Discharge summary")
-      .select(col("HADM_ID"), explode(split(col("TEXT"), " ")).as("word"))
+    val tokens = MimicSynth.noteTokens(s)
       .join(broadcast(mrows.select("HADM_ID")), "HADM_ID")
       .localCheckpoint()
     val train = mrows
       .filter(col("split") === "train")
       .select(col("HADM_ID"), col("SUBJECT_ID"), col("label").as("y"))
     val tot = train.groupBy("y").agg(count(lit(1)).as("ny"))
-    // the vocabulary cut over the cohort's tokens — same derivation as
-    // rankingVocabulary (MimicSynthSpec pins SET equality with the
-    // matrix vocabulary), read from the materialized stream. Checkpointed
-    // (3,000 rows): it is referenced three times below (BoW probe,
-    // declared universe, and through sparseJoint) and a plain plan would
-    // re-run the corpus-wide cut per reference.
-    val vocabDf = tokens
-      .groupBy("word").agg(count(lit(1)).as("_c"))
-      .orderBy(desc("_c"), asc("word")).limit(3000).select("word")
-      .localCheckpoint()
+    // rankingVocabulary's cut, read from the materialized stream.
+    // Checkpointed (3,000 rows): it is referenced three times below (BoW
+    // probe, declared universe, and through sparseJoint) and a plain plan
+    // would re-run the corpus-wide cut per reference.
+    val vocabDf = topWords(tokens).select("word").localCheckpoint()
     val bowPairs = tokens
       .join(broadcast(vocabDf), "word")
       .join(broadcast(train.select("HADM_ID", "y")), "HADM_ID")
       .groupBy(col("word"), col("HADM_ID"), col("y"))
       .agg(count(lit(1)).as("v"))
       .select(concat(lit("bow:"), col("word")).as("feature"), col("v"), col("y"))
-    val code3 = coalesce(
-      when(col("ICD9_CODE").rlike("[A-Za-z]"), lit(999))
-        .otherwise(substring(col("ICD9_CODE"), 1, 3).cast("int")),
-      lit(999))
     val diagPairs = MimicSynth.diagnoses(s)
-      .withColumn("cat", graft.SparkEntry.icd9Category(code3))
+      .withColumn("cat", icd9Category)
       .join(broadcast(train.select("HADM_ID", "y")), "HADM_ID")
       .groupBy(col("cat"), col("HADM_ID"), col("y"))
       .agg(count(lit(1)).as("v"))
@@ -245,16 +277,9 @@ object MimicPipeline {
     // two plain hash-aggs over the 36k-row frame — an explode-of-structs
     // unpivot here trips a Janino codegen failure (interpreted fallback)
     // for zero benefit at 2 columns
-    val admMin = MimicSynth.admissions(s)
-      .groupBy("SUBJECT_ID").agg(min("ADMITTIME").as("_admit_min"))
-    val d0 = train
-      .join(admMin, Seq("SUBJECT_ID"))
-      .join(MimicSynth.patients(s), Seq("SUBJECT_ID"))
-      .withColumn("_age_raw",
-        floor(graft.ops.CohortOps.fractionalDays(col("_admit_min"), col("DOB")) / 365.0))
-      .withColumn("age",
-        when(col("_age_raw") > 89 || col("_age_raw") < 0, 90L)
-          .otherwise(col("_age_raw").cast("long")))
+    val d0 = withAge(train
+      .join(firstAdmission(MimicSynth.admissions(s)), Seq("SUBJECT_ID"))
+      .join(MimicSynth.patients(s), Seq("SUBJECT_ID")))
       .withColumn("gender_m", when(col("GENDER") === "M", 1L).otherwise(0L))
       .select(col("y"), col("age"), col("gender_m"))
       // checkpointed (36k × 3 longs): the age and gender_m joints below

@@ -5,6 +5,9 @@ import graft.core.Tables
 import graft.dedup.Dedup
 import graft.functions.VectorOps
 import graft.ops.{CohortOps, Recodes}
+import graft.pipeline.MimicPipeline.{firstAdmission, icd9Category, icd9CategorySql,
+  mimicCode3Sql, topWords, withAge}
+import graft.sources.MimicSynth.survivor
 import graft.sim.{Quantized, Similarity}
 import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -14,12 +17,22 @@ import org.apache.spark.sql.functions._
 /** the MIMIC-shaped reference-scale pipeline rows — one slice of the driver registry.
   *
   * Split out of Shared.scala in r12 (maintainability: the single file
-  * had reached 8.7k lines). PURE CODE MOTION: entry bodies and oracle SQL
-  * are byte-identical to the pre-split registry; SparkEntry composes the
-  * slices back into the same `queries`/`oracleSql` maps.
+  * had reached 8.7k lines); SparkEntry composes the slices back into the
+  * same `queries`/`oracleSql` maps. The MIMIC derivations these rows
+  * share (cohort label, survivor filter, note tokens, ICD-9 recode, age,
+  * top-3,000 cut) are defined once in MimicSynth and MimicPipeline.
   */
 private[graft] object MimicRegistry {
   import Shared._
+
+  /** HADM_IDs of the surviving admissions that carry a diagnosis — the
+    * 45,076-row cohort the vocabulary rows count tokens over.
+    */
+  private def diagnosedSurvivors(s: SparkSession): DataFrame =
+    graft.sources.MimicSynth.admissions(s).filter(survivor)
+      .join(graft.sources.MimicSynth.diagnoses(s).select("HADM_ID"),
+        Seq("HADM_ID"), "left_semi")
+      .select(col("HADM_ID"))
 
   val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // scale (58,976 admissions; sources/MimicSynth.scala): the engine's
@@ -36,18 +49,12 @@ private[graft] object MimicRegistry {
     // 2,958 pos + 42,118 neg, EXACTLY the reference's published counts
     // (MimicSynthSpec pins them); hadm_sum pins WHICH admissions, not
     // just how many
-    "mimic_cohort_counts" -> ((s, d) => {
-      val adm = graft.sources.MimicSynth.admissions(s)
-      graft.ops.CohortOps.labelNextEvent(
-        adm, entityCol = "SUBJECT_ID", timeCol = "ADMITTIME",
-        typeCol = "ADMISSION_TYPE", tieCol = "HADM_ID",
-        excludedType = "ELECTIVE", horizonDays = 30.0, anchorCol = "DISCHTIME")
-        .filter(col("DEATHTIME").isNull && col("ADMISSION_TYPE") =!= "NEWBORN")
+    "mimic_cohort_counts" -> ((s, d) =>
+      graft.sources.MimicSynth.cohort(s).filter(survivor)
         .join(graft.sources.MimicSynth.diagnoses(s).select("HADM_ID"),
           Seq("HADM_ID"), "left_semi")
         .groupBy(col("label"))
-        .agg(count(lit(1)).as("n"), sum(col("HADM_ID")).as("hadm_sum"))
-    }),
+        .agg(count(lit(1)).as("n"), sum(col("HADM_ID")).as("hadm_sum"))),
 
     // admissions profile: per-type counts and in-hospital deaths
     // (py:79-84 death readout; 7,863 NEWBORN rows = MIMIC-III's own)
@@ -62,8 +69,7 @@ private[graft] object MimicRegistry {
     // top-5-else — over the death/newborn-filtered cohort, exactly as
     // cells 7-9 sequence it
     "mimic_ethnicity_top5" -> ((s, d) => {
-      val adm = graft.sources.MimicSynth.admissions(s)
-        .filter(col("DEATHTIME").isNull && col("ADMISSION_TYPE") =!= "NEWBORN")
+      val adm = graft.sources.MimicSynth.admissions(s).filter(survivor)
       val recoded = adm.withColumn("eth",
         when(col("ETHNICITY").rlike("^ASIAN"), "ASIAN")
           .when(col("ETHNICITY").rlike("^WHITE"), "WHITE")
@@ -80,34 +86,20 @@ private[graft] object MimicRegistry {
     // codes → 999, 3-digit slice, FIRST-matching inclusive range —
     // V/E codes landing in 'injury' via the 999 bucket is the
     // reference's own (faithfully replicated) behavior
-    "mimic_diag_categories" -> ((s, d) => {
-      val dg = graft.sources.MimicSynth.diagnoses(s)
-      val code3 = coalesce(
-        when(col("ICD9_CODE").rlike("[A-Za-z]"), lit(999))
-          .otherwise(substring(col("ICD9_CODE"), 1, 3).cast("int")),
-        lit(999))
-      dg.withColumn("cat", Shared.icd9Category(code3))
+    "mimic_diag_categories" -> ((s, d) =>
+      graft.sources.MimicSynth.diagnoses(s).withColumn("cat", icd9Category)
         .groupBy("cat")
         .agg(count(lit(1)).as("n_codes"),
-          countDistinct(col("HADM_ID")).as("n_adm"))
-    }),
+          countDistinct(col("HADM_ID")).as("n_adm"))),
 
     // age at first (surviving) admission with the reference's >89
     // date-shift clamp (py:205-215: the pandas int64-ns overflow form),
     // age != 0 filter, per-age histogram
-    "mimic_age_hist" -> ((s, d) => {
-      val coh = graft.sources.MimicSynth.admissions(s)
-        .filter(col("DEATHTIME").isNull && col("ADMISSION_TYPE") =!= "NEWBORN")
-      val admMin = coh.groupBy("SUBJECT_ID").agg(min("ADMITTIME").as("admit_min"))
-      val aged = admMin
-        .join(graft.sources.MimicSynth.patients(s), Seq("SUBJECT_ID"))
-        .withColumn("age_raw",
-          floor(graft.ops.CohortOps.fractionalDays(col("admit_min"), col("DOB")) / 365.0))
-        .withColumn("age",
-          when(col("age_raw") > 89 || col("age_raw") < 0, 90L).otherwise(col("age_raw")))
+    "mimic_age_hist" -> ((s, d) =>
+      withAge(firstAdmission(graft.sources.MimicSynth.admissions(s).filter(survivor))
+        .join(graft.sources.MimicSynth.patients(s), Seq("SUBJECT_ID")))
         .filter(col("age") =!= 0)
-      aged.groupBy("age").agg(count(lit(1)).as("n"))
-    }),
+        .groupBy("age").agg(count(lit(1)).as("n"))),
 
     // the last reference plot input (py:66-70): the 30-day-binned
     // DAYS_NEXT_ADMIT histogram — `plt.hist(days, bins=range(0,365,30))`
@@ -117,11 +109,7 @@ private[graft] object MimicRegistry {
     // dropped, and the LAST bin [330,360] right-INCLUSIVE (the
     // least(...,11) clamp)
     "mimic_days_hist" -> ((s, d) =>
-      graft.ops.CohortOps.labelNextEvent(
-        graft.sources.MimicSynth.admissions(s),
-        entityCol = "SUBJECT_ID", timeCol = "ADMITTIME",
-        typeCol = "ADMISSION_TYPE", tieCol = "HADM_ID",
-        excludedType = "ELECTIVE", horizonDays = 30.0, anchorCol = "DISCHTIME")
+      graft.sources.MimicSynth.cohort(s)
         .filter(col("days_next").isNotNull &&
           col("days_next") >= 0 && col("days_next") <= 360)
         .withColumn("bin_days",
@@ -132,11 +120,7 @@ private[graft] object MimicRegistry {
     // readmission / Total Number" — count of non-null DAYS_NEXT_ADMIT vs
     // all admissions (NEWBORN/death rows included; the filters come later)
     "mimic_readmit_counts" -> ((s, d) =>
-      graft.ops.CohortOps.labelNextEvent(
-        graft.sources.MimicSynth.admissions(s),
-        entityCol = "SUBJECT_ID", timeCol = "ADMITTIME",
-        typeCol = "ADMISSION_TYPE", tieCol = "HADM_ID",
-        excludedType = "ELECTIVE", horizonDays = 30.0, anchorCol = "DISCHTIME")
+      graft.sources.MimicSynth.cohort(s)
         .agg(
           sum(when(col("days_next").isNotNull, 1L).otherwise(0L)).as("n_readmit"),
           count(lit(1)).as("n_total"))),
@@ -327,36 +311,17 @@ private[graft] object MimicRegistry {
     // 3,524-type candidate pool, so the cut is a real frequency cut.
     // The note TEXT is hash-generated identically on both engines, so
     // the vocabulary is exactly oracled end-to-end
-    "mimic_notes_vocab" -> ((s, d) => {
-      val coh = graft.sources.MimicSynth.admissions(s)
-        .filter(col("DEATHTIME").isNull && col("ADMISSION_TYPE") =!= "NEWBORN")
-        .join(graft.sources.MimicSynth.diagnoses(s).select("HADM_ID"),
-          Seq("HADM_ID"), "left_semi")
-        .select(col("HADM_ID"))
-      graft.sources.MimicSynth.notes(s)
-        .filter(col("CATEGORY") === "Discharge summary")
-        .select(col("HADM_ID"), explode(split(col("TEXT"), " ")).as("word"))
-        .join(coh, "HADM_ID")
-        .groupBy("word").agg(count(lit(1)).as("cnt"))
-        .orderBy(desc("cnt"), asc("word")).limit(3000)
-    }),
+    "mimic_notes_vocab" -> ((s, d) =>
+      topWords(graft.sources.MimicSynth.noteTokens(s).join(diagnosedSurvivors(s), "HADM_ID"))),
 
     // the reference's bag-of-words matrix golden (BASELINE.md: 45,076 ×
     // 3,000): matrix rows = the cohort (missing-note rows are all-zero),
     // columns = the top-3000 vocabulary, plus the nonzero-cell and
     // total-token mass that pin the matrix CONTENT, not just its shape
     "mimic_bow_profile" -> ((s, d) => {
-      val coh = graft.sources.MimicSynth.admissions(s)
-        .filter(col("DEATHTIME").isNull && col("ADMISSION_TYPE") =!= "NEWBORN")
-        .join(graft.sources.MimicSynth.diagnoses(s).select("HADM_ID"),
-          Seq("HADM_ID"), "left_semi")
-        .select(col("HADM_ID"))
-      val toks = graft.sources.MimicSynth.notes(s)
-        .filter(col("CATEGORY") === "Discharge summary")
-        .select(col("HADM_ID"), explode(split(col("TEXT"), " ")).as("word"))
-        .join(coh, "HADM_ID")
-      val vocab = toks.groupBy("word").agg(count(lit(1)).as("_c"))
-        .orderBy(desc("_c"), asc("word")).limit(3000).select("word")
+      val coh = diagnosedSurvivors(s)
+      val toks = graft.sources.MimicSynth.noteTokens(s).join(coh, "HADM_ID")
+      val vocab = topWords(toks).select("word")
       val inVocab = toks.join(vocab, "word")
       coh.agg(count(lit(1)).as("n_rows"))
         .crossJoin(inVocab.select("word").distinct()
@@ -431,30 +396,15 @@ private[graft] object MimicRegistry {
     // patients/age (inner) + age filter — the reference's modeling table
     // (cells 7-20), read out per label with membership-pinning sums
     "mimic_pipeline_relational" -> ((s, d) => {
-      val adm = graft.sources.MimicSynth.admissions(s)
-      val coh = graft.ops.CohortOps.labelNextEvent(
-        adm, entityCol = "SUBJECT_ID", timeCol = "ADMITTIME",
-        typeCol = "ADMISSION_TYPE", tieCol = "HADM_ID",
-        excludedType = "ELECTIVE", horizonDays = 30.0, anchorCol = "DISCHTIME")
-        .filter(col("DEATHTIME").isNull && col("ADMISSION_TYPE") =!= "NEWBORN")
-      val dg = graft.sources.MimicSynth.diagnoses(s)
-      val code3 = coalesce(
-        when(col("ICD9_CODE").rlike("[A-Za-z]"), lit(999))
-          .otherwise(substring(col("ICD9_CODE"), 1, 3).cast("int")),
-        lit(999))
-      val cats = dg.withColumn("cat", Shared.icd9Category(code3))
+      val coh = graft.sources.MimicSynth.cohort(s).filter(survivor)
+      val cats = graft.sources.MimicSynth.diagnoses(s).withColumn("cat", icd9Category)
         .groupBy("HADM_ID")
         .agg(sum(when(col("cat") === "circulatory", 1L).otherwise(0L)).as("n_circ"),
           sum(when(col("cat") === "injury", 1L).otherwise(0L)).as("n_inj"))
-      val admMin = coh.groupBy("SUBJECT_ID").agg(min("ADMITTIME").as("admit_min"))
-      coh
+      withAge(coh
         .join(cats, Seq("HADM_ID"))
-        .join(admMin, Seq("SUBJECT_ID"))
-        .join(graft.sources.MimicSynth.patients(s), Seq("SUBJECT_ID"))
-        .withColumn("age_raw",
-          floor(graft.ops.CohortOps.fractionalDays(col("admit_min"), col("DOB")) / 365.0))
-        .withColumn("age",
-          when(col("age_raw") > 89 || col("age_raw") < 0, 90L).otherwise(col("age_raw")))
+        .join(firstAdmission(coh), Seq("SUBJECT_ID"))
+        .join(graft.sources.MimicSynth.patients(s), Seq("SUBJECT_ID")))
         .filter(col("age") =!= 0)
         .groupBy(col("label"))
         .agg(count(lit(1)).as("n_rows"),
@@ -480,15 +430,8 @@ private[graft] object MimicRegistry {
     // from the generated tables — any sink/source corruption (quoting,
     // nulls, timestamp format) hash-mismatches.
     "mimic_csv_roundtrip" -> ((s, d) => {
-      val cleaned = graft.ops.CohortOps.labelNextEvent(
-        graft.sources.MimicSynth.admissions(s),
-        entityCol = "SUBJECT_ID", timeCol = "ADMITTIME",
-        typeCol = "ADMISSION_TYPE", tieCol = "HADM_ID",
-        excludedType = "ELECTIVE", horizonDays = 30.0, anchorCol = "DISCHTIME")
-        .filter(col("DEATHTIME").isNull && col("ADMISSION_TYPE") =!= "NEWBORN")
-        .join(graft.sources.MimicSynth.notes(s)
-          .filter(col("CATEGORY") === "Discharge summary")
-          .select(col("HADM_ID"), col("TEXT")), Seq("HADM_ID"), "left")
+      val cleaned = graft.sources.MimicSynth.cohort(s).filter(survivor)
+        .join(graft.sources.MimicSynth.dischargeSummariesAt(s, 1L), Seq("HADM_ID"), "left")
         .select(col("SUBJECT_ID"), col("HADM_ID"), col("ADMITTIME"),
           col("ADMISSION_TYPE"), col("ETHNICITY"),
           col("label").cast("int").as("OUTPUT_LABEL"), col("TEXT"))
@@ -542,14 +485,11 @@ private[graft] object MimicRegistry {
     // BROADCAST; both legs end in TakeOrdered(100) cuts and the fusion
     // works on ≤200 rows.
     "mimic_rrf_retrieval" -> ((s, d) => {
-      val docs = graft.sources.MimicSynth.notes(s)
-        .filter(col("CATEGORY") === "Discharge summary")
-        .join(graft.sources.MimicSynth.admissions(s)
-          .filter(col("DEATHTIME").isNull && col("ADMISSION_TYPE") =!= "NEWBORN")
+      val docs = graft.sources.MimicSynth.dischargeSummariesAt(s, 1L)
+        .join(graft.sources.MimicSynth.admissions(s).filter(survivor)
           .select("HADM_ID"), Seq("HADM_ID"), "left_semi")
         .join(graft.sources.MimicSynth.diagnoses(s).select("HADM_ID"),
           Seq("HADM_ID"), "left_semi")
-        .select(col("HADM_ID"), col("TEXT"))
         .cache()
       val lex = graft.text.Bm25.scores(docs, "HADM_ID", "TEXT",
           Seq("pneumonia", "chronic", "renal", "failure"))
@@ -559,8 +499,7 @@ private[graft] object MimicRegistry {
         .select(col("HADM_ID").as("id"), col("r"))
       val toks = docs.select(col("HADM_ID"),
         explode(split(col("TEXT"), " ")).as("word"))
-      val vocab = toks.groupBy("word").agg(count(lit(1)).as("_c"))
-        .orderBy(desc("_c"), asc("word")).limit(3000).select("word")
+      val vocab = topWords(toks).select("word")
       // r14: materialized once — the dense leg reads this frame THREE
       // times (query counts, doc norms, the dot itself) and a plain plan
       // re-runs the explode + vocab join + 1.4M-group aggregation per

@@ -492,35 +492,6 @@ private[graft] object Shared {
       |                AND l_discount > 0.05 AND l_quantity > 30)
       |GROUP BY o_orderpriority""".stripMargin
 
-  /** The reference's ICD-9 main-category ranges (py:128-141): FIRST
-    * matching range wins (np.where applied sequentially) and bounds are
-    * INCLUSIVE on both ends (pandas .between) — so 140 is 'infectious',
-    * 999 (the V/E/null bucket) is 'injury', both the reference's own
-    * behavior, faithfully replicated.
-    */
-  private[graft] val icd9Ranges: Seq[(Int, Int, String)] = Seq(
-    (1, 140, "infectious"), (140, 240, "neoplasms"), (240, 280, "endocrine"),
-    (280, 290, "blood"), (290, 320, "mental"), (320, 390, "nervous"),
-    (390, 460, "circulatory"), (460, 520, "respiratory"), (520, 580, "digestive"),
-    (580, 630, "genitourinary"), (630, 680, "pregnancy"), (680, 710, "skin"),
-    (710, 740, "muscular"), (740, 760, "congenital"), (760, 780, "prenatal"),
-    (780, 800, "misc"), (800, 1000, "injury"), (1000, 2000, "misc"))
-
-  private[graft] def icd9Category(code3: Column): Column =
-    icd9Ranges.foldRight(lit(null).cast("string")) { case ((lo, hi, cat), acc) =>
-      when(code3.between(lo, hi), cat).otherwise(acc)
-    }
-
-  private[graft] def icd9CategorySql(expr: String): String =
-    "CASE " + icd9Ranges.map { case (lo, hi, c) =>
-      s"WHEN $expr BETWEEN $lo AND $hi THEN '$c'"
-    }.mkString(" ") + " END"
-
-  /** The DuckDB code3 recode shared by the two diagnosis oracles. */
-  private[graft] val mimicCode3Sql: String =
-    "COALESCE(CASE WHEN regexp_matches(icd9_code, '[A-Za-z]') THEN 999 " +
-      "ELSE CAST(substr(icd9_code, 1, 3) AS INTEGER) END, 999)"
-
   /** Derived `partsupp` — the one TPC-H table the test schema lacks.
     * Each part gets exactly 4 suppliers by deterministic modular
     * assignment over the ACTUAL supplier count (so the same text is

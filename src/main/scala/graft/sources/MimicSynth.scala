@@ -455,6 +455,21 @@ object MimicSynth {
     summaries.unionByName(nursing)
   }
 
+  /** The Discharge-summary notes as (HADM_ID, TEXT) — the only note
+    * category the pipeline reads (the Nursing notes are filtered out).
+    */
+  def dischargeSummariesAt(spark: SparkSession, f: Long): DataFrame =
+    notesAt(spark, f)
+      .filter(col("CATEGORY") === "Discharge summary")
+      .select(col("HADM_ID"), col("TEXT"))
+
+  /** The Discharge-summary TOKEN STREAM: one (HADM_ID, word) row per
+    * single-space-split token. Mirrored by [[noteTokensCtes]].
+    */
+  def noteTokens(spark: SparkSession): DataFrame =
+    dischargeSummariesAt(spark, 1L)
+      .select(col("HADM_ID"), explode(split(col("TEXT"), " ")).as("word"))
+
   /** DuckDB mirror of the Discharge-summary TOKEN STREAM (one row per
     * (hadm_id, word) occurrence — the exploded form every vocab/BoW
     * readout starts from; materializing the joined text string would
@@ -499,19 +514,13 @@ object MimicSynth {
     * + death/newborn filters + diagnoses semi-join + patients join +
     * dropna + split) on a 10× MIMIC.
     */
-  def modelingRowsAt(spark: SparkSession, f: Long): DataFrame = {
-    val coh = graft.ops.CohortOps.labelNextEvent(
-      admissionsAt(spark, f), entityCol = "SUBJECT_ID", timeCol = "ADMITTIME",
-      typeCol = "ADMISSION_TYPE", tieCol = "HADM_ID",
-      excludedType = "ELECTIVE", horizonDays = 30.0, anchorCol = "DISCHTIME")
-      .filter(col("DEATHTIME").isNull && col("ADMISSION_TYPE") =!= "NEWBORN")
-    coh
+  def modelingRowsAt(spark: SparkSession, f: Long): DataFrame =
+    cohortAt(spark, f).filter(survivor)
       .join(diagnosesAt(spark, f).select("HADM_ID"), Seq("HADM_ID"), "left_semi")
       .join(patientsAt(spark, f).filter(col("DOB").isNotNull).select("SUBJECT_ID"),
         Seq("SUBJECT_ID"))
       .select(col("HADM_ID"), col("SUBJECT_ID"), col("label"),
         trainTestSplit(col("HADM_ID")).as("split"))
-  }
 
   /** DuckDB mirror of [[modelingRows]] → CTE `mmatrix` (includes the
     * `diagnoses_icd` CTE for the semi-join — don't also splice
@@ -530,6 +539,27 @@ object MimicSynth {
        |    AND EXISTS (SELECT 1 FROM diagnoses_icd d
        |                WHERE d.hadm_id = c.hadm_id)
        |)""".stripMargin
+
+  /** The reference's labelled cohort (py:39-86) over [[admissionsAt]]:
+    * lead / skip-ELECTIVE / backfill windows anchored on DISCHARGE, then
+    * the 30-day label — one row per admission, pre-filter, with
+    * `days_next` and `label` added. Mirrored by [[cohortCtes]].
+    */
+  def cohortAt(spark: SparkSession, f: Long): DataFrame =
+    graft.ops.CohortOps.labelNextEvent(
+      admissionsAt(spark, f), entityCol = "SUBJECT_ID", timeCol = "ADMITTIME",
+      typeCol = "ADMISSION_TYPE", tieCol = "HADM_ID",
+      excludedType = "ELECTIVE", horizonDays = 30.0, anchorCol = "DISCHTIME")
+
+  /** [[cohortAt]] at the published scale. */
+  def cohort(spark: SparkSession): DataFrame = cohortAt(spark, 1L)
+
+  /** The reference's death + newborn exclusion (py:77): keeps the
+    * admissions with no in-hospital death that are not NEWBORN — 45,321
+    * of 58,976. The oracle SQL spells it
+    * `deathtime IS NULL AND admission_type <> 'NEWBORN'`.
+    */
+  val survivor: Column = col("DEATHTIME").isNull && col("ADMISSION_TYPE") =!= "NEWBORN"
 
   /** The reference's cohort SQL over the generated admissions — lead +
     * ELECTIVE null-out + backfill + days from DISCHARGE + 30-day label —

@@ -51,6 +51,7 @@ object SpillProbe {
       val pb = new ProcessBuilder(cmd: _*)
       pb.redirectErrorStream(true)
       pb.redirectOutput(log)
+      releaseFreeHeap()
       val proc = pb.start()
       val done = proc.waitFor(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)
       if (!done) {
@@ -73,6 +74,30 @@ object SpillProbe {
         }
       }
     } finally java.nio.file.Files.deleteIfExists(out)
+  }
+
+  /** Shrinks this JVM's committed heap to about its live set before a
+    * child starts. The child's heap is real memory on the same machine,
+    * and a long-lived parent (the forked test JVM late in the suite) keeps
+    * its whole heap committed: on a 16 GB box a 7 GB parent plus the 16g
+    * tier's ~6-7 GB got the parent OOM-killed. A full GC alone does not
+    * help, because G1 only shrinks to live/(1 - MaxHeapFreeRatio) and the
+    * parent's ~2 GB live set keeps that above a 7 GB heap. So the free
+    * ratios are lowered for that one GC (both flags are manageable) and
+    * then restored; the heap grows back on demand.
+    */
+  private def releaseFreeHeap(): Unit = {
+    val hs = java.lang.management.ManagementFactory
+      .getPlatformMXBean(classOf[com.sun.management.HotSpotDiagnosticMXBean])
+    val minFree = hs.getVMOption("MinHeapFreeRatio").getValue
+    val maxFree = hs.getVMOption("MaxHeapFreeRatio").getValue
+    hs.setVMOption("MinHeapFreeRatio", "0")
+    hs.setVMOption("MaxHeapFreeRatio", "10")
+    try System.gc()
+    finally {
+      hs.setVMOption("MaxHeapFreeRatio", maxFree)
+      hs.setVMOption("MinHeapFreeRatio", minFree)
+    }
   }
 
   def main(args: Array[String]): Unit = {

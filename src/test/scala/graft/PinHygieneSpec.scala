@@ -50,9 +50,9 @@ class PinHygieneSpec extends SparkSpecBase {
       // (curation labeling, LSH base index) are state built once per
       // session, not a per-query leak — warm them so each query's own
       // pin budget stays ≤1
-      SparkEntry.curatedStagesCached(spark, sfDir)
-      SparkEntry.lshBaseIndexCached(spark, sfDir)
-      SparkEntry.joinSnapshotCached(spark, sfDir)
+      registry.Shared.curatedStagesCached(spark, sfDir)
+      registry.Shared.lshBaseIndexCached(spark, sfDir)
+      registry.Shared.joinSnapshotCached(spark, sfDir)
       val before = pinned
       SparkEntry.queries(q)(spark, sfDir).collect()
       val afterFirst = pinned

@@ -208,7 +208,7 @@ class PlansSpec extends SparkSpecBase {
     val docs = graft.core.Tables.table(spark, sfDir, "documents")
     val (df, release) = graft.ops.DomainMix.rebalanceReleasable(
       docs, "lang", "doc_id",
-      SparkEntry.permilleHash1M(col("doc_id"), ":mix"),
+      registry.Shared.permilleHash1M(col("doc_id"), ":mix"),
       Map("en" -> 0.4, "de" -> 0.15, "es" -> 0.15, "fr" -> 0.15, "zh" -> 0.15))
     df.collect()
     def windows(p: SparkPlan): Seq[org.apache.spark.sql.execution.window.WindowExec] = {

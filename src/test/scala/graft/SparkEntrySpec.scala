@@ -10,6 +10,11 @@ class SparkEntrySpec extends SparkSpecBase {
     assert(rows.map(_.getAs[Long]("count")).sum > 0)
   }
 
+  test("the shared session carries the engine's top-k rule and strategy") {
+    assert(spark.experimental.extraOptimizations.contains(graft.plans.RowNumberTopKRule))
+    assert(spark.experimental.extraStrategies.contains(graft.plans.TopKPerKeyStrategy))
+  }
+
   test("every query has either an oracle or is explicitly rows-only") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle entries without a query: $missing")

@@ -55,6 +55,19 @@ class MimicSynthSpec extends SparkSpecBase {
     assert(dg.filter(col("ICD9_CODE").startsWith("E")).count() > 0)
   }
 
+  test("ICD-9 recode: 3-digit slice, FIRST inclusive range wins, letter " +
+    "and null codes land in 'injury' through 999") {
+    val cases = Seq[(String, String)](
+      "0010" -> "infectious", "1400" -> "infectious", // 140 is in two ranges
+      "2400" -> "neoplasms", "7800" -> "prenatal", "7990" -> "misc",
+      "V1010" -> "injury", "E8000" -> "injury", (null: String) -> "injury")
+    val got = cases.map(_._1).toDF("ICD9_CODE")
+      .select(col("ICD9_CODE"), graft.pipeline.MimicPipeline.icd9Category)
+      .collect().map(r => Option(r.getString(0)) -> r.getString(1)).toMap
+    assert(got == cases.map { case (c, k) => Option(c) -> k }.toMap)
+    assert(graft.pipeline.MimicPipeline.diagCats.size == 17)
+  }
+
   test("golden: ethnicity recode lands the reference's top-5 counts EXACTLY (py:102-108)") {
     val filtered = adm
       .filter(col("DEATHTIME").isNull && col("ADMISSION_TYPE") =!= "NEWBORN")
