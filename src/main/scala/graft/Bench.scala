@@ -1,19 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same session config as Verify: top-k window plans use TopKPerKey
-    graft.plans.RowNumberTopK.install(spark)
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
     // 1-minute load average (from /proc/loadavg) — the contention guard:
     // the r8 driver re-run read 1.78x where the same commit's clean run
     // read 1.04x, purely from machine contention. Recording load per rep

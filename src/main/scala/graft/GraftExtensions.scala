@@ -1,27 +1,13 @@
 package graft
 
 import graft.expr.{CompressVector, DotProduct, Lemmatize, LemmatizeAll, LemmatizeExpression, VectorDot}
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** SparkSessionExtensions injector: registers the engine's native
-  * expressions so they are callable from SQL (`SELECT lemmatize(word)`)
-  * as well as the Column API.
-  *
-  * Enable with:
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)          // programmatic
-  * or  .config("spark.sql.extensions", "graft.GraftExtensions")
+/** The engine's native expressions as SQL functions
+  * (`SELECT lemmatize(word)`), beside their Column API; `graft.Session`
+  * registers them in every session it builds.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import GraftExtensions._
-  override def apply(ext: SparkSessionExtensions): Unit =
-    builders.foreach { case (name, info, builder) =>
-      ext.injectFunction((FunctionIdentifier(name), info, builder))
-    }
-}
-
 object GraftExtensions {
   val dotProductInfo = new ExpressionInfo(classOf[DotProduct].getName, "dot_product")
   val compressVectorInfo =
@@ -51,9 +37,7 @@ object GraftExtensions {
     ("vector_dot", vectorDotInfo,
       arity("vector_dot", 2)(c => VectorDot(c(0), c(1)))))
 
-  /** Register the same functions into an already-running session
-    * (extensions normally apply at session build time).
-    */
+  /** Register the functions into a running session's function registry. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, info, builder) =>

@@ -987,16 +987,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outPath = if (args.length > 1) args(1) else "PLANS.md"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.RowNumberTopK.install(spark)
+    val spark = Session.local(Session.cpus)
 
     val sb = new StringBuilder
     sb ++= "# PLANS — physical-plan audit of the headline queries\n\n"

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-growth measurement harness: runs the banded/inverted-list
@@ -87,14 +87,8 @@ object Scale {
 
   def main(args: Array[String]): Unit = {
     val outPath = if (args.nonEmpty) args(0) else "SCALE.md"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
 
     def scalesEnv(name: String, default: Seq[Long]): Seq[Long] =
       sys.env.get(name).map(_.split(",").map(_.trim.toLong).toSeq).getOrElse(default)

@@ -25,11 +25,11 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame   = table(s, d, "lineitem")
   /** events.ts arrives in whatever physical type the generator used:
     * TIMESTAMP(NANOS) (a Long under
-    * `spark.sql.legacy.parquet.nanosAsLong=true`, set in Verify/Bench/test
-    * sessions) or TIMESTAMP(MICROS, isAdjustedToUTC=false) (read as
-    * TIMESTAMP_NTZ). Normalize both to a microsecond TimestampType column
-    * here so every downstream operator — in particular `withWatermark`,
-    * which rejects NTZ — sees a uniform schema. Sessions pin UTC, so the
+    * `spark.sql.legacy.parquet.nanosAsLong=true`, set by `graft.Session`)
+    * or TIMESTAMP(MICROS, isAdjustedToUTC=false) (read as TIMESTAMP_NTZ).
+    * Normalize both to a microsecond TimestampType column here so every
+    * downstream operator — in particular `withWatermark`, which rejects
+    * NTZ — sees a uniform schema. Sessions pin UTC, so the
     * NTZ→LTZ cast is a pure re-tag, not a wall-clock shift.
     */
   def events(s: SparkSession, d: String): DataFrame = {

@@ -63,30 +63,20 @@ object Features {
     * table IS a materialized intermediate in any production pipeline; the
     * memo makes that explicit. Deterministic, so semantics are unchanged.
     */
-  def assembled(s: SparkSession, dir: String): DataFrame = memo.synchronized {
-    val perSession = {
-      val cur = memo.get(s)
-      if (cur != null) cur
-      else { val m = new java.util.HashMap[String, DataFrame](); memo.put(s, m); m }
-    }
-    perSession.computeIfAbsent(dir, _ => {
-      val raw = orderFeatureTable(s, dir)
-      val asm = new VectorAssembler()
-        .setInputCols(featureCols.toArray).setOutputCol("rawFeatures")
-      val scaler = new StandardScaler()
-        .setInputCol("rawFeatures").setOutputCol("features")
-        .setWithMean(false).setWithStd(true)
-      val assembledDf = asm.transform(raw)
-      scaler.fit(assembledDf).transform(assembledDf)
-        .select("id", "features", "label")
-        .cache()
-    })
+  def assembled(s: SparkSession, dir: String): DataFrame = memo(s, dir) {
+    val raw = orderFeatureTable(s, dir)
+    val asm = new VectorAssembler()
+      .setInputCols(featureCols.toArray).setOutputCol("rawFeatures")
+    val scaler = new StandardScaler()
+      .setInputCol("rawFeatures").setOutputCol("features")
+      .setWithMean(false).setWithStd(true)
+    val assembledDf = asm.transform(raw)
+    scaler.fit(assembledDf).transform(assembledDf)
+      .select("id", "features", "label")
+      .cache()
   }
 
-  // weak session keys: entries for stopped-and-GC'd sessions drop away on
-  // their own, and keying by the session OBJECT (not a hash) can't collide
-  private val memo =
-    new java.util.WeakHashMap[SparkSession, java.util.HashMap[String, DataFrame]]()
+  private val memo = new graft.Session.Memo[String, DataFrame]
 
   /** Deterministic 80/20 split by id hash — reproducible across runs and
     * engines, unlike RNG-stream-dependent randomSplit (used where the

@@ -89,27 +89,17 @@ object MimicPipeline {
     tokens.groupBy("word").agg(count(lit(1)).as("cnt"))
       .orderBy(desc("cnt"), asc("word")).limit(3000)
 
-  private val memo =
-    new java.util.WeakHashMap[SparkSession, (DataFrame, Array[String])]()
+  private val memo = new graft.Session.Memo[Unit, (DataFrame, Array[String])]
+  private def memoized(s: SparkSession): (DataFrame, Array[String]) = memo(s, ())(build(s, 1L))
 
   /** The matrix's top-3000 vocabulary IN SLOT ORDER (slot i of the
     * assembled features vector is word i; slots 3000..3016 are
     * [[diagCats]], 3017 age, 3018 gender_m).
     */
-  def vocabulary(s: SparkSession): Array[String] = {
-    assembled(s); memo.synchronized(memo.get(s)._2)
-  }
+  def vocabulary(s: SparkSession): Array[String] = memoized(s)._2
 
   /** (HADM_ID, label, split, features) with features of width 3,019. */
-  def assembled(s: SparkSession): DataFrame = memo.synchronized {
-    val cur = memo.get(s)
-    if (cur != null) cur._1
-    else {
-      val (out, vocab) = build(s, 1L)
-      memo.put(s, (out, vocab))
-      out
-    }
-  }
+  def assembled(s: SparkSession): DataFrame = memoized(s)._1
 
   /** The matrix build at `f`× MIMIC scale — NOT memoized (the Scale
     * harness times one build and unpersists the result; production

@@ -625,7 +625,7 @@ private[graft] object RelationalRegistry {
     }),
 
     // the SQL row_number()=1 pattern — RowNumberTopKRule rewrites this into
-    // the bounded-heap TopKPerKey operator when installed (Verify/Bench do)
+    // the bounded-heap TopKPerKey operator (graft.Session installs the rule)
     "sql_window_top" -> ((s, d) => {
       Tables.orders(s, d).createOrReplaceTempView("orders")
       s.sql(Shared.windowTopSql)

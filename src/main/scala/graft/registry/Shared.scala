@@ -56,27 +56,17 @@ private[graft] object Shared {
     *
     * Timing semantics (BENCH_NOTES.md): Bench warms this memo, so the
     * d_dup_clusters / d_cluster_keep rows measure reads of the persisted
-    * labeling; the build cost lands in warmup_sec. Weak session keys
-    * (same as Features.memo): entries for stopped-and-GC'd sessions drop
-    * away instead of pinning the session object for the process lifetime.
+    * labeling; the build cost lands in warmup_sec.
     */
-  private[graft] val clusterMemo =
-    new java.util.WeakHashMap[SparkSession, java.util.HashMap[String, DataFrame]]()
+  private val clusterMemo = new Session.Memo[String, DataFrame]
   private[graft] def dupClustersCached(s: SparkSession, d: String): DataFrame =
-    clusterMemo.synchronized {
-      val perSession = {
-        val cur = clusterMemo.get(s)
-        if (cur != null) cur
-        else { val m = new java.util.HashMap[String, DataFrame](); clusterMemo.put(s, m); m }
-      }
-      perSession.computeIfAbsent(d, _ => {
-        val docs = t(s, d, "documents")
-        val c = graft.dedup.Dedup
-          .dupClusters(graft.dedup.Dedup.minhashLshPairs(docs, "doc_id", "text"), docs, "doc_id")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        c.count()
-        c
-      })
+    clusterMemo(s, d) {
+      val docs = t(s, d, "documents")
+      val c = graft.dedup.Dedup
+        .dupClusters(graft.dedup.Dedup.minhashLshPairs(docs, "doc_id", "text"), docs, "doc_id")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      c.count()
+      c
     }
 
   /** Session-scoped memo of the CURATION LABELING (doc_id → funnel
@@ -91,27 +81,19 @@ private[graft] object Shared {
     * BUILD (it constructs its own fresh funnel); the composition rows
     * measure reads of the persisted 2-column labeling.
     */
-  private[graft] val curationMemo =
-    new java.util.WeakHashMap[SparkSession, java.util.HashMap[String, DataFrame]]()
+  private val curationMemo = new Session.Memo[String, DataFrame]
   private[graft] def curatedStagesCached(s: SparkSession, d: String): DataFrame =
-    curationMemo.synchronized {
-      val perSession = {
-        val cur = curationMemo.get(s)
-        if (cur != null) cur
-        else { val m = new java.util.HashMap[String, DataFrame](); curationMemo.put(s, m); m }
-      }
-      perSession.computeIfAbsent(d, _ => {
-        val docs = t(s, d, "documents")
-        val stages = graft.text.Curation.funnel(
-          docs.filter(col("doc_id") % 100 =!= 0),
-          docs.filter(col("doc_id") % 100 === 0),
-          "doc_id", "text",
-          minTokens = 15, maxTokens = 100000,
-          minMeanLen = 3.2, maxMeanLen = 4.65, minTtr = 0.32)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        stages.count()
-        stages
-      })
+    curationMemo(s, d) {
+      val docs = t(s, d, "documents")
+      val stages = graft.text.Curation.funnel(
+        docs.filter(col("doc_id") % 100 =!= 0),
+        docs.filter(col("doc_id") % 100 === 0),
+        "doc_id", "text",
+        minTokens = 15, maxTokens = 100000,
+        minMeanLen = 3.2, maxMeanLen = 4.65, minTtr = 0.32)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      stages.count()
+      stages
     }
 
   /** Session-scoped memo of the LSH BAND INDEX over the base (non-delta)
@@ -123,22 +105,14 @@ private[graft] object Shared {
     * `inc_lsh_maintain` measures the true per-batch cost (sign the
     * delta + probe the persisted index).
     */
-  private[graft] val lshIndexMemo =
-    new java.util.WeakHashMap[SparkSession, java.util.HashMap[String, DataFrame]]()
+  private val lshIndexMemo = new Session.Memo[String, DataFrame]
   private[graft] def lshBaseIndexCached(s: SparkSession, d: String): DataFrame =
-    lshIndexMemo.synchronized {
-      val perSession = {
-        val cur = lshIndexMemo.get(s)
-        if (cur != null) cur
-        else { val m = new java.util.HashMap[String, DataFrame](); lshIndexMemo.put(s, m); m }
-      }
-      perSession.computeIfAbsent(d, _ => {
-        val idx = graft.dedup.Dedup.minhashBandsPerRow(
-          t(s, d, "documents").filter(col("doc_id") % 10 =!= 0), "doc_id", "text")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        idx.count()
-        idx
-      })
+    lshIndexMemo(s, d) {
+      val idx = graft.dedup.Dedup.minhashBandsPerRow(
+        t(s, d, "documents").filter(col("doc_id") % 10 =!= 0), "doc_id", "text")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      idx.count()
+      idx
     }
 
   /** Session-scoped memo of the `inc_join_maintain` base-join snapshot
@@ -151,23 +125,15 @@ private[graft] object Shared {
     * treatment (an index rebuild is not maintenance). Build cost lands
     * in Bench warmup, visibly.
     */
-  private[graft] val joinSnapMemo =
-    new java.util.WeakHashMap[SparkSession, java.util.HashMap[String, DataFrame]]()
+  private val joinSnapMemo = new Session.Memo[String, DataFrame]
   private[graft] def joinSnapshotCached(s: SparkSession, d: String): DataFrame =
-    joinSnapMemo.synchronized {
-      val perSession = {
-        val cur = joinSnapMemo.get(s)
-        if (cur != null) cur
-        else { val m = new java.util.HashMap[String, DataFrame](); joinSnapMemo.put(s, m); m }
-      }
-      perSession.computeIfAbsent(d, _ => {
-        val snap = graft.ops.JoinMaintenance.snapshot(
-          t(s, d, "orders"), t(s, d, "customer"),
-          "o_custkey", "c_custkey", "c_nationkey", "o_totalprice")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        snap.count()
-        snap
-      })
+    joinSnapMemo(s, d) {
+      val snap = graft.ops.JoinMaintenance.snapshot(
+        t(s, d, "orders"), t(s, d, "customer"),
+        "o_custkey", "c_custkey", "c_nationkey", "o_totalprice")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      snap.count()
+      snap
     }
 
   /** Session-scoped memo of the pretrain packing layout (curated keep-set
@@ -180,35 +146,27 @@ private[graft] object Shared {
     * read it. The internal range-partition pin is released after the
     * layout materializes.
     */
-  private[graft] val pretrainMemo =
-    new java.util.WeakHashMap[SparkSession, java.util.HashMap[String, DataFrame]]()
+  private val pretrainMemo = new Session.Memo[String, DataFrame]
   private[graft] def pretrainPackedCached(s: SparkSession, d: String): DataFrame =
-    pretrainMemo.synchronized {
-      val perSession = {
-        val cur = pretrainMemo.get(s)
-        if (cur != null) cur
-        else { val m = new java.util.HashMap[String, DataFrame](); pretrainMemo.put(s, m); m }
-      }
-      perSession.computeIfAbsent(d, _ => {
-        val docs = t(s, d, "documents")
-        val corpus = docs.filter(col("doc_id") % 100 =!= 0)
-        // read the session-shared labeling (curatedStagesCached) instead
-        // of rebuilding the funnel — one build serves every composition
-        val kept = curatedStagesCached(s, d)
-          .filter(col("stage") === "kept").select("doc_id")
-        val base = corpus.join(kept, Seq("doc_id"))
-          .select(col("doc_id"),
-            coalesce(TextOps.tokenCount(col("text")).cast("bigint"), lit(0L))
-              .as("n_tokens"))
-        val packed = graft.ops.SequencePacking.packWindows(
-          base, col("n_tokens"), 512L, col("doc_id"))
-        val out = packed.df
-          .select("doc_id", "n_tokens", "start_off", "first_win", "last_win")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        out.count()
-        packed.release()
-        out
-      })
+    pretrainMemo(s, d) {
+      val docs = t(s, d, "documents")
+      val corpus = docs.filter(col("doc_id") % 100 =!= 0)
+      // read the session-shared labeling (curatedStagesCached) instead
+      // of rebuilding the funnel — one build serves every composition
+      val kept = curatedStagesCached(s, d)
+        .filter(col("stage") === "kept").select("doc_id")
+      val base = corpus.join(kept, Seq("doc_id"))
+        .select(col("doc_id"),
+          coalesce(TextOps.tokenCount(col("text")).cast("bigint"), lit(0L))
+            .as("n_tokens"))
+      val packed = graft.ops.SequencePacking.packWindows(
+        base, col("n_tokens"), 512L, col("doc_id"))
+      val out = packed.df
+        .select("doc_id", "n_tokens", "start_off", "first_win", "last_win")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      out.count()
+      packed.release()
+      out
     }
 
   /** Exact money sum: decimal-cast accumulate (order-independent), emit double. */

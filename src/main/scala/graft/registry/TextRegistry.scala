@@ -52,8 +52,8 @@ private[graft] object TextRegistry {
 
     // keyword extraction: top-3 terms per document by smooth-idf TF-IDF
     // with a deterministic (score desc, term asc) tiebreak — the per-doc
-    // top-k window rides the RowNumberTopKRule → TopKPerKey rewrite in
-    // Verify/Bench sessions (bounded heap, no full per-partition sort)
+    // top-k window rides the RowNumberTopKRule → TopKPerKey rewrite that
+    // graft.Session installs (bounded heap, no full per-partition sort)
     "t_keywords" -> ((s, d) => {
       val docs = t(s, d, "documents")
       val nDocs = docs.count()

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `explain("formatted")` for a named list of registry queries into
@@ -11,8 +10,8 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   *   sbt "runMain graft.tools.DumpPlans /root/testdata/sf0.1 plans/r14 before q1,q2"
   *
-  * Session config matches Bench/Verify exactly (same master, shuffle
-  * partitions, TopKPerKey rule) so the dumped plan is the benched plan.
+  * The session comes from `graft.Session`, as Bench's and Verify's do, so
+  * the dumped plan is the benched plan.
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
@@ -20,16 +19,7 @@ object DumpPlans {
     val outDir = args(1)
     val suffix = args(2) // "before" | "after"
     val names = args(3).split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.RowNumberTopK.install(spark)
+    val spark = graft.Session.local(graft.Session.cpus)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val planRaw = graft.SparkEntry.queries(name)(spark, sfDir)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off evidence run (r14, closing the r13 verdict's #6): the FULL
@@ -22,15 +21,7 @@ import org.apache.spark.sql.functions._
   */
 object ResamplerTable {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus)
     val full = graft.pipeline.MimicPipeline.assembled(spark)
     val train = full.filter(col("split") === "train").select("id", "features", "label")
     val test = full.filter(col("split") === "test").select("id", "features", "label")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off evidence run (r13, closing the r12 verdict's #7): the full
   * 9-point RandomForest n_estimators sweep — the reference sweeps
   * 100..900 step 100 (reference `Hap880_Final_Project.py:600-618`) while
@@ -16,15 +14,7 @@ import org.apache.spark.sql.SparkSession
 object RfSweep9 {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus)
     val (train, test) = graft.ml.Features.splitByHash(
       graft.ml.Features.assembled(spark, sfDir), "id")
     train.cache().count(); test.cache().count()

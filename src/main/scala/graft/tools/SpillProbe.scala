@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Restricted-heap child session for the memory/spill banding tier
   * (r14, verdict #3). `spark.memory.fraction` is a static conf and the
   * heap of a running JVM cannot shrink, so memory tiers are real child
@@ -106,13 +104,8 @@ object SpillProbe {
     val outPath = args(2)
     val cpus = if (args.length > 3) args(3).toInt else 16
     val parts = if (args.length > 4) args(4).toInt else 32
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", parts)
 
     @volatile var spillMem = 0L
     @volatile var spillDisk = 0L

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage profile of a named registry query — the optimization round's
   * "where does the time actually go" readout (guide §1.1/§7.1; the UI is
@@ -19,16 +18,7 @@ object StageProbe {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.RowNumberTopK.install(spark)
+    val spark = graft.Session.local(graft.Session.cpus)
     case class St(wallMs: Long, taskMs: Long, cpuMs: Long, nTasks: Int,
                   shufReadMB: Double, shufWriteMB: Double, spillMB: Double,
                   inputMB: Double, rows: Long, site: String)

@@ -15,6 +15,15 @@ class SparkEntrySpec extends SparkSpecBase {
     assert(spark.experimental.extraStrategies.contains(graft.plans.TopKPerKeyStrategy))
   }
 
+  test("the shared session resolves the engine's five SQL functions") {
+    val reg = spark.sessionState.functionRegistry
+    Seq("lemmatize", "lemmatize_all", "dot_product", "compress_vector", "vector_dot")
+      .foreach { name =>
+        assert(reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)),
+          s"$name is not registered")
+      }
+  }
+
   test("every query has either an oracle or is explicitly rows-only") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle entries without a query: $missing")

@@ -10,19 +10,6 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpecBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // the engine's rule set, as Verify and Bench install it, so every
-    // suite plans the way the mains do whatever order the suites run in
-    graft.plans.RowNumberTopK.install(s)
-    s
-  }
+  // the mains' session factory, so every suite plans the way they do
+  lazy val session: SparkSession = Session.local(4)
 }

@@ -29,7 +29,6 @@ class CompressVectorExpressionSpec extends SparkSpecBase {
     val df = Seq(Tuple1(Option(wide)), Tuple1(Option.empty[Vector])).toDF("v")
     val out = df.select(compress_vector(col("v")).as("c")).collect()
     assert(out.count(_.isNullAt(0)) == 1)
-    graft.GraftExtensions.register(spark)
     df.createOrReplaceTempView("cv_probe")
     val viaSql = spark.sql("SELECT compress_vector(v) AS c FROM cv_probe")
       .collect().flatMap(r => Option(r.getAs[Vector]("c")))

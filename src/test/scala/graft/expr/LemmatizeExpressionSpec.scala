@@ -1,6 +1,6 @@
 package graft.expr
 
-import graft.{GraftExtensions, SparkSpecBase}
+import graft.SparkSpecBase
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
@@ -31,7 +31,6 @@ class LemmatizeExpressionSpec extends SparkSpecBase {
   }
 
   test("SQL registration: SELECT lemmatize(...) works after register()") {
-    GraftExtensions.register(spark)
     val r = spark.sql("SELECT lemmatize('boxes') AS l, lemmatize_all(array('wives','ran')) AS la")
       .collect()(0)
     assert(r.getString(0) == "box")
@@ -39,7 +38,6 @@ class LemmatizeExpressionSpec extends SparkSpecBase {
   }
 
   test("SQL registration: SELECT dot_product(...) works after register()") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       "SELECT dot_product(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
         "array(CAST(3.0 AS FLOAT), CAST(0.5 AS FLOAT))) AS d").collect()(0)
@@ -47,7 +45,6 @@ class LemmatizeExpressionSpec extends SparkSpecBase {
   }
 
   test("wrong-arity SQL call fails analysis with a clear message, not an index crash") {
-    GraftExtensions.register(spark)
     val e = intercept[Exception](spark.sql("SELECT dot_product(array(1.0))").collect())
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => x.getMessage +: messages(x.getCause))

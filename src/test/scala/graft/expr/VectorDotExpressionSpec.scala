@@ -42,7 +42,6 @@ class VectorDotExpressionSpec extends SparkSpecBase {
     ).toDF("a", "b")
     val out = df.select(vector_dot(col("a"), col("b")).as("d")).collect()
     assert(!out(0).isNullAt(0) && out(1).isNullAt(0) && out(2).isNullAt(0))
-    graft.GraftExtensions.register(spark)
     df.createOrReplaceTempView("vd_probe")
     assert(spark.sql("SELECT vector_dot(a, b) AS d FROM vd_probe")
       .collect().count(!_.isNullAt(0)) == 1)

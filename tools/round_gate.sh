@@ -106,7 +106,7 @@ fi
 
 if [ "$SCALE" = 1 ]; then
   step "Scale harness -> SCALE.md"
-  if sbt -batch "runMain graft.Scale /root/repo/SCALE.md" \
+  if SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.Scale SCALE.md" \
        > /tmp/round_gate_scale.log 2>&1; then
     record "scale" PASS
   else
