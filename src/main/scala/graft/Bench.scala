@@ -88,14 +88,15 @@ object Bench {
     warm("mllib_jit", needsFeatures || needsMimic) {
       import org.apache.spark.sql.functions.{col, pmod, lit}
       val tiny = graft.ml.Features.assembled(spark, sfDir)
-        .filter(pmod(col("id"), lit(50L)) === 0L).cache()
-      tiny.count()
-      graft.ml.TrainHarness.rfSweep(tiny, tiny, "features", "label", Seq(2)).count()
-      graft.ml.TrainHarness.logisticL1Scores(tiny, tiny, "features", "label").count()
-      graft.ml.Resamplers.smote(tiny, "id", "label", "features", k = 2).count()
-      graft.ml.Resamplers.nearMiss(tiny, "id", "label", "features",
-        minoritySampleTarget = 100L).count()
-      tiny.unpersist()
+        .filter(pmod(col("id"), lit(50L)) === 0L)
+      Materialize.scoped(tiny) {
+        tiny.count()
+        graft.ml.TrainHarness.rfSweep(tiny, tiny, "features", "label", Seq(2)).count()
+        graft.ml.TrainHarness.logisticL1Scores(tiny, tiny, "features", "label").count()
+        graft.ml.Resamplers.smote(tiny, "id", "label", "features", k = 2).count()
+        graft.ml.Resamplers.nearMiss(tiny, "id", "label", "features",
+          minoritySampleTarget = 100L).count()
+      }
     }
     val warmupSec = (System.nanoTime() - w0) / 1e9
     // streaming fixed-overhead probe: time a near-empty micro-batch

@@ -100,22 +100,6 @@ object Scale {
     // compute is comparable to it)
     val bruteScales = scalesEnv("SPARK_GRAFT_SCALE_BRUTE", Seq(8000L, 32000L))
 
-    def cachedDocs(n: Long): DataFrame = {
-      val d = graft.sources.ScaleSynth.documents(spark, n)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      d.count(); d
-    }
-    def cachedEmb(n: Long): DataFrame = {
-      val e = graft.sources.ScaleSynth.embeddings(spark, n)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      e.count(); e
-    }
-    def cachedKeys(n: Long): DataFrame = {
-      val k = graft.sources.ScaleSynth.keys(spark, n)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      k.count(); k
-    }
-
     // An operator under measurement: `run` is timed (twice, min taken —
     // damps JIT/GC noise); `once` carries deterministic side measurements
     // (candidate counts) that would otherwise re-run full-corpus jobs per
@@ -131,13 +115,16 @@ object Scale {
       ops.foreach(op => if (!results.contains(op.name)) results(op.name) = Seq())
       scales.foreach { n =>
         val in = mk(n)
-        try ops.foreach { op =>
-          val cand = op.once(in)
-          val (r1, s1) = op.run(in)
-          val (r2, s2) = op.run(in)
-          val p = if (s1 <= s2) Point(n, s1, r1, cand) else Point(n, s2, r2, cand)
-          results(op.name) = results(op.name) :+ p
-        } finally in.unpersist()
+        Materialize.scoped(in) {
+          in.count()
+          ops.foreach { op =>
+            val cand = op.once(in)
+            val (r1, s1) = op.run(in)
+            val (r2, s2) = op.run(in)
+            val p = if (s1 <= s2) Point(n, s1, r1, cand) else Point(n, s2, r2, cand)
+            results(op.name) = results(op.name) :+ p
+          }
+        }
       }
     }
 
@@ -179,7 +166,7 @@ object Scale {
             "doc_id", "text",
             minTokens = 15, maxTokens = 100000,
             minMeanLen = 2.0, maxMeanLen = 8.0, minTtr = 0.2).count())))
-    measureAll(docScales, cachedDocs, docOps, results)
+    measureAll(docScales, graft.sources.ScaleSynth.documents(spark, _), docOps, results)
 
     // the bucket space is SIZED TO THE CORPUS (the FAISS-nlist parameter
     // discipline): target ~32 vectors per band-bucket. This is the
@@ -200,16 +187,16 @@ object Scale {
           graft.sim.Quantized.ivfPqTopK(emb, "vec_id", "embedding",
             dim = 64, m = 8, nCodes = 16, nPivots = 16, nprobe = 2,
             nQueries = 10, rerank = 20, k = 5).count())))
-    measureAll(embScales, cachedEmb, embOps, results)
+    measureAll(embScales, graft.sources.ScaleSynth.embeddings(spark, _), embOps, results)
 
-    measureAll(docScales, cachedKeys, Seq(
+    measureAll(docScales, graft.sources.ScaleSynth.keys(spark, _), Seq(
       Op("d_editdist_pairs (PassJoin segments)",
         run = keys => timeIt(
           graft.dedup.Dedup.editDistancePairs(keys, "key", maxDist = 2).count()))),
       results)
 
     // ---- the quadratic counter-baseline --------------------------------
-    measureAll(bruteScales, cachedEmb, Seq(
+    measureAll(bruteScales, graft.sources.ScaleSynth.embeddings(spark, _), Seq(
       Op("sim_cosine_pairs (exact all-pairs — the O(n²) oracle tier)",
         run = emb => timeIt(
           graft.sim.Similarity.cosinePairs(emb, "vec_id", "embedding",
@@ -223,11 +210,6 @@ object Scale {
     // edge-keyed shuffle rounds — expected exponent ≈ 1.
     val edgeScales = scalesEnv("SPARK_GRAFT_SCALE_EDGES",
       Seq(20000L, 200000L, 2000000L))
-    def cachedEdges(n: Long): DataFrame = {
-      val e = graft.sources.ScaleSynth.edges(spark, n)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      e.count(); e
-    }
     val graphOps = Seq(
       Op("g_pagerank3 (3 damped Pregel-unrolled iterations)",
         run = e => {
@@ -254,7 +236,7 @@ object Scale {
               greatest(col("src"), col("dst")).as("doc_b")),
             nodes, "node_id").count())
         }))
-    measureAll(edgeScales, cachedEdges, graphOps, results)
+    measureAll(edgeScales, graft.sources.ScaleSynth.edges(spark, _), graphOps, results)
 
     // ---- tokenizer TRAINING + multimodal blocking (r12, verdict #6) ----
     // BPE training: fixed 20 merges in 10-merge batches → a CONSTANT
@@ -263,7 +245,7 @@ object Scale {
     // pHash blocking: the SimHash pigeonhole machinery over binary
     // payloads — candidates counted exactly as Σ C(bucket,2) over the
     // 4×15-bit chunk buckets, so a blocking collapse is visible.
-    measureAll(docScales, cachedDocs, Seq(
+    measureAll(docScales, graft.sources.ScaleSynth.documents(spark, _), Seq(
       Op("t_bpe_merges (BPE training, 20 merges in 2 batched rounds)",
         run = docs => timeIt(
           graft.text.BpeTrain.learnMergesBatched(
@@ -274,12 +256,7 @@ object Scale {
     // through the corpus-sized multi-index entry point: block-key width
     // grows with n (autoChunks), the same discipline as RHP-LSH's
     // autoBitsPerBand, against the fixed-width Θ(n²/2^15) collision floor.
-    def cachedPayloads(n: Long): DataFrame = {
-      val d = graft.sources.ScaleSynth.payloadStrings(spark, n)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      d.count(); d
-    }
-    measureAll(docScales, cachedPayloads, Seq(
+    measureAll(docScales, graft.sources.ScaleSynth.payloadStrings(spark, _), Seq(
       Op("mm_phash_pairs (corpus-sized multi-index pigeonhole)",
         run = docs => timeIt(
           graft.multimodal.Multimodal.phashPairsAuto(
@@ -356,49 +333,50 @@ object Scale {
       skewOps.foreach(op => skewResults(op.name) = Seq())
       zipfScales.foreach { n =>
         val z = graft.sources.ScaleSynth.zipfKeyed(spark, n)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        z.count()
-        // DETERMINISTIC reducer-load ratio (max/median rows per reduce
-        // partition, HashPartitioning arithmetic — the same computation
-        // ScaleSpec pins): local[32] task TIMES under-display a hot key
-        // (per-task overheads flatten a 4.5× row-load imbalance into
-        // ~1.5× wall), but the row-load ratio is exactly what 1000
-        // reducers would feel. Plain key vs the content salt the
-        // operators apply.
-        def loadRatio(cols: Seq[org.apache.spark.sql.Column], p: Int): Double = {
-          val per = z.groupBy(pmod(hash(cols: _*), lit(p)).as("pid"))
-            .agg(count(lit(1)).as("c"))
-            .select("c").collect().map(_.getLong(0)).sorted
-          // median over the NON-EMPTY partitions only (groupBy emits no
-          // row for an empty pid). At p approaching the distinct-key
-          // count that would understate skew (missing 0-load reducers
-          // pull the median up); here zipfKeySpace >= n/10 keeps distinct
-          // keys >> p at every shipped n, so all p partitions are hit
-          per.last.toDouble / per((per.length - 1) / 2)
-        }
-        def salt(buckets: Long) =
-          pmod(xxhash64(z.columns.map(col).toIndexedSeq: _*), lit(buckets))
-        val autoB = graft.ops.SkewOps.autoSaltBuckets(1000).toLong
-        skewLoads = skewLoads :+ ((n,
-          loadRatio(Seq(col("key")), 32),
-          loadRatio(Seq(col("key"), salt(16L)), 32),
-          loadRatio(Seq(col("key")), 1000),
-          loadRatio(Seq(col("key"), salt(16L)), 1000),
-          loadRatio(Seq(col("key"), salt(autoB)), 1000)))
-        try skewOps.foreach { op =>
-          def rep(): (Double, Double) = {
-            val l = new TaskSkewListener
-            spark.sparkContext.addSparkListener(l)
-            val (_, sec) = try timeIt(op.run(z))
-            finally spark.sparkContext.removeSparkListener(l)
-            (sec, l.worstRatio)
+        Materialize.scoped(z) {
+          z.count()
+          // DETERMINISTIC reducer-load ratio (max/median rows per reduce
+          // partition, HashPartitioning arithmetic — the same computation
+          // ScaleSpec pins): local[32] task TIMES under-display a hot key
+          // (per-task overheads flatten a 4.5× row-load imbalance into
+          // ~1.5× wall), but the row-load ratio is exactly what 1000
+          // reducers would feel. Plain key vs the content salt the
+          // operators apply.
+          def loadRatio(cols: Seq[org.apache.spark.sql.Column], p: Int): Double = {
+            val per = z.groupBy(pmod(hash(cols: _*), lit(p)).as("pid"))
+              .agg(count(lit(1)).as("c"))
+              .select("c").collect().map(_.getLong(0)).sorted
+            // median over the NON-EMPTY partitions only (groupBy emits no
+            // row for an empty pid). At p approaching the distinct-key
+            // count that would understate skew (missing 0-load reducers
+            // pull the median up); here zipfKeySpace >= n/10 keeps distinct
+            // keys >> p at every shipped n, so all p partitions are hit
+            per.last.toDouble / per((per.length - 1) / 2)
           }
-          val (s1, r1) = rep(); val (s2, r2) = rep()
-          // min wall (JIT damping) but MAX ratio: a straggler that shows
-          // in either rep is real — the listener can only under-observe
-          val p = (n, math.min(s1, s2), math.max(r1, r2))
-          skewResults(op.name) = skewResults(op.name) :+ p
-        } finally z.unpersist()
+          def salt(buckets: Long) =
+            pmod(xxhash64(z.columns.map(col).toIndexedSeq: _*), lit(buckets))
+          val autoB = graft.ops.SkewOps.autoSaltBuckets(1000).toLong
+          skewLoads = skewLoads :+ ((n,
+            loadRatio(Seq(col("key")), 32),
+            loadRatio(Seq(col("key"), salt(16L)), 32),
+            loadRatio(Seq(col("key")), 1000),
+            loadRatio(Seq(col("key"), salt(16L)), 1000),
+            loadRatio(Seq(col("key"), salt(autoB)), 1000)))
+          skewOps.foreach { op =>
+            def rep(): (Double, Double) = {
+              val l = new TaskSkewListener
+              spark.sparkContext.addSparkListener(l)
+              val (_, sec) = try timeIt(op.run(z))
+              finally spark.sparkContext.removeSparkListener(l)
+              (sec, l.worstRatio)
+            }
+            val (s1, r1) = rep(); val (s2, r2) = rep()
+            // min wall (JIT damping) but MAX ratio: a straggler that shows
+            // in either rep is real — the listener can only under-observe
+            val p = (n, math.min(s1, s2), math.max(r1, r2))
+            skewResults(op.name) = skewResults(op.name) :+ p
+          }
+        }
       }
       // the prefix join under Zipf TOKENS: hot postings are the skew
       // surface of set-similarity joins (two-tier salting,
@@ -408,9 +386,8 @@ object Scale {
       skewResults(name) = Seq()
       docScales.foreach { n =>
         val docs = graft.sources.ScaleSynth.zipfDocuments(spark, n)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        docs.count()
-        try {
+        Materialize.scoped(docs) {
+          docs.count()
           def rep(): (Double, Double) = {
             val l = new TaskSkewListener
             spark.sparkContext.addSparkListener(l)
@@ -423,7 +400,7 @@ object Scale {
           }
           val (s1, r1) = rep(); val (s2, r2) = rep()
           skewResults(name) = skewResults(name) :+ ((n, math.min(s1, s2), math.max(r1, r2)))
-        } finally docs.unpersist()
+        }
       }
     }
 
@@ -462,8 +439,6 @@ object Scale {
           .otherwise(pmod(xxhash64(col("id"), lit("uk")), lit(keySpace))).as("key"),
         pmod(xxhash64(col("id"), lit("v")), lit(1000L)).cast("double").as("v"))
         .repartition(32)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      z.count()
       val dim = spark.range(0L, keySpace).select(
         col("id").as("dkey"), pmod(col("id"), lit(32L)).as("grp"))
       def rollup(joined: DataFrame): Long =
@@ -521,21 +496,23 @@ object Scale {
           noBroadcast :+ ("spark.sql.adaptive.skewJoin.enabled" -> "false"),
           () => rollup(graft.ops.SkewOps.adaptiveSaltedJoin(z, dim, "key", "dkey",
             saltCols = Seq("row_id"), sampleFraction = 0.001))))
-      variants.foreach { case (name, confs, run) =>
-        def rep(): (Double, Long, Long) = withConfs(confs: _*) {
-          val l = new TaskSkewListener
-          spark.sparkContext.addSparkListener(l)
-          val (_, sec) = try timeIt(run())
-          finally spark.sparkContext.removeSparkListener(l)
-          val (mx, md) = l.heaviestStageMaxMed
-          (sec, mx, md)
+      Materialize.scoped(z) {
+        z.count()
+        variants.foreach { case (name, confs, run) =>
+          def rep(): (Double, Long, Long) = withConfs(confs: _*) {
+            val l = new TaskSkewListener
+            spark.sparkContext.addSparkListener(l)
+            val (_, sec) = try timeIt(run())
+            finally spark.sparkContext.removeSparkListener(l)
+            val (mx, md) = l.heaviestStageMaxMed
+            (sec, mx, md)
+          }
+          rep() // untimed JIT/codegen warm per leg
+          val (s1, m1, d1) = rep(); val (s2, m2, d2) = rep()
+          val (sec, mx, md) = if (s1 <= s2) (s1, m1, d1) else (s2, m2, d2)
+          stragglerRows = stragglerRows :+ ((name, n, sec, mx, md))
         }
-        rep() // untimed JIT/codegen warm per leg
-        val (s1, m1, d1) = rep(); val (s2, m2, d2) = rep()
-        val (sec, mx, md) = if (s1 <= s2) (s1, m1, d1) else (s2, m2, d2)
-        stragglerRows = stragglerRows :+ ((name, n, sec, mx, md))
       }
-      z.unpersist()
     }
 
     // ---- memory/spill tier (r14, verdict #3) ---------------------------
@@ -590,15 +567,18 @@ object Scale {
     locally {
       val mergeAxis = scalesEnv("SPARK_GRAFT_SCALE_MERGES", Seq(20L, 200L, 2000L))
       val batch = 256
-      val docs = cachedDocs(math.min(docScales.max, 50000L))
-      try mergeAxis.foreach { m =>
-        def once(): Double =
-          timeIt(graft.text.BpeTrain
-            .learnMergesBatched(docs, "text", m.toInt, batch).count())._2
-        val (t1, t2) = (once(), once())
-        bpeMergeRows = bpeMergeRows :+
-          ((m, (m + batch - 1) / batch, math.min(t1, t2)))
-      } finally docs.unpersist()
+      val docs = graft.sources.ScaleSynth.documents(spark, math.min(docScales.max, 50000L))
+      Materialize.scoped(docs) {
+        docs.count()
+        mergeAxis.foreach { m =>
+          def once(): Double =
+            timeIt(graft.text.BpeTrain
+              .learnMergesBatched(docs, "text", m.toInt, batch).count())._2
+          val (t1, t2) = (once(), once())
+          bpeMergeRows = bpeMergeRows :+
+            ((m, (m + batch - 1) / batch, math.min(t1, t2)))
+        }
+      }
     }
 
     // ---- streaming near-dup drain (r11): the cost axis is BATCHES ------

@@ -624,44 +624,47 @@ object Dedup {
     val edges = pairs
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint()
-    // labels only ever DECREASE, so sum(label) strictly decreases while
-    // unconverged — a one-row agg is the cheapest exact convergence test
-    def labelSum(df: DataFrame): Long =
-      df.agg(coalesce(sum("label"), lit(0L))).head().getLong(0)
-    var prevSum = labelSum(labels)
-    var converged = edges.isEmpty
-    var rounds = 0
-    while (!converged) {
-      rounds += 1
-      require(rounds <= 64, "dupClusters: no convergence in 64 rounds (graph diameter?)")
-      val nbrMin = edges.join(labels, edges("dst") === labels("id"))
-        .groupBy(edges("src").as("nid"))
-        .agg(min("label").as("nbr_label"))
-      val hopped = labels.as("l")
-        .join(nbrMin, col("l.id") === col("nid"), "left")
-        .select(col("l.id").as("id"),
-          least(col("l.label"), coalesce(col("nbr_label"), col("l.label"))).as("label"))
-      // pointer jump: follow the label's own label (labels are node ids
-      // of this frame, so the self-join hits; left+coalesce guards the
-      // already-minimal roots)
-      val next = hopped.as("h")
-        .join(hopped.select(col("id").as("pid"), col("label").as("plabel")),
-          col("h.label") === col("pid"), "left")
-        .select(col("h.id").as("id"),
-          least(col("h.label"), coalesce(col("plabel"), col("h.label"))).as("label"))
+    // the rounds re-read the edge list; each round's labels are
+    // checkpointed, so the result does not read the edges once released
+    val minLabels = graft.Materialize.scoped(edges) {
+      var labels = edges.select(col("src").as("id")).distinct()
+        .withColumn("label", col("id"))
         .localCheckpoint()
-      val s = labelSum(next)
-      converged = s == prevSum
-      prevSum = s
-      labels = next
+      // labels only ever DECREASE, so sum(label) strictly decreases while
+      // unconverged — a one-row agg is the cheapest exact convergence test
+      def labelSum(df: DataFrame): Long =
+        df.agg(coalesce(sum("label"), lit(0L))).head().getLong(0)
+      var prevSum = labelSum(labels)
+      var converged = edges.isEmpty
+      var rounds = 0
+      while (!converged) {
+        rounds += 1
+        require(rounds <= 64, "dupClusters: no convergence in 64 rounds (graph diameter?)")
+        val nbrMin = edges.join(labels, edges("dst") === labels("id"))
+          .groupBy(edges("src").as("nid"))
+          .agg(min("label").as("nbr_label"))
+        val hopped = labels.as("l")
+          .join(nbrMin, col("l.id") === col("nid"), "left")
+          .select(col("l.id").as("id"),
+            least(col("l.label"), coalesce(col("nbr_label"), col("l.label"))).as("label"))
+        // pointer jump: follow the label's own label (labels are node ids
+        // of this frame, so the self-join hits; left+coalesce guards the
+        // already-minimal roots)
+        val next = hopped.as("h")
+          .join(hopped.select(col("id").as("pid"), col("label").as("plabel")),
+            col("h.label") === col("pid"), "left")
+          .select(col("h.id").as("id"),
+            least(col("h.label"), coalesce(col("plabel"), col("h.label"))).as("label"))
+          .localCheckpoint()
+        val s = labelSum(next)
+        converged = s == prevSum
+        prevSum = s
+        labels = next
+      }
+      labels
     }
-    edges.unpersist()
     docs.select(col(idCol).as("doc_id"))
-      .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
+      .join(minLabels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("rep_id"))
   }
 

@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.Materialize
 import org.apache.spark.ml.classification.{LogisticRegression, RandomForestClassifier}
 import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.ml.functions.vector_to_array
@@ -11,8 +12,9 @@ import org.apache.spark.sql.functions._
   * probability extraction, CV grid search, and the resampler×model
   * benchmark harness (Hap880_Final_Project.py:471-534, 796-861).
   *
-  * The training set is cached before `fit` — RF/LR iterate over it many
-  * times; without the cache every tree/iteration re-reads the scan.
+  * The training set is pinned around `fit` ([[Materialize.scoped]]) —
+  * RF/LR iterate over it many times; without the pin every
+  * tree/iteration re-reads the scan.
   */
 object TrainHarness {
 
@@ -62,20 +64,6 @@ object TrainHarness {
       inner.transformSchema(schema)
   }
 
-  /** Cache `df` around the eager `body` ONLY if the caller hasn't already
-    * cached it (or an upstream table): fits iterate over their input many
-    * times, but an unconditional `.cache()` with no unpersist leaks one
-    * pinned copy per call — under the bench's 3 reps per query that
-    * compounds into cross-query memory pressure. Caller-managed caches
-    * (sweeps, the memoized feature table) pass through untouched.
-    */
-  private def withFitCache[T](df: DataFrame)(body: DataFrame => T): T = {
-    val own = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    if (own) df.cache()
-    try body(df)
-    finally if (own) df.unpersist()
-  }
-
   /** Run independent fit bodies CONCURRENTLY from a bounded thread pool,
     * preserving input order in the result (guide §2.6: Spark happily runs
     * several jobs at once inside one application; sweep fits are only
@@ -87,15 +75,11 @@ object TrainHarness {
     * input — scheduling order changes nothing but wall-clock.
     * Failures propagate: the first failed body rethrows at the join.
     */
-  private[graft] def inParallel[A, B](items: Seq[A], maxThreads: Int = 4)(f: A => B): Seq[B] = {
-    // escape hatch + A/B probe handle: -Dgraft.sweep.threads=1 restores
-    // the serial loop (results are identical either way; only wall moves)
-    val cap = sys.props.get("graft.sweep.threads").flatMap(_.toIntOption)
-      .getOrElse(maxThreads)
-    if (items.size <= 1 || cap <= 1) items.map(f)
+  private[graft] def inParallel[A, B](items: Seq[A], maxThreads: Int = 4)(f: A => B): Seq[B] =
+    if (items.size <= 1 || maxThreads <= 1) items.map(f)
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(items.size, cap)))
+        math.min(items.size, maxThreads))
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
       try {
@@ -104,7 +88,6 @@ object TrainHarness {
           fut, scala.concurrent.duration.Duration.Inf))
       } finally pool.shutdown()
     }
-  }
 
   /** Size-adapted compaction before an iterated fit. A metrics-scale
     * train spread over the session's full shuffle-partition count makes
@@ -151,7 +134,7 @@ object TrainHarness {
       // deep trees at the default 256 MB degrade to one pass per few
       // levels (measured 190 s → 42 s at 2 GB on the 67k × 3,019 matrix)
       .setMaxBins(maxBins).setMaxMemoryInMB(maxMemoryMB)
-    val model = withFitCache(train)(rf.fit(_))
+    val model = Materialize.scoped(train)(rf.fit(train))
     slim(model).transform(test)
       .withColumn("score", vector_to_array(col("probability"))(1))
   }
@@ -180,7 +163,7 @@ object TrainHarness {
     val lr = new LogisticRegression()
       .setFeaturesCol(featuresCol).setLabelCol(labelCol)
       .setElasticNetParam(1.0).setRegParam(regParam).setMaxIter(maxIter)
-    val model = withFitCache(train)(lr.fit(_))
+    val model = Materialize.scoped(train)(lr.fit(train))
     slim(model).transform(test)
       .withColumn("margin", vector_to_array(col("rawPrediction"))(1))
       .withColumn("score", vector_to_array(col("probability"))(1))
@@ -211,7 +194,7 @@ object TrainHarness {
       // Results are bit-identical to the serial order; only wall-clock
       // changes.
       .setParallelism(parallelism)
-    val model = withFitCache(train)(cv.fit(_))
+    val model = Materialize.scoped(train)(cv.fit(train))
     val bestIdx = model.avgMetrics.zipWithIndex.maxBy(_._1)._2
     val bestReg = model.getEstimatorParamMaps(bestIdx).get(lr.regParam).get
     (bestReg, model.avgMetrics(bestIdx))
@@ -219,7 +202,8 @@ object TrainHarness {
 
   /** RF hyperparameter sweep (reference M6: n_estimators ∈ 100..900,
     * py:580-618): driver loop over tree counts, one (numTrees, auc) row
-    * each. The train/test sets are cached once across the whole sweep.
+    * each. The train/test sets are pinned once across the whole sweep
+    * (a caller's own cache is kept).
     */
   def rfSweep(
       train: DataFrame, test: DataFrame,
@@ -228,19 +212,16 @@ object TrainHarness {
   ): DataFrame = {
     val s = org.apache.spark.sql.SparkSession.active
     import s.implicits._
-    // sweep-scoped caches: every fit in the loop reuses them; released
-    // before returning (the result rows are already computed scalars)
-    train.cache(); test.cache()
-    try {
-      // r14: the per-count fits are independent seeded jobs over the same
-      // cached frames — overlap them (inParallel) so one fit's few-task
-      // tail stages back-fill the slots the others free. Same models,
-      // same AUCs, ~sweep-wall ≈ the largest fit instead of the sum.
+    // r14: the per-count fits are independent seeded jobs over the same
+    // pinned frames — overlap them (inParallel) so one fit's few-task
+    // tail stages back-fill the slots the others free. Same models, same
+    // AUCs, ~sweep-wall ≈ the largest fit instead of the sum.
+    Materialize.scoped(train, test) {
       inParallel(treeCounts) { n =>
         val scored = randomForestScores(train, test, featuresCol, labelCol, n, seed)
         n -> Metrics.aucRoc(scored, "score", labelCol)
       }.toDF("num_trees", "auc_roc")
-    } finally { train.unpersist(); test.unpersist() }
+    }
   }
 
   /** Top-n feature-selection sweep (reference M14, py:645-658): rank
@@ -257,10 +238,9 @@ object TrainHarness {
     import s.implicits._
     val ranked = mi.orderBy(col("mutual_info").desc, col("feature")).collect()
       .map(_.getString(0))
-    train.cache(); test.cache()
-    // r14: independent per-n fits over the same cached frames — overlapped
+    // r14: independent per-n fits over the same pinned frames — overlapped
     // like rfSweep (results identical, wall ≈ the widest fit)
-    try inParallel(ns) { n =>
+    Materialize.scoped(train, test)(inParallel(ns) { n =>
       val keep = ranked.take(n)
       val slicer = new org.apache.spark.ml.feature.VectorSlicer()
         .setInputCol(featuresCol).setOutputCol("_sliced")
@@ -269,8 +249,7 @@ object TrainHarness {
       val testS  = slicer.transform(test).drop(featuresCol).withColumnRenamed("_sliced", featuresCol)
       val scored = logisticL1Scores(trainS, testS, featuresCol, labelCol)
       (n, Metrics.aucRoc(scored, "score", labelCol))
-    }.toDF("n_features", "auc_roc")
-    finally { train.unpersist(); test.unpersist() }
+    }.toDF("n_features", "auc_roc"))
   }
 
   /** The reference's CULMINATING benchmark (cells 64-69,
@@ -287,9 +266,9 @@ object TrainHarness {
     * swapped-axis `auc_pr` over decision margins ([[Metrics.aucPrReordered]]),
     * and the confusion-matrix cells.
     *
-    * Scale shape: each resampled train is cached once around the CV grid
+    * Scale shape: each resampled train is pinned once around the CV grid
     * + final fit (every fit iterates the frame), released before the next
-    * strategy; metrics are two aggregations over one cached scored frame.
+    * strategy; metrics are two aggregations over one pinned scored frame.
     * The result is |strategies| driver-side scalar rows.
     */
   def resamplerBenchmark(
@@ -342,35 +321,38 @@ object TrainHarness {
       // merge than compute). The target is capped at the input's own
       // partition count so a genuinely large train keeps its natural
       // parallelism, and the shrink is a shuffle-free coalesce.
-      val raw = mk().select(col(featuresCol), col(labelCol)).cache()
-      val nTrain = raw.count()
-      val resampled = compactForFit(raw, nTrain).cache()
-      resampled.count()
-      raw.unpersist()
-      try {
-        // sklearn-equivalent λ per C at THIS strategy's n (liblinear
-        // minimizes ||w||₁ + C·Σloss ⇒ λ = 1/(n·C) in MLlib's mean-loss
-        // parameterization)
-        val regParams = cGrid.map(c => 1.0 / (nTrain * c))
-        val (bestReg, cvAcc) =
-          gridSearchLr(resampled, featuresCol, labelCol, regParams, numFolds,
-            seed, cvMaxIter, parallelism = 8)
-        val bestC = 1.0 / (nTrain * bestReg)
-        val scored = logisticL1Margins(resampled, test, featuresCol, labelCol,
-          regParam = bestReg).cache()
-        try {
-          val m = Metrics.thresholdMetrics(scored, "score", labelCol, 0.5).collect()(0)
-          val recall = m.getAs[Double]("recall")
-          val spec = m.getAs[Double]("specificity")
-          val aucPr = Metrics.aucPrReordered(scored, "margin", labelCol)
-          val prec = m.getAs[Double]("precision_")
-          val f1 = if (prec + recall == 0.0) 0.0 else 2 * prec * recall / (prec + recall)
-          (name, nTrain, bestC, cvAcc, f1, prec, recall,
-            m.getAs[Double]("accuracy"), (recall + spec) / 2.0, aucPr,
-            m.getAs[Long]("tn"), m.getAs[Long]("fp"),
-            m.getAs[Long]("fn"), m.getAs[Long]("tp"))
-        } finally scored.unpersist()
-      } finally resampled.unpersist()
+      // The compacted copy reads the pinned raw one, which stays pinned
+      // until the strategy ends.
+      val raw = mk().select(col(featuresCol), col(labelCol))
+      Materialize.scoped(raw) {
+        val nTrain = raw.count()
+        val resampled = compactForFit(raw, nTrain)
+        Materialize.scoped(resampled) {
+          resampled.count()
+          // sklearn-equivalent λ per C at THIS strategy's n (liblinear
+          // minimizes ||w||₁ + C·Σloss ⇒ λ = 1/(n·C) in MLlib's mean-loss
+          // parameterization)
+          val regParams = cGrid.map(c => 1.0 / (nTrain * c))
+          val (bestReg, cvAcc) =
+            gridSearchLr(resampled, featuresCol, labelCol, regParams, numFolds,
+              seed, cvMaxIter, parallelism = 8)
+          val bestC = 1.0 / (nTrain * bestReg)
+          val scored = logisticL1Margins(resampled, test, featuresCol, labelCol,
+            regParam = bestReg)
+          Materialize.scoped(scored) {
+            val m = Metrics.thresholdMetrics(scored, "score", labelCol, 0.5).collect()(0)
+            val recall = m.getAs[Double]("recall")
+            val spec = m.getAs[Double]("specificity")
+            val aucPr = Metrics.aucPrReordered(scored, "margin", labelCol)
+            val prec = m.getAs[Double]("precision_")
+            val f1 = if (prec + recall == 0.0) 0.0 else 2 * prec * recall / (prec + recall)
+            (name, nTrain, bestC, cvAcc, f1, prec, recall,
+              m.getAs[Double]("accuracy"), (recall + spec) / 2.0, aucPr,
+              m.getAs[Long]("tn"), m.getAs[Long]("fp"),
+              m.getAs[Long]("fn"), m.getAs[Long]("tp"))
+          }
+        }
+      }
     }.toDF("strategy", "n_train", "best_c", "cv_accuracy", "f1",
       "precision_", "recall", "accuracy", "auc_roc", "auc_pr",
       "tn", "fp", "fn", "tp")
@@ -396,14 +378,15 @@ object TrainHarness {
     import s.implicits._
     strategies.map { case (name, resampled) =>
       // AUC and threshold metrics are two actions over the same scored
-      // frame — cache it so the model transform (and everything above the
+      // frame — pin it so the model transform (and everything above the
       // cached feature table) runs once per strategy, not per metric
-      val scored = logisticL1Scores(resampled, test, featuresCol, labelCol).cache()
-      val auc = Metrics.aucRoc(scored, "score", labelCol)
-      val m = Metrics.thresholdMetrics(scored, "score", labelCol, 0.5).collect()(0)
-      scored.unpersist()
-      (name, auc, m.getAs[Double]("accuracy"), m.getAs[Double]("recall"),
-        m.getAs[Double]("precision_"), m.getAs[Double]("specificity"))
+      val scored = logisticL1Scores(resampled, test, featuresCol, labelCol)
+      Materialize.scoped(scored) {
+        val auc = Metrics.aucRoc(scored, "score", labelCol)
+        val m = Metrics.thresholdMetrics(scored, "score", labelCol, 0.5).collect()(0)
+        (name, auc, m.getAs[Double]("accuracy"), m.getAs[Double]("recall"),
+          m.getAs[Double]("precision_"), m.getAs[Double]("specificity"))
+      }
     }.toDF("strategy", "auc_roc", "accuracy", "recall", "precision_", "specificity")
   }
 }

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.Materialize
 import graft.sources.MimicSynth
 import org.apache.spark.ml.feature.{CountVectorizerModel, Tokenizer, VectorAssembler}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -109,24 +110,23 @@ object MimicPipeline {
   def assembledAt(s: SparkSession, f: Long): DataFrame = build(s, f)._1
 
   private def build(s: SparkSession, f: Long): (DataFrame, Array[String]) = {
-    {
-      val rows = MimicSynth.modelingRowsAt(s, f)
-      val notes = MimicSynth.dischargeSummariesAt(s, f)
-      // missing-note rows stay in the matrix as all-zero text (the
-      // reference's fillna(' '))
-      // tokenize ONCE and pin the token frame: synthetic TEXT generation
-      // (per-word hash draws) is the build's cost center, and the vocab
-      // count + the CountVectorizerModel transform + the assembler pass
-      // would each regenerate it (~20 s/pass cold). The pinned frame is
-      // |cohort| rows of ~35-token arrays — trivially memory-resident —
-      // and is released as soon as the assembled matrix is materialized.
-      // At 100 TB the same shape holds: one corpus scan, token arrays
-      // shuffled nowhere, downstream passes read the columnar cache.
-      val toksed = new Tokenizer().setInputCol("TEXT").setOutputCol("_toks")
-        .transform(rows.join(notes, Seq("HADM_ID"), "left")
-          .na.fill(" ", Seq("TEXT")))
-        .drop("TEXT")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rows = MimicSynth.modelingRowsAt(s, f)
+    val notes = MimicSynth.dischargeSummariesAt(s, f)
+    // missing-note rows stay in the matrix as all-zero text (the
+    // reference's fillna(' '))
+    // tokenize ONCE and pin the token frame: synthetic TEXT generation
+    // (per-word hash draws) is the build's cost center, and the vocab
+    // count + the CountVectorizerModel transform + the assembler pass
+    // would each regenerate it (~20 s/pass cold). The pinned frame is
+    // |cohort| rows of ~35-token arrays — trivially memory-resident —
+    // and is released as soon as the assembled matrix is materialized.
+    // At 100 TB the same shape holds: one corpus scan, token arrays
+    // shuffled nowhere, downstream passes read the columnar cache.
+    val toksed = new Tokenizer().setInputCol("TEXT").setOutputCol("_toks")
+      .transform(rows.join(notes, Seq("HADM_ID"), "left")
+        .na.fill(" ", Seq("TEXT")))
+      .drop("TEXT")
+    Materialize.scoped(toksed) {
       // the deterministic top-3000 cut (CountVectorizer.fit orders by
       // frequency only, so ties at the cut boundary would make the
       // matrix content session-dependent)
@@ -151,13 +151,14 @@ object MimicPipeline {
         .setInputCols(("_bow" +: diagCats.map(c => s"diag_$c")).toArray
           ++ Array("age", "gender_m"))
         .setOutputCol("features")
+      // the returned (and memoized) matrix outlives the scope: persisted
+      // and materialized here, before the token pin is released
       val out = asm.transform(aged)
         .select(col("HADM_ID").as("id"),
           col("label").cast("double").as("label"),
           col("split"), col("features"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       out.count()
-      toksed.unpersist()
       (out, vocab)
     }
   }
@@ -201,38 +202,25 @@ object MimicPipeline {
     */
   def miRanking(s: SparkSession): DataFrame = {
     import s.implicits._
-    // r14 (guide §2.4 "don't compute things twice"): the note TOKEN
-    // STREAM and the MODELING ROWS are each derived multiple times by
-    // the branches below — tokens twice (vocabulary cut + BoW joints),
-    // modelingRows five times (vocab-leg cohort filter + tot + BoW +
-    // diag + dense) — and each re-derivation regenerates the synthetic
-    // draws and re-runs the cohort windows/joins. localCheckpoint
-    // materializes each ONCE inside the invocation (eager, so the cost
-    // is inside the timed region every rep; ~1.5M (HADM_ID, word) rows
-    // and 45k modeling rows — trivially block-resident, released by the
-    // ContextCleaner when the plan is GC'd). Values are bit-identical:
-    // the generators are deterministic md5 draws, so materializing vs
-    // recomputing cannot change a row. At 100 TB the same shape holds —
-    // one corpus scan feeding two aggregations instead of two scans.
-    // NOTE: a checkpointed frame is a LogicalRDD with NO size statistics,
-    // so the planner can no longer prove the modeling-row sides small —
-    // every join against them must carry an explicit broadcast() hint or
-    // the old auto-broadcast joins silently degrade to two-sided
-    // sort-merge (measured: the un-hinted version shuffled the 1.5M-row
-    // token stream twice, 17.6 MB exchanges).
-    val mrows = MimicSynth.modelingRows(s).localCheckpoint()
+    // r14 (guide §2.4 "don't compute things twice"): the branches below
+    // read mrows five times, vocabDf three times and tokens, sparseJoint
+    // and d0 twice each; unpinned, every read regenerates the synthetic
+    // draws and re-runs the cohort windows/joins. The five are pinned for
+    // this call only, in dependency order so each cached plan reads the
+    // ones before it, and the ~3,019-row ranking is collected inside the
+    // scope: no pin outlives the call, and every invocation recomputes.
+    // The broadcast() hints stay: an unfilled cache reports the plan's
+    // size estimate, which cannot prove the modeling-row sides small
+    // (unhinted, the 1.5M-row token stream shuffled twice, 17.6 MB).
+    val mrows = MimicSynth.modelingRows(s)
     val tokens = MimicSynth.noteTokens(s)
       .join(broadcast(mrows.select("HADM_ID")), "HADM_ID")
-      .localCheckpoint()
     val train = mrows
       .filter(col("split") === "train")
       .select(col("HADM_ID"), col("SUBJECT_ID"), col("label").as("y"))
     val tot = train.groupBy("y").agg(count(lit(1)).as("ny"))
-    // rankingVocabulary's cut, read from the materialized stream.
-    // Checkpointed (3,000 rows): it is referenced three times below (BoW
-    // probe, declared universe, and through sparseJoint) and a plain plan
-    // would re-run the corpus-wide cut per reference.
-    val vocabDf = topWords(tokens).select("word").localCheckpoint()
+    // rankingVocabulary's cut, read from the pinned stream
+    val vocabDf = topWords(tokens).select("word")
     val bowPairs = tokens
       .join(broadcast(vocabDf), "word")
       .join(broadcast(train.select("HADM_ID", "y")), "HADM_ID")
@@ -245,14 +233,10 @@ object MimicPipeline {
       .groupBy(col("cat"), col("HADM_ID"), col("y"))
       .agg(count(lit(1)).as("v"))
       .select(concat(lit("diag_"), col("cat")).as("feature"), col("v"), col("y"))
-    // nonzero joint cells for the sparse features. Checkpointed (≤ a few
-    // 10k (feature, v, y) cells): referenced twice — the MI union AND the
-    // zero-completion's per-feature totals — and a plain plan duplicates
-    // the whole BoW/diag subtree per reference (the profile showed the
-    // 1.4M-group aggregation running twice per invocation).
+    // nonzero joint cells for the sparse features (≤ a few 10k
+    // (feature, v, y) cells)
     val sparseJoint = bowPairs.unionByName(diagPairs)
       .groupBy("feature", "v", "y").agg(count(lit(1)).as("nxy"))
-      .localCheckpoint()
     // zero-completion over the DECLARED sparse universe: a feature absent
     // from a label's rows still owes that label its all-zero cell
     val declared = vocabDf.select(concat(lit("bow:"), col("word")).as("feature"))
@@ -272,9 +256,6 @@ object MimicPipeline {
       .join(MimicSynth.patients(s), Seq("SUBJECT_ID")))
       .withColumn("gender_m", when(col("GENDER") === "M", 1L).otherwise(0L))
       .select(col("y"), col("age"), col("gender_m"))
-      // checkpointed (36k × 3 longs): the age and gender_m joints below
-      // each re-derive this frame (admissions + patients joins) otherwise
-      .localCheckpoint()
     val denseJoint = d0
       .groupBy(col("age").as("v"), col("y")).agg(count(lit(1)).as("nxy"))
       .select(lit("age").as("feature"), col("v"), col("y"), col("nxy"))
@@ -283,10 +264,12 @@ object MimicPipeline {
         .select(lit("gender_m").as("feature"), col("v"), col("y"), col("nxy")))
     val mi = graft.ml.FeatureScoring.mutualInfoFromCounts(
       sparseJoint.unionByName(zeroCells).unionByName(denseJoint))
-    mi.select(col("feature"), round(col("mutual_info"), 6).as("mi"))
+    val ranked = mi.select(col("feature"), round(col("mutual_info"), 6).as("mi"))
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window
           .orderBy(col("mi").desc, col("feature").asc)))
       .select(col("rank").cast("long").as("rank"), col("feature"), col("mi"))
+    val rows = Materialize.scoped(mrows, tokens, vocabDf, sparseJoint, d0)(ranked.collect())
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), ranked.schema)
   }
 }

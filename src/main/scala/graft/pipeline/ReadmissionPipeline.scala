@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.Materialize
 import graft.core.Tables
 import graft.ml.{Features, Metrics, Resamplers, TrainHarness}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -68,31 +69,30 @@ object ReadmissionPipeline {
 
     // 4. split → resample → train → metrics (§3.3)
     val (train, test) = Features.splitByHash(full, "id")
-    // r14: run-scoped caches + overlapped strategies (the rfSweep
+    // r14: run-scoped pins + overlapped strategies (the rfSweep
     // pattern, guide §2.6) — previously each strategy's fit cache
     // re-materialized the feature table (VectorAssembler + pivot join)
     // from the memo, three times sequentially; now the split frames
     // materialize once and the three independent seeded fits back-fill
     // each other's few-task L-BFGS tails. Same fits, same metrics.
-    train.cache(); test.cache()
     import s.implicits._
-    try {
+    Materialize.scoped(train, test) {
       val strategies = Seq(
         "base"        -> (() => train),
         "undersample" -> (() => Resamplers.randomUndersample(train, "label", seed)),
         "oversample"  -> (() => Resamplers.randomOversample(train, "label", seed)))
       TrainHarness.inParallel(strategies) { case (name, mk) =>
-        // two metric actions per strategy — cache the scored frame so the
+        // two metric actions per strategy — pin the scored frame so the
         // LR transform (and the resample above it) runs once
-        val scored = TrainHarness.logisticL1Scores(mk(), test, "features", "label").cache()
-        try {
+        val scored = TrainHarness.logisticL1Scores(mk(), test, "features", "label")
+        Materialize.scoped(scored) {
           val auc = Metrics.aucRoc(scored, "score", "label")
           val m = Metrics.thresholdMetrics(scored, "score", "label", 0.5).collect()(0)
           (name, auc, m.getAs[Double]("accuracy"), m.getAs[Double]("recall"),
             m.getAs[Double]("precision_"), m.getAs[Double]("specificity"),
             m.getAs[Long]("tp") + m.getAs[Long]("fn"))
-        } finally scored.unpersist()
+        }
       }.toDF("strategy", "auc_roc", "accuracy", "recall", "precision_", "specificity", "n_pos_test")
-    } finally { train.unpersist(); test.unpersist() }
+    }
   }
 }

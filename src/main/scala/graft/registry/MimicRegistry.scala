@@ -177,22 +177,21 @@ private[graft] object MimicRegistry {
       // §2.6). Same fits, same AUCs.
       graft.ml.TrainHarness.inParallel(strategies) { case (name, tr) =>
         val n = tr.count()
-        val fit = graft.ml.TrainHarness.compactForFit(
-          tr.select(col("features"), col("label")), n).cache()
-        fit.count()
-        try {
-          val scored = graft.ml.TrainHarness.logisticL1Scores(fit, test,
-            "features", "label", regParam = 1.0 / (n * 0.01)).cache()
-          try (name, n,
-            math.round(graft.ml.Metrics.aucRoc(scored, "score", "label") * 1000) / 1000.0,
-            math.round(graft.ml.Metrics.aucRocFromPredictions(scored, "score", "label") * 1000) / 1000.0)
-          finally scored.unpersist()
-        } finally fit.unpersist()
-      }.toDF("strategy", "n_train", "auc_roc", "auc_pred")
-    }),
         // size-adapted compaction before the iterated fit (shared
         // contract: ~8k rows/task, capped at the input's own parallelism,
         // shuffle-free coalesce when shrinking)
+        val fit = graft.ml.TrainHarness.compactForFit(
+          tr.select(col("features"), col("label")), n)
+        Materialize.scoped(fit) {
+          fit.count()
+          val scored = graft.ml.TrainHarness.logisticL1Scores(fit, test,
+            "features", "label", regParam = 1.0 / (n * 0.01))
+          Materialize.scoped(scored)((name, n,
+            math.round(graft.ml.Metrics.aucRoc(scored, "score", "label") * 1000) / 1000.0,
+            math.round(graft.ml.Metrics.aucRocFromPredictions(scored, "score", "label") * 1000) / 1000.0))
+        }
+      }.toDF("strategy", "n_train", "auc_roc", "auc_pred")
+    }),
 
     // M8 at the reference's EXACT published benchmark config (rows-only):
     // 4-value L1 grid × 5 folds = 20 LR fits on the 36,047 × 3,019 train
@@ -202,16 +201,6 @@ private[graft] object MimicRegistry {
     "mimic_cv_grid" -> ((s, d) => {
       val raw = graft.pipeline.MimicPipeline.assembled(s)
         .filter(col("split") === "train").select("features", "label")
-      val train = graft.ml.TrainHarness.compactForFit(raw, 36047L).cache()
-      train.count()
-      try {
-        val (bestReg, bestAcc) = graft.ml.TrainHarness.gridSearchLr(
-          train, "features", "label", regParams = Seq(10.0, 1.0, 0.1, 0.01),
-          numFolds = 5, parallelism = 8)
-        import s.implicits._
-        Seq((bestReg, bestAcc)).toDF("best_reg_param", "best_cv_accuracy")
-      } finally train.unpersist()
-    }),
       // compacted before the grid: the memoized matrix carries the
       // session's shuffle-partition count, and 20 L-BFGS fits over a
       // 36k-row frame in 32 near-empty partitions are a per-iteration
@@ -219,6 +208,16 @@ private[graft] object MimicRegistry {
       // compaction); compactForFit targets ~8k rows/task, capped at the
       // input's own parallelism — at real cluster train sizes it never
       // binds
+      val train = graft.ml.TrainHarness.compactForFit(raw, 36047L)
+      Materialize.scoped(train) {
+        train.count()
+        val (bestReg, bestAcc) = graft.ml.TrainHarness.gridSearchLr(
+          train, "features", "label", regParams = Seq(10.0, 1.0, 0.1, 0.01),
+          numFolds = 5, parallelism = 8)
+        import s.implicits._
+        Seq((bestReg, bestAcc)).toDF("best_reg_param", "best_cv_accuracy")
+      }
+    }),
 
     // M5/M6 at reference scale (rows-only — tree RNG): RF on the
     // balanced-undersampled 4,720 × 3,019 train at the reference's
@@ -291,8 +290,8 @@ private[graft] object MimicRegistry {
       val over = graft.ml.Resamplers.randomOversample(train, "label", 42L)
       val scored = graft.ml.TrainHarness.randomForestScores(
         over, test, "features", "label", numTrees = 50, seed = 42L,
-        maxDepth = 26, maxBins = 16, maxMemoryMB = 2048).cache()
-      try {
+        maxDepth = 26, maxBins = 16, maxMemoryMB = 2048)
+      Materialize.scoped(scored) {
         val auc = graft.ml.Metrics.aucRoc(scored, "score", "label")
         val m = graft.ml.Metrics.thresholdMetrics(scored, "score", "label", 0.5).collect()(0)
         import s.implicits._
@@ -302,7 +301,7 @@ private[graft] object MimicRegistry {
           math.round(m.getAs[Double]("recall") * 1000) / 1000.0,
           m.getAs[Long]("tp"), m.getAs[Long]("fn")))
           .toDF("strategy", "auc_roc", "accuracy", "recall", "tp", "fn")
-      } finally scored.unpersist()
+      }
     }),
 
     // M1/M2 at reference scale: the CountVectorizer max_features=3000

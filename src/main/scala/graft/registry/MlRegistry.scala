@@ -351,15 +351,15 @@ private[graft] object MlRegistry {
       // r14: three independent seeded fits — overlapped
       // (TrainHarness.inParallel, guide §2.6); same fits, same metrics
       graft.ml.TrainHarness.inParallel(strategies) { case (name, resampled) =>
-        val scored = graft.ml.TrainHarness.logisticL1Scores(resampled, test, "features", "label").cache()
-        try {
+        // pinned: AUC + threshold metrics are two actions on this frame
+        val scored = graft.ml.TrainHarness.logisticL1Scores(resampled, test, "features", "label")
+        Materialize.scoped(scored) {
           val auc = graft.ml.Metrics.aucRoc(scored, "score", "label")
           val m = graft.ml.Metrics.thresholdMetrics(scored, "score", "label", 0.5).collect()(0)
           (name, auc, m.getAs[Double]("accuracy"), m.getAs[Double]("recall"))
-        } finally scored.unpersist()
+        }
       }.toDF("strategy", "auc_roc", "accuracy", "recall")
     }),
-        // cache: AUC + threshold metrics are two actions on this frame
 
     // M15: decision-function margin scores (rows-only: LR fit internals).
     // Emits the margin/probability consistency counters — n_inconsistent

@@ -497,11 +497,10 @@ object Similarity {
     val sampled = if (sampleFraction >= 1.0) emb else emb.sample(sampleFraction, seed)
     val vs = sampled
       .select(array_to_vector(transform(col(vecCol), x => x.cast("double"))).as("_kmf"))
-      .cache()
-    val model = new org.apache.spark.ml.clustering.KMeans()
+    // fit is eager: pin the sample for the fit only, not the session
+    val model = graft.Materialize.scoped(vs)(new org.apache.spark.ml.clustering.KMeans()
       .setK(k).setSeed(seed).setMaxIter(20).setFeaturesCol("_kmf")
-      .fit(vs)
-    vs.unpersist() // fit is eager; don't pin the sample for the session
+      .fit(vs))
     val session = emb.sparkSession
     import session.implicits._
     model.clusterCenters.zipWithIndex

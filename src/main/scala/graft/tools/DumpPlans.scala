@@ -14,6 +14,22 @@ import org.apache.spark.sql.execution.ExplainMode
   * the dumped plan is the benched plan.
   */
 object DumpPlans {
+  /** Ids a plan numbers per run (expression, AQE plan, query stage,
+    * codegen stage, compiled lambda), replaced so that two runs of one
+    * commit write identical files.
+    */
+  private val runIds: Seq[(scala.util.matching.Regex, String)] = Seq(
+    """#\d+""".r -> "#N",
+    """plan_id=\d+""".r -> "plan_id=N",
+    """(?m)(^\(\d+\) \w*QueryStage\n(?:.+\n)*?Arguments: )\d+""".r -> "$1N",
+    """\[codegen id : \d+\]""".r -> "[codegen id : N]",
+    """\*\(\d+\)""".r -> "*(N)",
+    """(\$anonfun\$[\w$]*?\$)\d+""".r -> "$1N",
+    """\$\$Lambda[^\s,\])]*""".r -> """\$\$Lambda""")
+
+  private[tools] def normalize(plan: String): String =
+    runIds.foldLeft(plan) { case (p, (re, to)) => re.replaceAllIn(p, to) }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
@@ -27,7 +43,7 @@ object DumpPlans {
       // elide giant binary literals (bloom sketches) as PlanAudit does
       val plan = "0[xX]([0-9A-Fa-f]{64})[0-9A-Fa-f]+".r.replaceAllIn(planRaw,
         m => s"0x${m.group(1)}…<${(m.matched.length - 2) / 2} bytes elided>")
-      Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), plan)
+      Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), normalize(plan))
       println(s"[plans] $name -> $outDir/${name}_$suffix.txt")
     }
     spark.stop()

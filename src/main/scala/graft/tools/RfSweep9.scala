@@ -17,16 +17,18 @@ object RfSweep9 {
     val spark = graft.Session.local(graft.Session.cpus)
     val (train, test) = graft.ml.Features.splitByHash(
       graft.ml.Features.assembled(spark, sfDir), "id")
-    train.cache().count(); test.cache().count()
-    println(s"| n_estimators | auc_roc | fit+score wall (s) |")
-    println(s"|---:|---:|---:|")
-    (100 to 900 by 100).foreach { n =>
-      val t0 = System.nanoTime()
-      val auc = graft.ml.TrainHarness
-        .rfSweep(train, test, "features", "label", Seq(n))
-        .collect()(0).getDouble(1)
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"| $n | $auc%.4f | $sec%.1f |")
+    graft.Materialize.scoped(train, test) {
+      train.count(); test.count()
+      println(s"| n_estimators | auc_roc | fit+score wall (s) |")
+      println(s"|---:|---:|---:|")
+      (100 to 900 by 100).foreach { n =>
+        val t0 = System.nanoTime()
+        val auc = graft.ml.TrainHarness
+          .rfSweep(train, test, "features", "label", Seq(n))
+          .collect()(0).getDouble(1)
+        val sec = (System.nanoTime() - t0) / 1e9
+        println(f"| $n | $auc%.4f | $sec%.1f |")
+      }
     }
     spark.stop()
   }

@@ -121,21 +121,21 @@ object SpillProbe {
     spark.sparkContext.addSparkListener(listener)
 
     val docs = graft.sources.ScaleSynth.zipfDocuments(spark, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    docs.count()
-    val t0 = System.nanoTime()
-    val rows = op match {
-      case "ppjoin" =>
-        val (pairs, release) = graft.dedup.Dedup
-          .prefixJaccardPairsReleasable(docs, "doc_id", "text", threshold = 0.9)
-        try pairs.count() finally release()
-      case "minhash" =>
-        graft.dedup.Dedup.minhashLshPairs(docs, "doc_id", "text").count()
-      case other => sys.error(s"unknown op: $other")
+    val (rows, wall) = graft.Materialize.scoped(docs) {
+      docs.count()
+      val t0 = System.nanoTime()
+      val rows = op match {
+        case "ppjoin" =>
+          val (pairs, release) = graft.dedup.Dedup
+            .prefixJaccardPairsReleasable(docs, "doc_id", "text", threshold = 0.9)
+          try pairs.count() finally release()
+        case "minhash" =>
+          graft.dedup.Dedup.minhashLshPairs(docs, "doc_id", "text").count()
+        case other => sys.error(s"unknown op: $other")
+      }
+      (rows, (System.nanoTime() - t0) / 1e9)
     }
-    val wall = (System.nanoTime() - t0) / 1e9
     spark.sparkContext.removeSparkListener(listener)
-    docs.unpersist()
 
     val heapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
     val json =

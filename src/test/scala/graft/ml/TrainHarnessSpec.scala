@@ -3,6 +3,7 @@ package graft.ml
 import graft.SparkSpecBase
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 class TrainHarnessSpec extends SparkSpecBase {
   import spark.implicits._
@@ -25,6 +26,21 @@ class TrainHarnessSpec extends SparkSpecBase {
     out.values.foreach(a => assert(a >= 0.0 && a <= 1.0))
     // the separable x0 feature alone must already rank well above chance
     assert(out(1) > 0.8, s"top-1 AUC ${out(1)} implausible for a separable feature")
+  }
+
+  test("rfSweep and featureSelectionSweep leave a caller's cache in place") {
+    // the sweeps pin their inputs for the sweep only; a frame the caller
+    // cached stays cached (released, every later read would recompute it)
+    val cached = df.filter(col("id") >= 0L).cache()
+    try {
+      cached.count()
+      TrainHarness.rfSweep(cached, cached, "features", "label", Seq(2)).collect()
+      assert(cached.storageLevel != StorageLevel.NONE, "rfSweep released the caller's cache")
+      val mi = Seq(("o_totalprice", 0.9)).toDF("feature", "mutual_info")
+      TrainHarness.featureSelectionSweep(cached, cached, "features", "label", mi, Seq(1)).collect()
+      assert(cached.storageLevel != StorageLevel.NONE,
+        "featureSelectionSweep released the caller's cache")
+    } finally cached.unpersist()
   }
 
   test("rfSweep: AUC is monotone-flat past ~300 trees (the reference's M6 curve)") {

@@ -169,8 +169,8 @@ class MimicSynthSpec extends SparkSpecBase {
 
   test("miRanking (r14 single-materialization restructure) emits the full " +
     "declared universe: 3,019 dense-ranked features over the derived vocab") {
-    // the r14 localCheckpoint restructure derives the vocabulary cut and
-    // the BoW joints from ONE materialized token stream — this pins the
+    // miRanking derives the vocabulary cut and the BoW joints from ONE
+    // pinned token stream (Materialize.scoped) — this pins the
     // output shape the DuckDB oracle also checks, as fast suite signal:
     // every declared feature ranks exactly once (zero-completion kept
     // constant columns alive), ranks are dense 1..3019, and the bow:
