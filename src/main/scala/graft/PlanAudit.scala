@@ -998,14 +998,10 @@ object PlanAudit {
       // the streaming query's interesting plan is the micro-batch execution
       // (StateStoreRestore/Save), not the drained memory-sink table the
       // batch contract returns — capture the stream's own explain
-      val planRaw =
+      val plan = tools.DumpPlans.normalize(
         if (name == "ev_stream_hourly") streamingPlan(spark, sfDir)
         else SparkEntry.queries(name)(spark, sfDir)
-          .queryExecution.explainString(ExplainMode.fromString("formatted"))
-      // giant binary literals (bloom sketches render as full hex dumps —
-      // hundreds of KB) would drown the audit; elide to their byte count
-      val plan = "0[xX]([0-9A-Fa-f]{64})[0-9A-Fa-f]+".r.replaceAllIn(planRaw,
-        m => s"0x${m.group(1)}…<${(m.matched.length - 2) / 2} bytes elided>")
+          .queryExecution.explainString(ExplainMode.fromString("formatted")))
       sb ++= s"\n## `$name`\n\n"
       sb ++= why.stripMargin.linesIterator.map(_.trim).mkString(" ")
       sb ++= "\n\n```\n" + plan.trim + "\n```\n"

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.obs.TaskLog
+
 /** Scale-growth measurement harness: runs the banded/inverted-list
   * operator family on [[graft.sources.ScaleSynth]] corpora at 1×/10×/100×
   * (zero files — pure hash arithmetic, the MimicSynth pattern) and fits
@@ -37,52 +39,6 @@ object Scale {
     val t0 = System.nanoTime()
     val r = body
     (r, (System.nanoTime() - t0) / 1e9)
-  }
-
-  /** Per-stage task-duration collector for the skew tier: volume
-    * exponents cannot see a hot key (the wall barely moves at
-    * local[32]'s task counts), so the skew bands report the MAX/MEDIAN
-    * task-time ratio of the dominant stages — the straggler signal that
-    * at 1000 reducers becomes the 100-TB job killer.
-    */
-  private final class TaskSkewListener extends org.apache.spark.scheduler.SparkListener {
-    private val byStage =
-      scala.collection.concurrent.TrieMap[Int, scala.collection.mutable.ArrayBuffer[Double]]()
-    override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      if (e.taskInfo != null && e.taskInfo.successful)
-        byStage.getOrElseUpdate(e.stageId,
-          scala.collection.mutable.ArrayBuffer[Double]()) += e.taskInfo.duration.toDouble
-    /** Worst max/median task-time ratio over stages that carry real work:
-      * ≥ 8 tasks (a straggler needs siblings to straggle against) and
-      * stage total ≥ 25% of the heaviest stage (skew in a trivial side
-      * stage is noise, skew in the reduce stage is the signal).
-      */
-    def worstRatio: Double = {
-      val stages = byStage.values.filter(_.size >= 8).toSeq
-      if (stages.isEmpty) -1.0
-      else {
-        val heaviest = stages.map(_.sum).max
-        val real = stages.filter(ts => ts.sum >= 0.25 * heaviest && ts.sum >= 100.0)
-        if (real.isEmpty) -1.0
-        else real.map { ts =>
-          val s = ts.sorted
-          s.last / math.max(s((s.size - 1) / 2), 1.0)
-        }.max
-      }
-    }
-    /** (max, median) task ms of the HEAVIEST stage (by total task time) —
-      * the reduce-stage readout the straggler tier reports: on a real
-      * cluster the stage barrier makes max-task the stage's wall, so
-      * max/median here IS the cluster wall penalty of the skew.
-      */
-    def heaviestStageMaxMed: (Long, Long) = {
-      val stages = byStage.values.filter(_.size >= 8).toSeq
-      if (stages.isEmpty) (-1L, -1L)
-      else {
-        val s = stages.maxBy(_.sum).sorted
-        (s.last.toLong, s((s.size - 1) / 2).toLong)
-      }
-    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -290,7 +246,7 @@ object Scale {
     // scale-invariant, so these bands measure whether the salted
     // operators keep reducer load flat as volume grows). Each op reports
     // wall + the max/median task-time ratio of its dominant stages
-    // (TaskSkewListener); the un-salted counterparts run at the same
+    // (TaskLog.worstSkewRatio); the un-salted counterparts run at the same
     // scales as the contrast. ScaleSpec additionally pins the
     // DETERMINISTIC reducer-load bound (hash(key,salt) vs hash(key)
     // partition row counts — exactly HashPartitioning's arithmetic), so
@@ -304,6 +260,15 @@ object Scale {
     // SIZING RULE (a 16-way salt that flattens at P=32 leaves ~7x at
     // P=1000; SkewOps.autoSaltBuckets derives the width from P)
     var skewLoads: Seq[(Long, Double, Double, Double, Double, Double)] = Seq()
+    // (n, wall, ratio) over two reps: min wall (JIT damping) but MAX
+    // ratio, since a straggler that shows in either rep is real
+    def skewReps(n: Long)(body: => Any): (Long, Double, Double) = {
+      val reps = Seq.fill(2) {
+        val ((_, sec), log) = TaskLog.during(spark.sparkContext)(timeIt(body))
+        (sec, log.worstSkewRatio)
+      }
+      (n, reps.map(_._1).min, reps.map(_._2).max)
+    }
     locally {
       val zipfScales = scalesEnv("SPARK_GRAFT_SCALE_ZIPF",
         Seq(100000L, 1000000L, 10000000L))
@@ -363,18 +328,7 @@ object Scale {
             loadRatio(Seq(col("key"), salt(16L)), 1000),
             loadRatio(Seq(col("key"), salt(autoB)), 1000)))
           skewOps.foreach { op =>
-            def rep(): (Double, Double) = {
-              val l = new TaskSkewListener
-              spark.sparkContext.addSparkListener(l)
-              val (_, sec) = try timeIt(op.run(z))
-              finally spark.sparkContext.removeSparkListener(l)
-              (sec, l.worstRatio)
-            }
-            val (s1, r1) = rep(); val (s2, r2) = rep()
-            // min wall (JIT damping) but MAX ratio: a straggler that shows
-            // in either rep is real — the listener can only under-observe
-            val p = (n, math.min(s1, s2), math.max(r1, r2))
-            skewResults(op.name) = skewResults(op.name) :+ p
+            skewResults(op.name) = skewResults(op.name) :+ skewReps(n)(op.run(z))
           }
         }
       }
@@ -388,18 +342,11 @@ object Scale {
         val docs = graft.sources.ScaleSynth.zipfDocuments(spark, n)
         Materialize.scoped(docs) {
           docs.count()
-          def rep(): (Double, Double) = {
-            val l = new TaskSkewListener
-            spark.sparkContext.addSparkListener(l)
-            val (_, sec) = try timeIt {
-              val (pair, release) = graft.dedup.Dedup
-                .prefixJaccardPairsReleasable(docs, "doc_id", "text", threshold = 0.9)
-              val c = pair.count(); release(); c
-            } finally spark.sparkContext.removeSparkListener(l)
-            (sec, l.worstRatio)
+          skewResults(name) = skewResults(name) :+ skewReps(n) {
+            val (pair, release) = graft.dedup.Dedup
+              .prefixJaccardPairsReleasable(docs, "doc_id", "text", threshold = 0.9)
+            val c = pair.count(); release(); c
           }
-          val (s1, r1) = rep(); val (s2, r2) = rep()
-          skewResults(name) = skewResults(name) :+ ((n, math.min(s1, s2), math.max(r1, r2)))
         }
       }
     }
@@ -443,7 +390,7 @@ object Scale {
         col("id").as("dkey"), pmod(col("id"), lit(32L)).as("grp"))
       def rollup(joined: DataFrame): Long =
         joined.groupBy("grp").agg(count(lit(1)).as("cnt"), sum("v").as("sum_v")).count()
-      def withConfs(pairs: (String, String)*)(body: => (Double, Long, Long)): (Double, Long, Long) = {
+      def withConfs[T](pairs: (String, String)*)(body: => T): T = {
         val olds = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
         pairs.foreach { case (k, v) => spark.conf.set(k, v) }
         try body finally olds.foreach {
@@ -499,17 +446,12 @@ object Scale {
       Materialize.scoped(z) {
         z.count()
         variants.foreach { case (name, confs, run) =>
-          def rep(): (Double, Long, Long) = withConfs(confs: _*) {
-            val l = new TaskSkewListener
-            spark.sparkContext.addSparkListener(l)
-            val (_, sec) = try timeIt(run())
-            finally spark.sparkContext.removeSparkListener(l)
-            val (mx, md) = l.heaviestStageMaxMed
-            (sec, mx, md)
+          def rep(): (Double, (Long, Long)) = withConfs(confs: _*) {
+            val ((_, sec), log) = TaskLog.during(spark.sparkContext)(timeIt(run()))
+            (sec, log.heaviestStageMaxMed)
           }
           rep() // untimed JIT/codegen warm per leg
-          val (s1, m1, d1) = rep(); val (s2, m2, d2) = rep()
-          val (sec, mx, md) = if (s1 <= s2) (s1, m1, d1) else (s2, m2, d2)
+          val (sec, (mx, md)) = Seq(rep(), rep()).minBy(_._1)
           stragglerRows = stragglerRows :+ ((name, n, sec, mx, md))
         }
       }
@@ -540,10 +482,10 @@ object Scale {
       // an identical-work sibling), which would make the unspilled
       // reference tier look slower than the spilling ones
       Seq("ppjoin", "minhash").foreach(op =>
-        graft.tools.SpillProbe.spawn(op, 5000L, "2g", cpus = 16, parts = 32))
+        graft.tools.SpillProbe.spawn(op, 5000L, "2g"))
       Seq("ppjoin", "minhash").foreach { op =>
         heaps.foreach { heap =>
-          graft.tools.SpillProbe.spawn(op, n, heap, cpus = 16, parts = 32) match {
+          graft.tools.SpillProbe.spawn(op, n, heap) match {
             case Some(m) => spillRows = spillRows :+ ((op, heap,
               m("wall_sec"), m("spill_mem_mb"), m("spill_disk_mb"),
               m("peak_task_exec_mb"), m("rows").toLong))
@@ -728,7 +670,7 @@ object Scale {
     sb.append("corpus-sizing discipline as RHP-LSH's autoBitsPerBand), and the\n")
     sb.append("auto-sized column shows it back under the target.\n\n")
     sb.append("(b) Wall + worst max/median task-TIME ratio across the dominant\n")
-    sb.append("stages (TaskSkewListener). Caveat honestly stated: at local[32]'s\n")
+    sb.append("stages (graft.obs.TaskLog). Caveat honestly stated: at local[32]'s\n")
     sb.append("task sizes, per-task fixed overheads flatten the row-load imbalance\n")
     sb.append("(a 4.5× load ratio reads as ~1.5-2× task time, and the salted and\n")
     sb.append("un-salted WALLS are close — salting here buys insurance measured by\n")

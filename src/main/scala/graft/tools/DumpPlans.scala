@@ -15,8 +15,10 @@ import org.apache.spark.sql.execution.ExplainMode
   */
 object DumpPlans {
   /** Ids a plan numbers per run (expression, AQE plan, query stage,
-    * codegen stage, compiled lambda), replaced so that two runs of one
-    * commit write identical files.
+    * codegen stage, compiled lambda, streaming run UUID, object hash, RDD)
+    * and the per-partition offsets a distributed prefix sum computes from
+    * the run's partitioning, replaced so that two runs of one commit write
+    * identical files.
     */
   private val runIds: Seq[(scala.util.matching.Regex, String)] = Seq(
     """#\d+""".r -> "#N",
@@ -25,10 +27,21 @@ object DumpPlans {
     """\[codegen id : \d+\]""".r -> "[codegen id : N]",
     """\*\(\d+\)""".r -> "*(N)",
     """(\$anonfun\$[\w$]*?\$)\d+""".r -> "$1N",
-    """\$\$Lambda[^\s,\])]*""".r -> """\$\$Lambda""")
+    """\$\$Lambda[^\s,\])]*""".r -> """\$\$Lambda""",
+    """[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}""".r -> "UUID",
+    """(\w)@[0-9a-f]{1,8}\b""".r -> "$1@N",
+    """RDD\[\d+\]""".r -> "RDD[N]",
+    """element_at\(map\(keys: \[[^\]]*\], values: \[[^\]]*\]\), _pid#""".r ->
+      "element_at(map(<partition offsets>), _pid#")
 
-  private[tools] def normalize(plan: String): String =
-    runIds.foldLeft(plan) { case (p, (re, to)) => re.replaceAllIn(p, to) }
+  /** The plan text DumpPlans and PlanAudit write: run ids replaced, and
+    * giant binary literals (bloom sketches dump as hundreds of KB of hex)
+    * cut to their byte count. */
+  private[graft] def normalize(plan: String): String =
+    runIds.foldLeft("0[xX]([0-9A-Fa-f]{64})[0-9A-Fa-f]+".r.replaceAllIn(plan,
+      m => s"0x${m.group(1)}…<${(m.matched.length - 2) / 2} bytes elided>")) {
+      case (p, (re, to)) => re.replaceAllIn(p, to)
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -38,11 +51,8 @@ object DumpPlans {
     val spark = graft.Session.local(graft.Session.cpus)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
-      val planRaw = graft.SparkEntry.queries(name)(spark, sfDir)
+      val plan = graft.SparkEntry.queries(name)(spark, sfDir)
         .queryExecution.explainString(ExplainMode.fromString("formatted"))
-      // elide giant binary literals (bloom sketches) as PlanAudit does
-      val plan = "0[xX]([0-9A-Fa-f]{64})[0-9A-Fa-f]+".r.replaceAllIn(planRaw,
-        m => s"0x${m.group(1)}…<${(m.matched.length - 2) / 2} bytes elided>")
       Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), normalize(plan))
       println(s"[plans] $name -> $outDir/${name}_$suffix.txt")
     }

@@ -10,13 +10,17 @@ package graft.tools
   * and the result row count — so "degrades via spill, never OOM, same
   * answer" is a measured contract, not prose.
   *
-  * args: <op: ppjoin|minhash> <nDocs> <outPath> [cpus] [shufflePartitions]
+  * args: <op: ppjoin|minhash> <nDocs> <outPath>; every child runs
+  * local[16] with 32 shuffle partitions.
   * The two ops are the repo's biggest-shuffle operators: the PPJoin
   * verification join (whose 44.6-170.5 s cross-run variance at 500k docs
   * r11 observed and never attributed) and the MinHash banded
   * self-join.
   */
 object SpillProbe {
+  private val Cpus = 16
+  private val Parts = 32
+  private val TimeoutSec = 2400L
 
   /** Spawn this probe as a restricted-heap child JVM (classpath and
     * JDK-17 --add-opens inherited from this forked process) and parse
@@ -25,33 +29,24 @@ object SpillProbe {
     * contract asserts on isDefined); the child log path is printed so
     * failures are diagnosable.
     */
-  def spawn(op: String, n: Long, heap: String,
-            cpus: Int = 16, parts: Int = 32,
-            timeoutSec: Long = 2400): Option[Map[String, Double]] = {
+  def spawn(op: String, n: Long, heap: String): Option[Map[String, Double]] = {
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val cp = System.getProperty("java.class.path")
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+    val addOpens = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.toArray(Array.empty[String]).filter(_.startsWith("--add-opens"))
     val out = java.nio.file.Files.createTempFile("graft_spill_probe", ".json")
     val log = java.io.File.createTempFile("graft_spill_probe_log", ".txt")
     log.deleteOnExit()
     try {
       val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
         s"-Xmx$heap", "-cp", cp, "graft.tools.SpillProbe",
-        op, n.toString, out.toString, cpus.toString, parts.toString))
+        op, n.toString, out.toString))
       val pb = new ProcessBuilder(cmd: _*)
       pb.redirectErrorStream(true)
       pb.redirectOutput(log)
       releaseFreeHeap()
       val proc = pb.start()
-      val done = proc.waitFor(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)
+      val done = proc.waitFor(TimeoutSec, java.util.concurrent.TimeUnit.SECONDS)
       if (!done) {
         proc.destroyForcibly()
         System.err.println(s"[spill-probe] $op n=$n heap=$heap TIMED OUT — log: $log")
@@ -102,44 +97,34 @@ object SpillProbe {
     val op = args(0)
     val n = args(1).toLong
     val outPath = args(2)
-    val cpus = if (args.length > 3) args(3).toInt else 16
-    val parts = if (args.length > 4) args(4).toInt else 32
-    val spark = graft.Session.local(cpus)
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
+    val spark = graft.Session.local(Cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", Parts)
 
-    @volatile var spillMem = 0L
-    @volatile var spillDisk = 0L
-    @volatile var peakExec = 0L
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) synchronized {
-          spillMem += e.taskMetrics.memoryBytesSpilled
-          spillDisk += e.taskMetrics.diskBytesSpilled
-          peakExec = math.max(peakExec, e.taskMetrics.peakExecutionMemory)
+    val ((rows, wall), log) = graft.obs.TaskLog.during(spark.sparkContext) {
+      val docs = graft.sources.ScaleSynth.zipfDocuments(spark, n)
+      graft.Materialize.scoped(docs) {
+        docs.count()
+        val t0 = System.nanoTime()
+        val rows = op match {
+          case "ppjoin" =>
+            val (pairs, release) = graft.dedup.Dedup
+              .prefixJaccardPairsReleasable(docs, "doc_id", "text", threshold = 0.9)
+            try pairs.count() finally release()
+          case "minhash" =>
+            graft.dedup.Dedup.minhashLshPairs(docs, "doc_id", "text").count()
+          case other => sys.error(s"unknown op: $other")
         }
-    }
-    spark.sparkContext.addSparkListener(listener)
-
-    val docs = graft.sources.ScaleSynth.zipfDocuments(spark, n)
-    val (rows, wall) = graft.Materialize.scoped(docs) {
-      docs.count()
-      val t0 = System.nanoTime()
-      val rows = op match {
-        case "ppjoin" =>
-          val (pairs, release) = graft.dedup.Dedup
-            .prefixJaccardPairsReleasable(docs, "doc_id", "text", threshold = 0.9)
-          try pairs.count() finally release()
-        case "minhash" =>
-          graft.dedup.Dedup.minhashLshPairs(docs, "doc_id", "text").count()
-        case other => sys.error(s"unknown op: $other")
+        (rows, (System.nanoTime() - t0) / 1e9)
       }
-      (rows, (System.nanoTime() - t0) / 1e9)
     }
-    spark.sparkContext.removeSparkListener(listener)
+    val metrics = log.tasks.flatMap(_.metrics)
+    val spillMem = metrics.map(_.memoryBytesSpilled).sum
+    val spillDisk = metrics.map(_.diskBytesSpilled).sum
+    val peakExec = metrics.map(_.peakExecutionMemory).maxOption.getOrElse(0L)
 
     val heapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
     val json =
-      f"""{"op":"$op","n":$n,"heap_mb":$heapMb,"cpus":$cpus,"partitions":$parts,""" +
+      f"""{"op":"$op","n":$n,"heap_mb":$heapMb,"cpus":$Cpus,"partitions":$Parts,""" +
         f""""wall_sec":$wall%.2f,"spill_mem_mb":${spillMem / 1048576.0}%.1f,""" +
         f""""spill_disk_mb":${spillDisk / 1048576.0}%.1f,""" +
         f""""peak_task_exec_mb":${peakExec / 1048576.0}%.1f,"rows":$rows}"""

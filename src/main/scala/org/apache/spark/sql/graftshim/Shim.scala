@@ -39,4 +39,7 @@ object Shim {
     */
   def normalizeFloats(e: Expression): Expression =
     org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
+  /** Waits until every listener event posted so far is delivered; throws after a minute. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpecBase
+import graft.obs.TaskLog
 import org.apache.spark.sql.functions._
 
 /** The scale-growth CONTRACT, pinned as tests (companion to the SCALE.md
@@ -224,26 +225,6 @@ class ScaleSpec extends SparkSpecBase {
         case (k, None)    => spark.conf.unset(k)
       }
     }
-    // (max, median) task ms of the heaviest stage of one action
-    class Heaviest extends org.apache.spark.scheduler.SparkListener {
-      private val byStage =
-        scala.collection.concurrent.TrieMap[Int, scala.collection.mutable.ArrayBuffer[Long]]()
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskInfo != null && e.taskInfo.successful)
-          byStage.getOrElseUpdate(e.stageId,
-            scala.collection.mutable.ArrayBuffer[Long]()) += e.taskInfo.duration
-      def maxMed: (Long, Long) = {
-        val stages = byStage.values.filter(_.size >= 8).toSeq
-        if (stages.isEmpty) (-1L, -1L)
-        else { val s = stages.maxBy(_.sum).sorted; (s.last, s((s.size - 1) / 2)) }
-      }
-    }
-    def measure(body: => Long): (Long, Long) = {
-      val l = new Heaviest
-      spark.sparkContext.addSparkListener(l)
-      try { body; l.maxMed }
-      finally spark.sparkContext.removeSparkListener(l)
-    }
     try {
       val confs = Seq(
         "spark.sql.shuffle.partitions" -> "32",
@@ -251,9 +232,10 @@ class ScaleSpec extends SparkSpecBase {
         "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
         "spark.sql.adaptive.skewJoin.enabled" -> "false")
-      def naive(): (Long, Long) = withConfs(confs: _*)(measure(
+      // (max, median) task ms of the heaviest stage of one action
+      def naive(): (Long, Long) = withConfs(confs: _*)(TaskLog.during(spark.sparkContext)(
         z.join(dim, z("key") === dim("dkey"))
-          .groupBy("grp").agg(count(lit(1)).as("cnt")).count()))
+          .groupBy("grp").agg(count(lit(1)).as("cnt")).count())._2.heaviestStageMaxMed)
       naive() // untimed JIT/codegen warm
       val (nMax, nMed) = naive()
       assert(nMed > 0, s"listener saw no reduce stage ($nMax/$nMed)")
