@@ -950,8 +950,18 @@ object Dedup {
     * (5.6×, SCALE.md), verified pairs unchanged.
     */
   def prefixJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                         threshold: Double): DataFrame =
-    prefixJaccardPairsReleasable(docs, idCol, textCol, threshold)._1
+                         threshold: Double): DataFrame = {
+    val (matchRows, ordered) = prefixJaccardCandidateRows(docs, idCol, textCol, threshold)
+    val candidates = matchRows.distinct()
+    candidates
+      .join(ordered.select(col("_id").as("doc_a"), col("_toks").as("_ta"), col("_sz").as("_sa")), "doc_a")
+      .join(ordered.select(col("_id").as("doc_b"), col("_toks").as("_tb"), col("_sz").as("_sb")), "doc_b")
+      .withColumn("_i", size(array_intersect(col("_ta"), col("_tb"))))
+      .withColumn("jacc", round(col("_i").cast("double") /
+        (col("_sa") + col("_sb") - col("_i")).cast("double"), 6))
+      .filter(col("jacc") >= threshold)
+      .select(col("doc_a"), col("doc_b"), col("jacc"))
+  }
 
   /** Pre-distinct candidate-stream size: the match rows the prefix +
     * size + positional filters admit into pair-dedup/verification — the
@@ -960,50 +970,29 @@ object Dedup {
     * drift from what the join actually does.
     */
   def prefixJaccardCandidateCount(docs: DataFrame, idCol: String, textCol: String,
-                                  threshold: Double): Long = {
-    val (matchRows, _, release) =
-      prefixJaccardCandidateRows(docs, idCol, textCol, threshold)
-    try matchRows.count() finally release()
-  }
-
-  /** [[prefixJaccardPairs]] plus the release hook for the internal pin on
-    * the per-doc sorted-token table (probed three times: prefix explode +
-    * both verification sides — [[graft.ops.DriftOps.ksReleasable]]
-    * contract: call after materializing the pairs).
-    */
-  def prefixJaccardPairsReleasable(docs: DataFrame, idCol: String, textCol: String,
-                                   threshold: Double): (DataFrame, () => Unit) = {
-    val (matchRows, ordered, release) =
-      prefixJaccardCandidateRows(docs, idCol, textCol, threshold)
-    val candidates = matchRows.distinct()
-    val out = candidates
-      .join(ordered.select(col("_id").as("doc_a"), col("_toks").as("_ta"), col("_sz").as("_sa")), "doc_a")
-      .join(ordered.select(col("_id").as("doc_b"), col("_toks").as("_tb"), col("_sz").as("_sb")), "doc_b")
-      .withColumn("_i", size(array_intersect(col("_ta"), col("_tb"))))
-      .withColumn("jacc", round(col("_i").cast("double") /
-        (col("_sa") + col("_sb") - col("_i")).cast("double"), 6))
-      .filter(col("jacc") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jacc"))
-    (out, release)
-  }
+                                  threshold: Double): Long =
+    graft.Materialize.scoped() {
+      prefixJaccardCandidateRows(docs, idCol, textCol, threshold)._1.count()
+    }
 
   /** The shared candidate builder: (pre-distinct match rows (doc_a,
-    * doc_b), pinned per-doc ordered-token table, release hook).
+    * doc_b), per-doc ordered-token table). The token table is probed
+    * three times (prefix explode + both verification sides), so it is
+    * pinned ([[graft.Materialize.pin]]).
     */
   private def prefixJaccardCandidateRows(docs: DataFrame, idCol: String, textCol: String,
-                                         threshold: Double): (DataFrame, DataFrame, () => Unit) = {
+                                         threshold: Double): (DataFrame, DataFrame) = {
     require(threshold > 0.0 && threshold < 1.0, s"threshold in (0,1), got $threshold")
     val toks = docs.select(col(idCol).as("_id"),
         explode(array_distinct(TextOps.tokens(col(textCol)))).as("tok"))
     val dfreq = toks.groupBy("tok").agg(count(lit(1)).as("_df"))
     // canonical global order (df asc, tok asc): struct sort gives it for free
-    val ordered = toks.join(dfreq, "tok")
+    val ordered = graft.Materialize.pin(toks.join(dfreq, "tok")
       .groupBy("_id")
       .agg(sort_array(collect_list(struct(col("_df"), col("tok")))).as("_ord"))
       .select(col("_id"),
         transform(col("_ord"), s => s.getField("tok")).as("_toks"),
-        size(col("_ord")).as("_sz"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        size(col("_ord")).as("_sz")))
     // ASYMMETRIC prefixes (AllPairs/PPJoin self-join refinement): orient
     // every pair so the INDEXED side is the (size, id)-smaller doc. The
     // probe side x needs the standard prefix |x| − ⌈t·|x|⌉ + 1 (its
@@ -1092,7 +1081,7 @@ object Dedup {
           posBound >= alpha)
       .select(least(col("a._id"), col("b._id")).as("doc_a"),
         greatest(col("a._id"), col("b._id")).as("doc_b"))
-    (matchRows, ordered, () => { ordered.unpersist(); () })
+    (matchRows, ordered)
   }
 
   /** DuckDB mirror of [[prefixJaccardPairs]]: the UNRESTRICTED

@@ -579,10 +579,10 @@ object Metrics {
         "(the k > n convention is an infinite interval); lower alpha's precision or add rows")
     val mu = muOpt.get
     val scores = cal.select(abs(col("y") - lit(mu)).as("s"), col("y"))
-    val (ranked, _, release) = graft.ops.GlobalRowNumber.withRowNumberAndCount(
-      scores, "_rn", col("s").asc, col("y").asc)
-    val qhat = ranked.filter(col("_rn") === k).select("s").as[Double].collect().head
-    release()
+    val qhat = graft.Materialize.scoped() {
+      graft.ops.GlobalRowNumber.withRowNumber(scores, "_rn", col("s").asc, col("y").asc)
+        .filter(col("_rn") === k).select("s").as[Double].collect().head
+    }
     df.filter(!isCal).select(col(valueCol).cast("double").as("y"))
       .agg(
         lit(nCal).as("n_cal"),
@@ -639,18 +639,17 @@ object Metrics {
     * assignment is pure integer arithmetic, (rn−1)·k div n, so any engine
     * splits identically; the k-row bucket frame then takes two windows
     * that are k-row-sized, never data-sized. The internal range-partition
-    * pin stays for the session (same contract as the w6 numbering query).
+    * pin follows [[graft.Materialize.pin]]: for the session when no scope
+    * is open (same as the w6 numbering query).
     */
   def liftTable(scored: DataFrame, scoreCol: String, idCol: String, labelCol: String, k: Int): DataFrame = {
     require(k > 0, "liftTable needs k > 0")
     val slim = scored.select(
       col(scoreCol).as("_s"), col(idCol).as("_id"), col(labelCol).cast("long").as("_y"))
-    val (numbered, total, release) = graft.ops.GlobalRowNumber.withRowNumberAndCount(
+    val (numbered, total) = graft.ops.GlobalRowNumber.withRowNumberAndCount(
       slim, "_rn", col("_s").desc, col("_id"))
     if (total == 0) {
       // degenerate input: an empty bucket table, not a divide-by-zero plan
-      // (release the range-partition pin first — same as qiniTable's branch)
-      release()
       return numbered.select(
         lit(0).as("bucket"), lit(0L).as("n_rows"), lit(0L).as("n_pos"),
         lit(0.0).as("lift"), lit(0.0).as("cum_gain")).limit(0)
@@ -670,7 +669,6 @@ object Metrics {
     // across invocations by canonical plan (one pin per query, measured
     // in PinHygieneSpec), where a per-invocation result cache does NOT
     // dedup for this plan shape and leaks one entry per bench rep.
-    // (`release` is called only on the degenerate-input path above.)
     out
   }
 
@@ -693,10 +691,9 @@ object Metrics {
     val slim = scored.select(
       col(scoreCol).as("_s"), col(idCol).as("_id"),
       col(treatedCol).cast("long").as("_t"), col(labelCol).cast("long").as("_y"))
-    val (numbered, total, release) = graft.ops.GlobalRowNumber.withRowNumberAndCount(
+    val (numbered, total) = graft.ops.GlobalRowNumber.withRowNumberAndCount(
       slim, "_rn", col("_s").desc, col("_id"))
     if (total == 0) {
-      release()
       return numbered.select(
         lit(0).as("bucket"), lit(0L).as("n_t"), lit(0L).as("n_c"),
         lit(0.0).as("uplift"), lit(0.0).as("qini")).limit(0)
@@ -727,8 +724,7 @@ object Metrics {
               col("_cc").cast("double"), 6))
           .otherwise(col("_cpt").cast("double")).as("qini"))
     // session-lifetime internal pin, deduped across invocations by
-    // canonical plan (see liftTable); release only fires on the
-    // degenerate path above
+    // canonical plan (see liftTable)
     out
   }
 

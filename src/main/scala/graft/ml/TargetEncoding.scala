@@ -113,7 +113,7 @@ object TargetEncoding {
   /** Weight-of-evidence encoding over equi-depth bins of a numeric
     * driver — the credit-scoring/feature-screening transform: bin at the
     * exact distributed quantile cutpoints
-    * ([[graft.ops.RobustStats.withBinReleasable]] — percentile_disc
+    * ([[graft.ops.RobustStats.withBin]] — percentile_disc
     * semantics, actual data values, no interpolation arithmetic), then
     * per bin `WOE = ln(((pos+0.5)/(totPos+0.5)) / ((neg+0.5)/(totNeg+0.5)))`
     * with the ±0.5 Laplace guard so one-sided bins stay finite, plus the
@@ -128,7 +128,7 @@ object TargetEncoding {
     */
   def woeBinned(df: DataFrame, valueCol: String, label: Column,
                 probs: Seq[Double]): DataFrame = {
-    val (binned, _) = graft.ops.RobustStats.withBinReleasable(df, valueCol, probs)
+    val binned = graft.ops.RobustStats.withBin(df, valueCol, probs)
     val perBin = binned
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n"), sum(label.cast("long")).as("pos"))

@@ -33,13 +33,12 @@ object DomainMix {
     *                dropped (weight 0).
     * @param hash    portable per-row hash column (e.g. md5-based permille)
     * @return        kept rows of `docs` plus `_mix_rank` (1-based rank
-    *                within domain by (hash, id)), and the release hook
-    *                for the internal range-partition pin (call after
-    *                materializing the result)
+    *                within domain by (hash, id)); the internal
+    *                range-partition pin follows [[graft.Materialize.pin]]
     */
-  def rebalanceReleasable(
+  def rebalance(
       docs: DataFrame, domainCol: String, idCol: String,
-      hash: Column, targets: Map[String, Double]): (DataFrame, () => Unit) = {
+      hash: Column, targets: Map[String, Double]): DataFrame = {
     require(targets.nonEmpty && targets.values.forall(_ > 0),
       "domain targets must be non-empty and positive")
     val spark = docs.sparkSession
@@ -54,7 +53,7 @@ object DomainMix {
     val quota = tgt.crossJoin(broadcast(tRow))
       .select(col(domainCol),
         floor(col("_w") * col("_T")).cast("long").as("_k_d"))
-    selectByQuotaReleasable(kept, counts, domainCol, idCol, hash, quota)
+    selectByQuota(kept, counts, domainCol, idCol, hash, quota)
   }
 
   /** Shared per-domain quota selection: keep each domain's `_k_d`
@@ -63,9 +62,9 @@ object DomainMix {
     * `counts` must be `kept`'s per-domain sizes; `quota` carries
     * (`domainCol`, `_k_d`).
     */
-  private def selectByQuotaReleasable(
+  private def selectByQuota(
       kept: DataFrame, counts: DataFrame, domainCol: String, idCol: String,
-      hash: Column, quota: DataFrame): (DataFrame, () => Unit) = {
+      hash: Column, quota: DataFrame): DataFrame = {
     // exclusive prefix of domain sizes in the SAME order the global rank
     // sorts (domain asc — computed in Spark so string collation matches
     // the range partitioner exactly). |domains|-row window: tiny by
@@ -75,14 +74,12 @@ object DomainMix {
     val offsets = counts
       .withColumn("_off", coalesce(sum(col("_n_d")).over(wOff), lit(0L)))
       .select(col(domainCol), col("_off"))
-    val (numbered, release) = GlobalRowNumber.withRowNumberReleasable(
+    GlobalRowNumber.withRowNumber(
       kept, "_grn", col(domainCol).asc, hash.asc, col(idCol).asc)
-    val out = numbered
       .join(broadcast(quota.join(offsets, domainCol)), domainCol)
       .withColumn("_mix_rank", col("_grn") - col("_off"))
       .filter(col("_mix_rank") <= col("_k_d"))
       .drop("_grn", "_off", "_k_d")
-    (out, release)
   }
 
   /** Temperature-scaled mixture at α = 1/2 (the Gopher/PaLM
@@ -98,8 +95,9 @@ object DomainMix {
     *
     * Readout: (domain, n_domain, n_kept, kept_id_sum) — the id sum pins
     * WHICH rows the hash-rank selection kept, not just how many.
-    * Same scale shape as [[rebalanceReleasable]]; the |domains|-row
-    * result is materialized, then the internal pin released.
+    * Same scale shape as [[rebalance]]; the |domains|-row result is
+    * materialized inside a `Materialize.scoped` body, whose end releases
+    * the internal pin.
     */
   def temperatureMixCounts(docs: DataFrame, domainCol: String,
                            idCol: String, hash: Column): DataFrame = {
@@ -109,42 +107,33 @@ object DomainMix {
       .select(col(domainCol),
         floor(sqrt(col("_n_d").cast("double")) * col("_sq"))
           .cast("long").as("_k_d"))
-    val (kept, release) =
-      selectByQuotaReleasable(docs, counts, domainCol, idCol, hash, quota)
-    val out = kept
-      .groupBy(col(domainCol))
-      .agg(count(lit(1)).as("n_kept"), sum(col(idCol)).as("kept_id_sum"))
-      .join(counts, domainCol)
-      .select(col(domainCol).as("domain"), col("_n_d").as("n_domain"),
-        col("n_kept"), col("kept_id_sum"))
-    val collected = out.cache()
-    collected.count()
-    release()
-    collected
+    graft.Materialize.scoped() {
+      val collected = selectByQuota(docs, counts, domainCol, idCol, hash, quota)
+        .groupBy(col(domainCol))
+        .agg(count(lit(1)).as("n_kept"), sum(col(idCol)).as("kept_id_sum"))
+        .join(counts, domainCol)
+        .select(col(domainCol).as("domain"), col("_n_d").as("n_domain"),
+          col("n_kept"), col("kept_id_sum"))
+        .cache()
+      collected.count()
+      collected
+    }
   }
-
-  /** [[rebalanceReleasable]] with the internal range-partition pin kept
-    * for the session (callers that hand the frame on and cannot know when
-    * materialization happens — same contract as GlobalRowNumber).
-    */
-  def rebalance(docs: DataFrame, domainCol: String, idCol: String,
-                hash: Column, targets: Map[String, Double]): DataFrame =
-    rebalanceReleasable(docs, domainCol, idCol, hash, targets)._1
 
   /** Per-domain kept counts — the mix-readout form of [[rebalance]].
-    * |domains|-row result: materialized, then the internal pin released.
+    * |domains|-row result: materialized inside a `Materialize.scoped`
+    * body, whose end releases the internal pin.
     */
   def mixCounts(docs: DataFrame, domainCol: String, idCol: String,
-                hash: Column, targets: Map[String, Double]): DataFrame = {
-    val (kept, release) = rebalanceReleasable(docs, domainCol, idCol, hash, targets)
-    val out = kept
-      .groupBy(col(domainCol).as("domain"))
-      .agg(count(lit(1)).as("n_kept"))
-    val collected = out.cache()
-    collected.count()
-    release()
-    collected
-  }
+                hash: Column, targets: Map[String, Double]): DataFrame =
+    graft.Materialize.scoped() {
+      val collected = rebalance(docs, domainCol, idCol, hash, targets)
+        .groupBy(col(domainCol).as("domain"))
+        .agg(count(lit(1)).as("n_kept"))
+        .cache()
+      collected.count()
+      collected
+    }
 
   /** DuckDB mirror of [[temperatureMixCounts]]: `hashSql` must render
     * the same hash over the table's own column names.

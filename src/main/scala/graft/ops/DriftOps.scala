@@ -120,20 +120,11 @@ object DriftOps {
     * Scale shape: the CDF is a DISTRIBUTED cumulative sum, not a global
     * window. Per-value counts (hash agg) are range-partitioned by value;
     * each partition computes its local running sum, and the per-partition
-    * offsets ride a tiny (≤ shuffle-partitions rows) broadcast join. The
-    * only single-partition window in the plan runs over those ≤ P offset
-    * rows. Null values are excluded (a null has no place on the axis).
+    * offsets reach the driver as ≤ P longs ([[RangedCounts]]) and return
+    * as a literal map. Null values are excluded (a null has no place on
+    * the axis).
     */
-  def ks(df: DataFrame, value: Column, isRef: Column): DataFrame =
-    ksReleasable(df, value, isRef)._1
-
-  /** [[ks]] plus the release hook for the internal MEMORY_AND_DISK pin
-    * (same contract as [[GlobalRowNumber.withRowNumberReleasable]]: call
-    * after materializing the statistic).
-    */
-  def ksReleasable(df: DataFrame, value: Column, isRef: Column): (DataFrame, () => Unit) = {
-    val spark = df.sparkSession
-    val parts = math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+  def ks(df: DataFrame, value: Column, isRef: Column): DataFrame = {
     val perVal = df
       .filter(value.isNotNull)
       .groupBy(value.as("v"))
@@ -142,35 +133,17 @@ object DriftOps {
         sum(when(isRef, 0L).otherwise(1L)).as("c"))
     // range-partition the distinct values; equal keys land together so the
     // intra-partition running sum is a per-partition window, not a global
-    // sort. Persisted because it feeds two passes (per-partition offsets,
-    // then the cumulative scan) — and the pin also guarantees both passes
-    // observe the SAME physical partitioning (GlobalRowNumber precedent).
-    val ranged = perVal
-      .repartitionByRange(parts, col("v"))
-      .withColumn("_pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // per-partition sums: ≤ P rows to the driver (P = shuffle partitions)
-    val pidStats = ranged.groupBy("_pid")
-      .agg(sum("r").as("pr"), sum("c").as("pc"))
-      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val cumByPid = (0 until parts).scanLeft((0L, 0L)) { case ((ar, ac), p) =>
-      val (pr, pc) = pidStats.getOrElse(p, (0L, 0L)); (ar + pr, ac + pc)
-    }
-    val (nRef, nCur) = cumByPid.last
-    val offR = (0 until parts).map(p => p -> cumByPid(p)._1).toMap
-    val offC = (0 until parts).map(p => p -> cumByPid(p)._2).toMap
-    val cumW = Window.partitionBy("_pid").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val out = ranged
-      .select(
-        col("v"),
-        (sum("r").over(cumW) + element_at(typedlit(offR), col("_pid"))).as("cum_r"),
-        (sum("c").over(cumW) + element_at(typedlit(offC), col("_pid"))).as("cum_c"))
+    // sort. The ranged pass pins the frame (RangedCounts): it feeds two
+    // passes (per-partition offsets, then the cumulative scan), and both
+    // must observe the SAME physical partitioning.
+    val ranged = RangedCounts(perVal, Seq(col("v")), col("r"), col("c"))
+    val (nRef, nCur) = (ranged.sums(0).last, ranged.sums(1).last)
+    ranged.df
+      .select(col("v"), ranged.runningSum(0).as("cum_r"), ranged.runningSum(1).as("cum_c"))
       .agg(
         round(max(abs(
           col("cum_r").cast("double") / lit(nRef) -
             col("cum_c").cast("double") / lit(nCur))), 9).as("ks"))
       .select(lit(nRef).as("n_ref"), lit(nCur).as("n_cur"), col("ks"))
-    (out, () => { ranged.unpersist(); () })
   }
 }

@@ -28,46 +28,29 @@ import org.apache.spark.sql.functions._
   */
 object GlobalRowNumber {
 
-  /** Session-lifetime pin: the internal ranged frame stays persisted (the
-    * numbered frame depends on it; unpinning before the caller acts would
-    * re-execute the upstream twice). One-shot callers that materialize the
-    * result and are done should use [[withRowNumberReleasable]] and call
-    * the release hook afterwards.
+  /** The internal ranged frame is pinned through [[graft.Materialize.pin]]:
+    * inside a `Materialize.scoped` body it is released at the scope's end,
+    * so act on the numbered frame inside that scope; with no scope open it
+    * stays for the session.
     */
   def withRowNumber(df: DataFrame, outCol: String, ord: Column*): DataFrame =
-    withRowNumberReleasable(df, outCol, ord: _*)._1
-
-  /** Same numbering, plus an explicit release hook for the internal
-    * MEMORY_AND_DISK pin. Call it after materializing the numbered frame
-    * (write/count/cache) — later actions on the returned frame remain
-    * correct (they recompute), they just lose the pin's reuse.
-    */
-  def withRowNumberReleasable(
-      df: DataFrame, outCol: String, ord: Column*): (DataFrame, () => Unit) = {
-    val (numbered, _, release) = withRowNumberAndCount(df, outCol, ord: _*)
-    (numbered, release)
-  }
+    withRowNumberAndCount(df, outCol, ord: _*)._1
 
   /** Numbering plus the input's TOTAL row count — free, because the
-    * counts pass already sums every partition — and the release hook.
-    * For callers that need both the global rank and n (quantile/decile
-    * bucket assignment, percentile ranks) without paying a second
-    * counting job over the input.
+    * counts pass already sums every partition. For callers that need both
+    * the global rank and n (quantile/decile bucket assignment, percentile
+    * ranks) without paying a second counting job over the input.
     */
   def withRowNumberAndCount(
-      df: DataFrame, outCol: String, ord: Column*): (DataFrame, Long, () => Unit) = {
+      df: DataFrame, outCol: String, ord: Column*): (DataFrame, Long) = {
     require(ord.nonEmpty, "withRowNumber needs at least one ordering column")
     val r = RangedCounts(df, ord)
-    val offsets: Map[Int, Long] = (0 until r.parts).map(p => p -> r.cum(p)).toMap
-    // P is O(shuffle.partitions) — a literal map lookup beats a join for
-    // a per-row constant; no extra shuffle, stays inside codegen.
-    val offsetCol = element_at(typedlit(offsets), col("_pid"))
     val numbered = r.df
       .withColumn(outCol,
         row_number().over(Window.partitionBy("_pid").orderBy(ord: _*)).cast("long")
-          + offsetCol)
+          + r.offset(r.cum))
       .drop("_pid")
-    (numbered, r.cum(r.parts), () => r.unpersist())
+    (numbered, r.cum(r.parts))
   }
 
   /** Per-group 1-based rank under `ord` for LOW-CARDINALITY group keys —
@@ -84,16 +67,15 @@ object GlobalRowNumber {
     * the counts ride the same broadcast.
     *
     * `ord` plus the group keys must form a total order (append a unique
-    * key) or the numbering is nondeterministic. Returns the release hook
-    * for the internal range-partition pin.
+    * key) or the numbering is nondeterministic.
     */
   def withGroupRowNumberAndSize(
       df: DataFrame, outCol: String, sizeCol: String,
-      groupCols: Seq[String], ord: Column*): (DataFrame, () => Unit) = {
+      groupCols: Seq[String], ord: Column*): DataFrame = {
     require(groupCols.nonEmpty, "group rank needs at least one group column")
     val gcols = groupCols.map(col)
     val totalOrd = gcols.map(_.asc) ++ ord
-    val (num, release) = withRowNumberReleasable(df, "_g_grn", totalOrd: _*)
+    val num = withRowNumber(df, "_g_grn", totalOrd: _*)
     // counts from the numbered frame: reuses the internal pin, no re-scan
     val counts = num.groupBy(gcols: _*).agg(count(lit(1)).as(sizeCol))
     // exclusive prefix in the SAME group order the global rank sorts;
@@ -102,10 +84,9 @@ object GlobalRowNumber {
       .rowsBetween(Window.unboundedPreceding, -1)
     val offsets = counts.withColumn("_g_off",
       coalesce(sum(col(sizeCol)).over(wOff), lit(0L)))
-    val out = num.join(broadcast(offsets), groupCols)
+    num.join(broadcast(offsets), groupCols)
       .withColumn(outCol, col("_g_grn") - col("_g_off"))
       .drop("_g_grn", "_g_off")
-    (out, release)
   }
 
   /** [[ntileFromRank]] with the group size as a COLUMN — for per-group

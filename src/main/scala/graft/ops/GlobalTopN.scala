@@ -28,7 +28,7 @@ object GlobalTopN {
   def topN(df: DataFrame, n: Long, ord: Column*): DataFrame = {
     require(ord.nonEmpty, "topN needs at least one ordering column")
     if (n <= 0L) return df.limit(0)
-    // RangedCounts persists on purpose (see its scaladoc): for NearMiss an
+    // RangedCounts pins on purpose (see its scaladoc): for NearMiss an
     // uncached two-pass re-executes the LSH kNN join — measured 2× the
     // whole query. No sort: counts need only the partitioning; the single
     // boundary partition sorts inside its row_number window.

@@ -29,21 +29,13 @@ object PageRank {
     * @return (node, pr_e12): PageRank × 10¹² after `iters` damped rounds
     *         from a uniform start, d = 0.85.
     */
-  def fixedPoint(edges: DataFrame, srcCol: String, dstCol: String, iters: Int): DataFrame =
-    fixedPointReleasable(edges, srcCol, dstCol, iters)._1
-
-  /** [[fixedPoint]] plus the release hook for the edge/degree pins: the
-    * edge table is probed `iters` times and its upstream (often a
-    * self-join) would otherwise re-execute every iteration. Call the hook
-    * after materializing the scores ([[DriftOps.ksReleasable]] contract).
-    */
-  def fixedPointReleasable(edges: DataFrame, srcCol: String, dstCol: String,
-                           iters: Int): (DataFrame, () => Unit) = {
+  def fixedPoint(edges: DataFrame, srcCol: String, dstCol: String, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 10, s"iters in [1,10], got $iters")
-    val e = edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the edge table is probed `iters` times and its upstream (often a
+    // self-join) would otherwise re-execute every iteration
+    val e = graft.Materialize.pin(
+      edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")))
+    val deg = graft.Materialize.pin(e.groupBy("src").agg(count(lit(1)).as("deg")))
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
       .distinct()
@@ -58,8 +50,7 @@ object PageRank {
       pr = contrib.groupBy("node")
         .agg((base + expr("(85 * sum(w)) div 100")).as("pr"))
     }
-    val out = pr.select(col("node"), col("pr").as("pr_e12"))
-    (out, () => { e.unpersist(); deg.unpersist(); () })
+    pr.select(col("node"), col("pr").as("pr_e12"))
   }
 
   /** DuckDB mirror of [[fixedPoint]] — the identical integer arithmetic

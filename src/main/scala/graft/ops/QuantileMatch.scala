@@ -30,21 +30,11 @@ object QuantileMatch {
     * @return (id, v, v_matched) — one row per A row
     */
   def matchQuantiles(
-      a: DataFrame, b: DataFrame, idCol: String, valueCol: String): DataFrame =
-    matchQuantilesReleasable(a, b, idCol, valueCol)._1
-
-  /** [[matchQuantiles]] plus the release hook for the two internal
-    * GlobalRowNumber pins. The hook must only fire AFTER the result is
-    * materialized: an early unpersist lets the ranking recompute under a
-    * RE-SAMPLED range partitioning whose offsets no longer match — the
-    * exact duplicate-rank hazard the pin exists to prevent.
-    */
-  def matchQuantilesReleasable(
-      a: DataFrame, b: DataFrame, idCol: String, valueCol: String): (DataFrame, () => Unit) = {
-    val (aRanked, nA, relA) = GlobalRowNumber.withRowNumberAndCount(
+      a: DataFrame, b: DataFrame, idCol: String, valueCol: String): DataFrame = {
+    val (aRanked, nA) = GlobalRowNumber.withRowNumberAndCount(
       a.select(col(idCol).as("id"), col(valueCol).as("v")),
       "rn", col("v"), col("id"))
-    val (bRanked, nB, relB) = GlobalRowNumber.withRowNumberAndCount(
+    val (bRanked, nB) = GlobalRowNumber.withRowNumberAndCount(
       b.select(col(idCol).as("_bid"), col(valueCol).as("bv")),
       "brn", col("bv"), col("_bid"))
     require(nA >= 2 && nB >= 2,
@@ -58,13 +48,12 @@ object QuantileMatch {
       .withColumn("pos", col("p") * lit((nB - 1).toDouble))
       .withColumn("i", floor(col("pos")).cast("long"))
       .withColumn("frac", col("pos") - floor(col("pos")))
-    val out = positioned
+    positioned
       .join(loDf, col("i") === col("lo_i"))
       .join(hiDf, col("i") === col("hi_i"), "left") // hi_i = brn−2 ⇔ B rank i+1
       .withColumn("_hi", coalesce(col("hi"), col("lo"))) // i = nB−1 edge
       .select(col("id"), col("v"),
         round(col("lo") + (col("_hi") - col("lo")) * col("frac"), 6).as("v_matched"))
-    (out, () => { relA(); relB() })
   }
 
   /** DuckDB mirror of [[matchQuantiles]] — same total order, position

@@ -85,39 +85,26 @@ object RobustStats {
     * (1-row) cutpoint frame then broadcasts onto the binning scan.
     */
   def quantileBins(df: DataFrame, valueCol: String, probs: Seq[Double]): DataFrame =
-    quantileBinsReleasable(df, valueCol, probs)._1
+    withBin(df.select(col(valueCol).cast("double").as("_v")), "_v", probs)
+      .groupBy("bin")
+      .agg(count(lit(1)).as("n"), min("_v").as("min_v"), max("_v").as("max_v"))
 
   /** Interior cutpoints of `valueCol` as a broadcastable 1-row frame
     * (array column `_cuts`), computed with the distributed-CDF shape
-    * described on [[quantileBins]]. Second element releases the internal
-    * pin on the ranged per-value counts ([[DriftOps]] contract). */
-  def cutpointsReleasable(df: DataFrame, valueCol: String,
-                          probs: Seq[Double]): (DataFrame, () => Unit) = {
+    * described on [[quantileBins]]; the ranged per-value counts are
+    * pinned by [[RangedCounts]] ([[graft.Materialize.pin]]). */
+  private def cutpoints(df: DataFrame, valueCol: String, probs: Seq[Double]): DataFrame = {
     require(probs.nonEmpty && probs == probs.sorted, "probs must be ascending")
-    val spark = df.sparkSession
-    val parts = math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
     val v = col(valueCol).cast("double")
     val perVal = df.filter(v.isNotNull).groupBy(v.as("_v")).agg(count(lit(1)).as("_c"))
-    val ranged = perVal
-      .repartitionByRange(parts, col("_v"))
-      .withColumn("_pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pidSums = ranged.groupBy("_pid").agg(sum("_c").as("s"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until parts).scanLeft(0L)((acc, p) => acc + pidSums.getOrElse(p, 0L))
-    val n = offsets.last
-    val offMap = (0 until parts).map(p => p -> offsets(p)).toMap
-    val cumW = org.apache.spark.sql.expressions.Window.partitionBy("_pid").orderBy("_v")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val cum = ranged.select(col("_v"),
-      (sum("_c").over(cumW) + element_at(typedlit(offMap), col("_pid"))).as("_cum"))
+    val ranged = RangedCounts(perVal, Seq(col("_v")), col("_c"))
+    val n = ranged.sums(0).last
+    val cum = ranged.df.select(col("_v"), ranged.runningSum(0).as("_cum"))
     // every cutpoint from ONE aggregation: cut(p) = min v with cum >= ceil(p*n)
-    val cutsRow = cum.agg(
+    cum.agg(
       array(probs.zipWithIndex.map { case (p, i) =>
         min(when(col("_cum") >= lit(math.ceil(p * n).toLong), col("_v"))).as(s"c$i")
       }: _*).as("_cuts"))
-    (cutsRow, () => { ranged.unpersist(); () })
   }
 
   /** Row-level equi-depth bin assignment: every row of `df` plus an
@@ -126,27 +113,15 @@ object RobustStats {
     * frame broadcasts onto the scan, so the data side takes no extra
     * shuffle. This is the composable form: downstream per-bin statistics
     * (occupancy, WOE, lift) are a groupBy away. */
-  def withBinReleasable(df: DataFrame, valueCol: String, probs: Seq[Double],
-                        binCol: String = "bin"): (DataFrame, () => Unit) = {
+  def withBin(df: DataFrame, valueCol: String, probs: Seq[Double],
+              binCol: String = "bin"): DataFrame = {
     require(!df.columns.contains("_cuts"), "input already carries a _cuts column")
-    val (cutsRow, release) = cutpointsReleasable(df, valueCol, probs)
+    val cutsRow = cutpoints(df, valueCol, probs)
     // bin = number of cutpoints strictly below v  (v <= cut_i -> bin i)
     val bin = probs.indices.foldLeft(lit(0)) { (acc, i) =>
       acc + when(col(valueCol).cast("double") > col("_cuts").getItem(i), 1).otherwise(0)
     }
-    (df.crossJoin(broadcast(cutsRow)).withColumn(binCol, bin).drop("_cuts"), release)
-  }
-
-  /** [[quantileBins]] plus the release hook for the internal pin on the
-    * ranged per-value counts ([[DriftOps.ksReleasable]] contract). */
-  def quantileBinsReleasable(df: DataFrame, valueCol: String,
-                             probs: Seq[Double]): (DataFrame, () => Unit) = {
-    val (binned, release) =
-      withBinReleasable(df.select(col(valueCol).cast("double").as("_v")), "_v", probs)
-    val out = binned
-      .groupBy("bin")
-      .agg(count(lit(1)).as("n"), min("_v").as("min_v"), max("_v").as("max_v"))
-    (out, release)
+    df.crossJoin(broadcast(cutsRow)).withColumn(binCol, bin).drop("_cuts")
   }
 
   def quantileBinsOracleSql(table: String, valueCol: String, probs: Seq[Double]): String = {

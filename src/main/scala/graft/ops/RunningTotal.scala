@@ -118,9 +118,12 @@ object RunningTotal {
     requireSlim(df, ord :+ value)
     val parts = math.max(1,
       df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+    // the value is derived AFTER the exchange, so every subtree reads the
+    // exchange's full input (the ordering keys and the value's columns),
+    // also when the caller reads the value column again afterwards
     val ranged = df
-      .withColumn("_rt_v", coalesce(value.cast("long"), lit(0L)))
       .repartitionByRange(parts, ord: _*)
+      .withColumn("_rt_v", coalesce(value.cast("long"), lit(0L)))
       .withColumn("_pid", spark_partition_id())
     val offs = ranged.groupBy("_pid").agg(sum("_rt_v").as("_pc"))
       .withColumn("_poff",

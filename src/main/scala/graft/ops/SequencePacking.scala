@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Token-budget sequence packing for LLM pretraining batches: order the
@@ -21,14 +20,12 @@ import org.apache.spark.sql.functions._
   *   3. per-partition local cumsum (parallel windows) + the partition's
   *      cumulative token offset from a literal map.
   *
-  * Two passes ⇒ the ranged frame is pinned MEMORY_AND_DISK for the
-  * duration (Spark does not reuse exchanges across QueryExecutions); the
-  * returned frame stays correct after [[Packed.unpersist]], it just
-  * recomputes.
+  * Steps 1-2 are [[RangedCounts]]' pass, whose pin on the ranged frame
+  * follows [[graft.Materialize.pin]]: act on the packed frame inside the
+  * caller's `Materialize.scoped` body, or with no scope open the pin
+  * stays for the session.
   */
 object SequencePacking {
-
-  final case class Packed(df: DataFrame, release: () => Unit)
 
   /** @param tokenCol  per-doc token count (non-negative; nulls treated as 0)
     * @param budget    tokens per packed context window (> 0)
@@ -36,27 +33,13 @@ object SequencePacking {
     *                  doc_id — or ties make offsets nondeterministic)
     */
   def packWindows(
-      docs: DataFrame, tokenCol: Column, budget: Long, ord: Column*): Packed = {
+      docs: DataFrame, tokenCol: Column, budget: Long, ord: Column*): DataFrame = {
     require(budget > 0, s"window budget must be positive, got $budget")
     require(ord.nonEmpty, "packing needs at least one ordering column")
-    val parts = math.max(1,
-      docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val ranged = docs
-      .withColumn("_tok", coalesce(tokenCol.cast("long"), lit(0L)))
-      .repartitionByRange(parts, ord: _*)
-      .withColumn("_pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // P longs to the driver — partition token totals, not rows
-    val totals: Map[Int, Long] = ranged.groupBy("_pid").agg(sum("_tok").as("t"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets: Map[Int, Long] = (0 until parts)
-      .scanLeft(0L)((acc, p) => acc + totals.getOrElse(p, 0L))
-      .zipWithIndex.map { case (off, p) => p -> off }.toMap
-    val w = Window.partitionBy("_pid").orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val endOff = sum(col("_tok")).over(w) + element_at(typedlit(offsets), col("_pid"))
-    val packed = ranged
-      .withColumn("_end", endOff)
+    val r = RangedCounts(
+      docs.withColumn("_tok", coalesce(tokenCol.cast("long"), lit(0L))), ord, col("_tok"))
+    r.df
+      .withColumn("_end", r.runningSum(0))
       .withColumn("start_off", col("_end") - col("_tok"))
       // empty docs occupy no room: they sit AT start_off in the window that
       // offset falls in; last_win = first_win keeps the range well-formed
@@ -65,6 +48,5 @@ object SequencePacking {
         when(col("_tok") > 0, floor((col("_end") - 1) / budget))
           .otherwise(floor(col("start_off") / budget)))
       .drop("_tok", "_pid", "_end")
-    Packed(packed, () => { ranged.unpersist(); () })
   }
 }

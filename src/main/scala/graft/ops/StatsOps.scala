@@ -97,66 +97,46 @@ object StatsOps {
     */
   def gini(df: DataFrame, value: Column, tie: Column): DataFrame = {
     val base = df.select(value.cast("long").as("_v"), tie.as("_tie"))
-    val (ranked, n, release) =
-      GlobalRowNumber.withRowNumberAndCount(base, "_rn", col("_v").asc, col("_tie").asc)
-    val weight = (lit(2L) * col("_rn") - lit(n) - lit(1L)).cast("decimal(19,0)")
-    val out = ranked.agg(
-      count(lit(1)).as("n_units"),
-      sum(col("_v").cast("decimal(38,0)")).as("_s"),
-      sum((weight * col("_v").cast("decimal(19,0)")).cast("decimal(38,0)")).as("_w"))
-      .select(
-        col("n_units"),
-        col("_s").cast("double").as("total"),
-        when(col("_s") === lit(0).cast("decimal(38,0)"), lit(0.0))
-          .otherwise(round(
-            col("_w").cast("double") / (lit(n.toDouble) * col("_s").cast("double")), 6))
-          .as("gini"))
-    // single-action derivation: the aggregate is the materialization
-    val collected = out.cache()
-    collected.count()
-    release()
-    collected
+    // single-action derivation: the aggregate is the materialization,
+    // inside the scope that holds the rank's internal pin
+    graft.Materialize.scoped() {
+      val (ranked, n) =
+        GlobalRowNumber.withRowNumberAndCount(base, "_rn", col("_v").asc, col("_tie").asc)
+      val weight = (lit(2L) * col("_rn") - lit(n) - lit(1L)).cast("decimal(19,0)")
+      val collected = ranked.agg(
+        count(lit(1)).as("n_units"),
+        sum(col("_v").cast("decimal(38,0)")).as("_s"),
+        sum((weight * col("_v").cast("decimal(19,0)")).cast("decimal(38,0)")).as("_w"))
+        .select(
+          col("n_units"),
+          col("_s").cast("double").as("total"),
+          when(col("_s") === lit(0).cast("decimal(38,0)"), lit(0.0))
+            .otherwise(round(
+              col("_w").cast("double") / (lit(n.toDouble) * col("_s").cast("double")), 6))
+            .as("gini"))
+        .cache()
+      collected.count()
+      collected
+    }
   }
 
   /** Average-rank table (×2 to stay integral) for one column:
     * `r2(v) = 2·(# rows with value ≤ v) − cnt(v) + 1`, i.e. twice the
-    * tie-averaged midrank. Distributed CDF: per-value counts are
-    * range-partitioned, each partition runs a local running sum, and the
-    * per-partition offsets come from a ≤ shuffle-partitions-row prefix
-    * sum that is broadcast-JOINED back — entirely lazy, so the whole
+    * tie-averaged midrank. Distributed CDF: the per-value counts' running
+    * sum is [[RunningTotal.withRunningSum]] — entirely lazy, so the whole
     * rank derivation is a subtree of the caller's single action (the
     * r10 form collected the offsets to the driver, which forced one
     * eager materialization + persist PER COLUMN — 20 AQE jobs and
     * ~4.1 s for a two-column Spearman at sf0.1; this plan runs the same
-    * math in 7 jobs / ~1.5 s). The offsets subtree MUST reuse the
-    * ranged exchange rather than re-evaluate it (range-boundary sampling
-    * is seeded per RDD id — see the contract note on
-    * [[graft.ops.RunningTotal]]); reuse holds because `perVal` is slim
-    * (both subtrees consume the identical (v, cnt) columns) and is
-    * plan-asserted in StatsOpsSpec. The SinglePartition window inside
-    * the offsets sorts ≤ `parts` rows — never data.
+    * math in 7 jobs / ~1.5 s). `perVal` is the slim (v, cnt) frame
+    * RunningTotal's exchange-reuse contract needs; the reuse is
+    * plan-asserted in StatsOpsSpec.
     */
   private def avgRank2(df: DataFrame, value: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = df.sparkSession
-    val parts = math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
     val perVal = df.filter(value.isNotNull)
       .groupBy(value.as("v")).agg(count(lit(1)).as("cnt"))
-    val ranged = perVal
-      .repartitionByRange(parts, col("v"))
-      .withColumn("_pid", spark_partition_id())
-    val offs = ranged.groupBy("_pid").agg(sum("cnt").as("_pc"))
-      .withColumn("_poff",
-        coalesce(sum("_pc").over(Window.orderBy("_pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("_pid"), col("_poff"))
-    val cumW = Window.partitionBy("_pid").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ranged.join(broadcast(offs), "_pid")
-      .select(
-        col("v"),
-        (lit(2L) * (sum("cnt").over(cumW) + col("_poff"))
-          - col("cnt") + lit(1L)).as("r2"))
+    RunningTotal.withRunningSum(perVal, col("cnt"), "_le", col("v"))._1
+      .select(col("v"), (lit(2L) * col("_le") - col("cnt") + lit(1L)).as("r2"))
   }
 
   /** Spearman rank correlation with proper tie handling (average ranks),

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Interval sweep-line analytics: peak concurrency over a table of
@@ -28,39 +27,17 @@ object SweepLine {
     * [start, end), so a span ending exactly when another starts does not
     * overlap it.
     */
-  def peakConcurrency(spans: DataFrame, startEpoch: Column, endEpoch: Column): DataFrame =
-    peakConcurrencyReleasable(spans, startEpoch, endEpoch)._1
-
-  /** [[peakConcurrency]] plus the release hook for the internal
-    * MEMORY_AND_DISK pin — the [[DriftOps.ksReleasable]] contract: the pin
-    * guarantees the offsets pass and the cumulative pass observe the SAME
-    * physical partitioning; call the hook after materializing the result.
-    */
-  def peakConcurrencyReleasable(
-      spans: DataFrame, startEpoch: Column, endEpoch: Column): (DataFrame, () => Unit) = {
-    val spark = spans.sparkSession
-    val parts = math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+  def peakConcurrency(spans: DataFrame, startEpoch: Column, endEpoch: Column): DataFrame = {
     val marks = spans.select(startEpoch.cast("long").as("t"), lit(1L).as("d"))
       .unionAll(spans.select(endEpoch.cast("long").as("t"), lit(-1L).as("d")))
     val net = marks.groupBy("t").agg(sum("d").as("nd"))
-    val ranged = net
-      .repartitionByRange(parts, col("t"))
-      .withColumn("_pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pidSums = ranged.groupBy("_pid").agg(sum("nd").as("s"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until parts).scanLeft(0L)((acc, p) => acc + pidSums.getOrElse(p, 0L))
-    val offMap = (0 until parts).map(p => p -> offsets(p)).toMap
-    val cumW = Window.partitionBy("_pid").orderBy("t")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val out = ranged
-      .select(col("t"),
-        (sum("nd").over(cumW) + element_at(typedlit(offMap), col("_pid"))).as("c"))
+    val ranged = RangedCounts(net, Seq(col("t")), col("nd"))
+    ranged.df
+      .select(col("t"), ranged.runningSum(0).as("c"))
       // max concurrency; among instants attaining it, the earliest —
       // max(struct(c, -t)) resolves both in ONE aggregation
       .agg(max(struct(col("c"), (-col("t")).as("nt"))).as("m"))
       .select(col("m.c").as("peak"), (-col("m.nt")).as("at_epoch"))
-    (out, () => { ranged.unpersist(); () })
   }
 
   /** DuckDB mirror of [[peakConcurrency]] over the same span definition

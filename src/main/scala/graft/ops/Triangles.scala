@@ -33,11 +33,11 @@ object Triangles {
     *
     * The oriented edge list is read THREE times (both wedge arms + the
     * closing-edge probe) and Spark does not reuse exchanges across those
-    * subtree copies, so it is pinned MEMORY_AND_DISK for the session —
-    * without the pin the edge build (self-join + distinct + two degree
-    * joins) re-executes three times (measured ~2× the wall time at
-    * sf0.1). Same session-pin contract as GlobalTopN/RangedCounts; the
-    * pinned frame is the slim (u, w, dw) projection, not the input.
+    * subtree copies, so it is pinned ([[graft.Materialize.pin]]: for the
+    * caller's scope, or the session when none is open) — without the pin
+    * the edge build (self-join + distinct + two degree joins) re-executes
+    * three times (measured ~2× the wall time at sf0.1). The pinned frame
+    * is the slim (u, w) projection, not the input.
     */
   def triangleCount(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val canon = edges
@@ -51,13 +51,12 @@ object Triangles {
       .groupBy("v").agg(count(lit(1)).as("deg"))
     // orient each edge from its lower-(deg, id) endpoint; canon already
     // has a < b, so on equal degrees `a` stays the source
-    val oriented = canon
+    val oriented = graft.Materialize.pin(canon
       .join(deg.withColumnRenamed("v", "a").withColumnRenamed("deg", "da"), "a")
       .join(deg.withColumnRenamed("v", "b").withColumnRenamed("deg", "db"), "b")
       .select(
         when(col("da") <= col("db"), col("a")).otherwise(col("b")).as("u"),
-        when(col("da") <= col("db"), col("b")).otherwise(col("a")).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        when(col("da") <= col("db"), col("b")).otherwise(col("a")).as("w")))
     // count per ORIENTED EDGE instead of materializing wedges: a triangle
     // {u,w,x} oriented u→w, u→x, w→x is found exactly once, on its (u→w)
     // edge, as x ∈ N_out(u) ∩ N_out(w). The out-adjacency arrays are

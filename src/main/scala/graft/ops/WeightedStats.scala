@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Exact weighted quantiles over a distributed value column.
@@ -28,49 +27,26 @@ object WeightedStats {
     */
   def weightedQuantiles(
       df: DataFrame, value: Column, weight: Column,
-      probsPermille: Seq[Int]): DataFrame =
-    weightedQuantilesReleasable(df, value, weight, probsPermille)._1
-
-  /** [[weightedQuantiles]] plus the release hook for the internal
-    * MEMORY_AND_DISK pin (GlobalRowNumber/drift_ks contract: call after
-    * materializing the result).
-    */
-  def weightedQuantilesReleasable(
-      df: DataFrame, value: Column, weight: Column,
-      probsPermille: Seq[Int]): (DataFrame, () => Unit) = {
+      probsPermille: Seq[Int]): DataFrame = {
     require(probsPermille.nonEmpty && probsPermille.forall(p => p > 0 && p < 1000),
       "quantile permilles must lie in (0, 1000)")
-    val spark = df.sparkSession
-    val parts = math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
     val perVal = df
       .filter(value.isNotNull)
       .groupBy(value.as("v"))
       .agg(sum(weight.cast("long")).as("w"))
-    val ranged = perVal
-      .repartitionByRange(parts, col("v"))
-      .withColumn("_pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // ≤ P rows to the driver: per-partition weight totals → prefix offsets
-    val pidW = ranged.groupBy("_pid").agg(sum("w").as("pw"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val cumByPid = (0 until parts).scanLeft(0L)((acc, p) => acc + pidW.getOrElse(p, 0L))
-    val total = cumByPid.last
-    val off = (0 until parts).map(p => p -> cumByPid(p)).toMap
-    val cumW = Window.partitionBy("_pid").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withCum = ranged.select(
-      col("v"),
-      (sum("w").over(cumW) + element_at(typedlit(off), col("_pid"))).as("cum"))
+    val ranged = RangedCounts(perVal, Seq(col("v")), col("w"))
+    val total = ranged.sums(0).last
+    val withCum = ranged.df.select(col("v"), ranged.runningSum(0).as("cum"))
     // one conditional min per quantile — a single pass over the CDF rows
     val picks = probsPermille.map { p =>
       min(when(col("cum") * 1000L >= lit(total) * p, col("v"))).as(s"_q$p")
     }
     val row = withCum.agg(picks.head, picks.tail: _*)
-    val out = row.select(probsPermille.map(p =>
+    row.select(probsPermille.map(p =>
         struct(lit(p).as("p_permille"), col(s"_q$p").as("wq")).as(s"_s$p")): _*)
       .select(explode(array(probsPermille.map(p => col(s"_s$p")): _*)).as("_e"))
       .select(col("_e.p_permille"), col("_e.wq"))
-    (out, () => { ranged.unpersist(); () })
   }
 
   /** DuckDB mirror of [[weightedQuantiles]] — same per-value collapse,

@@ -69,19 +69,21 @@ object ZOrder {
                   bits: Int, nBuckets: Int): DataFrame = {
     val base = df.select(x.as("_x"), y.as("_y"), tie.as("_tie"))
       .withColumn("_z", zValue(col("_x"), col("_y"), bits))
-    val (numbered, n, release) = GlobalRowNumber.withRowNumberAndCount(
-      base, "_rn", col("_z").asc, col("_tie").asc)
-    val out = numbered
-      .withColumn("bucket", GlobalRowNumber.ntileFromRank(col("_rn"), n, nBuckets))
-      .groupBy("bucket")
-      .agg(
-        count(lit(1)).as("n"),
-        min("_x").as("min_x"), max("_x").as("max_x"),
-        min("_y").as("min_y"), max("_y").as("max_y"))
-    // nBuckets-row result: materialize, then drop the range-partition pin
-    val collected = out.cache()
-    collected.count()
-    release()
-    collected
+    // nBuckets-row result: materialized inside the scope, whose end drops
+    // the range-partition pin
+    graft.Materialize.scoped() {
+      val (numbered, n) = GlobalRowNumber.withRowNumberAndCount(
+        base, "_rn", col("_z").asc, col("_tie").asc)
+      val collected = numbered
+        .withColumn("bucket", GlobalRowNumber.ntileFromRank(col("_rn"), n, nBuckets))
+        .groupBy("bucket")
+        .agg(
+          count(lit(1)).as("n"),
+          min("_x").as("min_x"), max("_x").as("max_x"),
+          min("_y").as("min_y"), max("_y").as("max_y"))
+        .cache()
+      collected.count()
+      collected
+    }
   }
 }

@@ -33,7 +33,7 @@ private[graft] object MultimodalRegistry {
         octet_length(col("text").cast("binary")).cast("long").as("n_bytes"))
       graft.ops.SequencePacking.packWindows(
         sizes, col("n_bytes"), budget = 4096L, col("doc_id"))
-        .df.select(col("doc_id"), col("n_bytes"), col("start_off"),
+        .select(col("doc_id"), col("n_bytes"), col("start_off"),
           col("first_win").as("shard_id"),
           (col("start_off") - col("first_win") * 4096L).as("shard_off"))
     }),

@@ -652,7 +652,7 @@ private[graft] object RelationalRegistry {
     // arithmetic on (rank, group size) — no data-sized window at all.
     "w7_rank_ntile" -> ((s, d) => {
       import graft.ops.GlobalRowNumber
-      val (ranked, _) = GlobalRowNumber.withGroupRowNumberAndSize(
+      val ranked = GlobalRowNumber.withGroupRowNumberAndSize(
         t(s, d, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice"),
         "_rnk", "_n", Seq("o_orderstatus"),
         col("o_totalprice").desc, col("o_orderkey").asc)
@@ -676,7 +676,7 @@ private[graft] object RelationalRegistry {
     // group rank — no 3-task window over the fact table.
     "w8_percent_rank" -> ((s, d) => {
       import graft.ops.GlobalRowNumber
-      val (ranked, _) = GlobalRowNumber.withGroupRowNumberAndSize(
+      val ranked = GlobalRowNumber.withGroupRowNumberAndSize(
         t(s, d, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice"),
         "_rnk", "_n", Seq("o_orderstatus"),
         col("o_totalprice").desc, col("o_orderkey").asc)

@@ -143,8 +143,8 @@ private[graft] object Shared {
     * a per-invocation persist would leak one pin per bench rep
     * (PinHygieneSpec). Same production shape as [[dupClustersCached]]:
     * the shard layout is computed once per (session, dataset); consumers
-    * read it. The internal range-partition pin is released after the
-    * layout materializes.
+    * read it. The layout materializes inside a `Materialize.scoped` body,
+    * whose end releases the internal range-partition pin.
     */
   private val pretrainMemo = new Session.Memo[String, DataFrame]
   private[graft] def pretrainPackedCached(s: SparkSession, d: String): DataFrame =
@@ -159,14 +159,14 @@ private[graft] object Shared {
         .select(col("doc_id"),
           coalesce(TextOps.tokenCount(col("text")).cast("bigint"), lit(0L))
             .as("n_tokens"))
-      val packed = graft.ops.SequencePacking.packWindows(
-        base, col("n_tokens"), 512L, col("doc_id"))
-      val out = packed.df
-        .select("doc_id", "n_tokens", "start_off", "first_win", "last_win")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count()
-      packed.release()
-      out
+      graft.Materialize.scoped() {
+        val out = graft.ops.SequencePacking.packWindows(
+          base, col("n_tokens"), 512L, col("doc_id"))
+          .select("doc_id", "n_tokens", "start_off", "first_win", "last_win")
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        out.count()
+        out
+      }
     }
 
   /** Exact money sum: decimal-cast accumulate (order-independent), emit double. */

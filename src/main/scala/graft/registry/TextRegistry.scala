@@ -331,7 +331,7 @@ private[graft] object TextRegistry {
         .select(col("doc_id"), TextOps.tokenCount(col("text")).cast("bigint").as("n_tokens"))
       graft.ops.SequencePacking.packWindows(
         docs, col("n_tokens"), budget = 512L, col("doc_id"))
-        .df.select("doc_id", "n_tokens", "start_off", "first_win", "last_win")
+        .select("doc_id", "n_tokens", "start_off", "first_win", "last_win")
     }),
 
     // OVERLAPPING chunks (40-token window, 20-token stride — each token in

@@ -119,7 +119,7 @@ object BigramLm {
       .select(TextOps.tokens(col(textCol)).as("_toks"))
       .select(explode(bigrams(col("_toks"))).as("_b"))
       .select(col("_b.w1").as("w1"), col("_b.w2").as("w2"))
-    // the bigram TYPE table is the model: persist it ONCE and derive the
+    // the bigram TYPE table is the model: pin it ONCE and derive the
     // three marginals and the type count N₁₊(··) from the pinned frame —
     // join-inferred null filters make the four lineages non-identical,
     // so exchange reuse alone cannot dedup them and an unpinned plan
@@ -128,27 +128,27 @@ object BigramLm {
     // table, which is 10⁹⁺ rows at corpus scale). The topK readout is
     // cached and the type-table pin released before return.
     val bcCounts = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ntot = bcCounts.count()
-    val leftM = bcCounts.groupBy("w1")
-      .agg(sum("c12").as("c1"), count(lit(1)).as("n1_w1"))
-    val rightM = bcCounts.groupBy("w2").agg(count(lit(1)).as("nc_w2"))
-    val out = bcCounts.join(leftM, "w1").join(rightM, "w2")
-      .select(
-        col("w1"), col("w2"), col("c12"), col("c1"),
-        col("n1_w1"), col("nc_w2"),
-        round(
-          (((col("c12") * 4L - 3L) * lit(ntot) +
-            col("n1_w1") * col("nc_w2") * 3L) * 1000000L).cast("double") /
-            (col("c1") * lit(ntot) * 4L).cast("double"))
-          .cast("long").as("kn_micros"))
-      .orderBy(desc("c12"), asc("w1"), asc("w2"))
-      .limit(topK)
-    // topK-row readout: materialize, then drop the type-table pin
-    val collected = out.cache()
-    collected.count()
-    bcCounts.unpersist()
-    collected
+    graft.Materialize.scoped(bcCounts) {
+      val ntot = bcCounts.count()
+      val leftM = bcCounts.groupBy("w1")
+        .agg(sum("c12").as("c1"), count(lit(1)).as("n1_w1"))
+      val rightM = bcCounts.groupBy("w2").agg(count(lit(1)).as("nc_w2"))
+      val collected = bcCounts.join(leftM, "w1").join(rightM, "w2")
+        .select(
+          col("w1"), col("w2"), col("c12"), col("c1"),
+          col("n1_w1"), col("nc_w2"),
+          round(
+            (((col("c12") * 4L - 3L) * lit(ntot) +
+              col("n1_w1") * col("nc_w2") * 3L) * 1000000L).cast("double") /
+              (col("c1") * lit(ntot) * 4L).cast("double"))
+            .cast("long").as("kn_micros"))
+        .orderBy(desc("c12"), asc("w1"), asc("w2"))
+        .limit(topK)
+        .cache()
+      // topK-row readout: materialized before the scope drops the type table
+      collected.count()
+      collected
+    }
   }
 
   /** DuckDB mirror of [[kneserNey]] — identical type-table marginals,

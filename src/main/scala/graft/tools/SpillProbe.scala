@@ -107,9 +107,8 @@ object SpillProbe {
         val t0 = System.nanoTime()
         val rows = op match {
           case "ppjoin" =>
-            val (pairs, release) = graft.dedup.Dedup
-              .prefixJaccardPairsReleasable(docs, "doc_id", "text", threshold = 0.9)
-            try pairs.count() finally release()
+            graft.dedup.Dedup
+              .prefixJaccardPairs(docs, "doc_id", "text", threshold = 0.9).count()
           case "minhash" =>
             graft.dedup.Dedup.minhashLshPairs(docs, "doc_id", "text").count()
           case other => sys.error(s"unknown op: $other")

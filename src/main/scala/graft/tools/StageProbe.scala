@@ -20,11 +20,16 @@ object StageProbe {
     val reps = if (args.length > 2) args(2).toInt else 2
     val spark = graft.Session.local(graft.Session.cpus)
     val fn = graft.SparkEntry.queries(name)
+    val sc = spark.sparkContext
     val byRep = (1 to reps).map { r =>
-      val (_, log) = TaskLog.during(spark.sparkContext) {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        println(f"[probe] rep $r wall ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      val (_, log) = TaskLog.during(sc) {
+        // the row names every job of the rep (TaskLog's per-stage site)
+        sc.setCallSite(name)
+        try {
+          val t0 = System.nanoTime()
+          fn(spark, sfDir).count()
+          println(f"[probe] rep $r wall ${(System.nanoTime() - t0) / 1e9}%.2f s")
+        } finally sc.clearCallSite()
       }
       r -> log.stages
     }

@@ -4,7 +4,8 @@ import org.apache.spark.storage.StorageLevel
 
 /** `Materialize.scoped`: pins exactly what it persisted for the length of
   * the body and releases it afterwards, also when the body throws, and
-  * never releases a caller's cache.
+  * never releases a caller's cache. `Materialize.pin` hands its frame to
+  * the innermost scope open on the calling thread, or to the session.
   */
 class MaterializeSpec extends SparkSpecBase {
 
@@ -67,5 +68,61 @@ class MaterializeSpec extends SparkSpecBase {
       assert(df.storageLevel != StorageLevel.NONE)
       assert(pinned == before)
     } finally df.unpersist()
+  }
+
+  test("a pin inside a scope is released at the scope's end, also on a throw") {
+    val (a, b) = (frame(13), frame(17))
+    val before = pinned
+    Materialize.scoped() {
+      Materialize.pin(a).count()
+      assert(a.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    }
+    assert(a.storageLevel == StorageLevel.NONE)
+    intercept[IllegalStateException] {
+      Materialize.scoped() {
+        Materialize.pin(b).count()
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(b.storageLevel == StorageLevel.NONE)
+    assert(pinned == before)
+  }
+
+  test("a pin with no scope open stays for the session") {
+    val df = frame(19)
+    try {
+      Materialize.pin(df).count()
+      assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    } finally df.unpersist()
+  }
+
+  test("a pin inside nested scopes goes to the innermost one") {
+    val (outer, inner) = (frame(23), frame(29))
+    Materialize.scoped() {
+      Materialize.pin(outer).count()
+      Materialize.scoped()(Materialize.pin(inner).count())
+      assert(inner.storageLevel == StorageLevel.NONE)
+      assert(outer.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    }
+    assert(outer.storageLevel == StorageLevel.NONE)
+  }
+
+  test("pinning a frame that is already cached leaves it alone") {
+    val df = frame(31).cache()
+    try {
+      df.count()
+      Materialize.scoped()(Materialize.pin(df).count())
+      assert(df.storageLevel != StorageLevel.NONE)
+    } finally df.unpersist()
+  }
+
+  test("a pin made on an inParallel pool thread outlives a scope on the calling thread") {
+    val frames = Seq(frame(37), frame(41))
+    try {
+      Materialize.scoped() {
+        ml.TrainHarness.inParallel(frames)(f => Materialize.pin(f).count())
+      }
+      frames.foreach(f => assert(f.storageLevel == StorageLevel.MEMORY_AND_DISK))
+    } finally frames.foreach(_.unpersist())
   }
 }

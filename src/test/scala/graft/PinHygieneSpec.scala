@@ -46,7 +46,17 @@ class PinHygieneSpec extends SparkSpecBase {
       // per-call pins (Materialize.scoped) only: the MI ranking's five
       // shared frames, the split/scored frames of the train benches
       "mimic_feature_select" -> 0, "pipeline_e2e" -> 0,
-      "ml_train_bench" -> 0, "mimic_train_bench" -> 0)
+      "ml_train_bench" -> 0, "mimic_train_bench" -> 0,
+      // the ranged and iterated operators' internal session pins
+      // (Materialize.pin with no scope open), canonical-plan deduped:
+      // one ranged frame each; two rankings for the quantile match; the
+      // edge and degree tables for PageRank
+      "drift_ks" -> 1, "ml_score_ks" -> 1, "ev_peak_concurrency" -> 1,
+      "fe_quantile_bin" -> 1, "fe_quantile_match" -> 2,
+      "a16_weighted_quantiles" -> 1, "g_pagerank3" -> 2, "g_triangles" -> 1,
+      "d_prefix_jaccard" -> 1, "d_sorted_neighbors" -> 1,
+      // the readout cache; the rank's pin goes with its scope
+      "a19_gini" -> 1)
 
   for ((q, maxPins) <- releasePattern)
     test(s"$q: leaves at most $maxPins new pin(s), and re-running adds none") {

@@ -206,34 +206,35 @@ class PlansSpec extends SparkSpecBase {
     "count table") {
     import org.apache.spark.sql.functions.col
     val docs = graft.core.Tables.table(spark, sfDir, "documents")
-    val (df, release) = graft.ops.DomainMix.rebalanceReleasable(
-      docs, "lang", "doc_id",
-      registry.Shared.permilleHash1M(col("doc_id"), ":mix"),
-      Map("en" -> 0.4, "de" -> 0.15, "es" -> 0.15, "fr" -> 0.15, "zh" -> 0.15))
-    df.collect()
-    def windows(p: SparkPlan): Seq[org.apache.spark.sql.execution.window.WindowExec] = {
-      val here = p.collect { case w: org.apache.spark.sql.execution.window.WindowExec => w }
-      val inner = p.collect { case a: AdaptiveSparkPlanExec => windows(a.executedPlan) }.flatten
-      // AQE wraps materialized stages: their plans are fields, not children
-      val stages = p.collect {
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => windows(q.plan)
-      }.flatten
-      here ++ inner ++ stages
+    graft.Materialize.scoped() {
+      val df = graft.ops.DomainMix.rebalance(
+        docs, "lang", "doc_id",
+        registry.Shared.permilleHash1M(col("doc_id"), ":mix"),
+        Map("en" -> 0.4, "de" -> 0.15, "es" -> 0.15, "fr" -> 0.15, "zh" -> 0.15))
+      df.collect()
+      def windows(p: SparkPlan): Seq[org.apache.spark.sql.execution.window.WindowExec] = {
+        val here = p.collect { case w: org.apache.spark.sql.execution.window.WindowExec => w }
+        val inner = p.collect { case a: AdaptiveSparkPlanExec => windows(a.executedPlan) }.flatten
+        // AQE wraps materialized stages: their plans are fields, not children
+        val stages = p.collect {
+          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => windows(q.plan)
+        }.flatten
+        here ++ inner ++ stages
+      }
+      val ws = windows(plan(df))
+      val (ranked, tiny) = ws.partition(_.partitionSpec.nonEmpty)
+      // the corpus-sized rank: partitioned by _pid (range-partition id), and
+      // NEVER by the 5-value domain column — no task sorts a whole domain
+      assert(ranked.nonEmpty, s"no partitioned window found:\n${plan(df)}")
+      assert(ranked.forall(w =>
+          w.partitionSpec.exists(_.toString.contains("_pid")) &&
+          !w.partitionSpec.exists(_.toString.contains("lang"))),
+        s"rank window not bounded by range pid:\n${plan(df)}")
+      // unpartitioned windows allowed ONLY over the |domains|-row count
+      // frame (its input carries the _n_d aggregate column)
+      assert(tiny.forall(_.child.output.exists(_.name == "_n_d")),
+        s"data-sized unpartitioned window:\n${plan(df)}")
     }
-    val ws = windows(plan(df))
-    val (ranked, tiny) = ws.partition(_.partitionSpec.nonEmpty)
-    // the corpus-sized rank: partitioned by _pid (range-partition id), and
-    // NEVER by the 5-value domain column — no task sorts a whole domain
-    assert(ranked.nonEmpty, s"no partitioned window found:\n${plan(df)}")
-    assert(ranked.forall(w =>
-        w.partitionSpec.exists(_.toString.contains("_pid")) &&
-        !w.partitionSpec.exists(_.toString.contains("lang"))),
-      s"rank window not bounded by range pid:\n${plan(df)}")
-    // unpartitioned windows allowed ONLY over the |domains|-row count
-    // frame (its input carries the _n_d aggregate column)
-    assert(tiny.forall(_.child.output.exists(_.name == "_n_d")),
-      s"data-sized unpartitioned window:\n${plan(df)}")
-    release()
   }
 
   test("pipeline_relational: patients dim broadcast; no cartesian; cohort " +

@@ -230,11 +230,10 @@ class PropertySpec extends SparkSpecBase {
       val rows = raw.distinctBy(_._3)
       if (rows.nonEmpty) {
         val df = rows.toDF("k", "v", "id")
-        val (got, release) = graft.ops.GlobalRowNumber.withGroupRowNumberAndSize(
+        val got = graft.ops.GlobalRowNumber.withGroupRowNumberAndSize(
           df, "rn", "n", Seq("k"), col("v").desc, col("id").asc)
         val gotMap = got.select("id", "rn", "n").collect()
           .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-        release()
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("k").orderBy(col("v").desc, col("id").asc)
         val want = df

@@ -47,6 +47,15 @@ class TaskLogSpec extends SparkSpecBase {
     } finally spark.listenerManager.unregister(slow)
   }
 
+  test("a job run under setCallSite records that site on its stages") {
+    val sc = spark.sparkContext
+    val (_, log) = TaskLog.during(sc) {
+      sc.setCallSite("x")
+      try aggregate() finally sc.clearCallSite()
+    }
+    assert(log.stages.nonEmpty && log.stages.forall(_.site == "x"), log.stages)
+  }
+
   test("a stage with fewer than 8 tasks is ignored") {
     val seven = Seq(1000L, 1000L, 1000L, 1000L, 1000L, 1000L, 90000L)
     val eight = Seq.fill(7)(100L) :+ 300L

@@ -86,14 +86,14 @@ class DriftOpsSpec extends SparkSpecBase {
     assert(math.abs(fast.getAs[Double]("ks") - naive) < 1e-9)
   }
 
-  test("ks release hook unpersists the internal pin") {
+  test("ks inside a scope: the internal pin is released at the scope's end") {
     val df = (1 to 100).map(i => ("a", i)).toDF("s", "v")
       .union((1 to 100).map(i => ("b", i)).toDF("s", "v"))
     val before = spark.sparkContext.getPersistentRDDs.size
-    val (out, release) = DriftOps.ksReleasable(df, col("v"), col("s") === "a")
-    out.collect()
-    assert(spark.sparkContext.getPersistentRDDs.size > before)
-    release()
+    graft.Materialize.scoped() {
+      DriftOps.ks(df, col("v"), col("s") === "a").collect()
+      assert(spark.sparkContext.getPersistentRDDs.size > before)
+    }
     assert(spark.sparkContext.getPersistentRDDs.size == before)
   }
 }

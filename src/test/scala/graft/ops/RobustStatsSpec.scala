@@ -43,17 +43,15 @@ class RobustStatsSpec extends SparkSpecBase {
     }
   }
 
-  test("withBinReleasable: row-level bins keep payload columns and match " +
-    "the aggregate binner") {
+  test("withBin: row-level bins keep payload columns, match the aggregate") {
     val df = (1 to 100).map(i => (i.toDouble, s"p$i")).toDF("v", "payload")
-    val (binned, release) = RobustStats.withBinReleasable(df, "v", Seq(0.5))
+    val binned = RobustStats.withBin(df, "v", Seq(0.5))
     val rows = binned.collect()
     assert(rows.length == 100 && binned.columns.toSeq == Seq("v", "payload", "bin"))
     rows.foreach { r =>
       val expected = if (r.getAs[Double]("v") <= 50.0) 0 else 1
       assert(r.getAs[Int]("bin") == expected, s"v=${r.getAs[Double]("v")}")
     }
-    release()
   }
 
   test("trimmedMean drops floor(trim*n) from each end exactly") {

@@ -24,26 +24,29 @@ class SequencePackingSpec extends SparkSpecBase {
         when(col("toks") > 0, floor((col("end_off") - 1) / 512))
           .otherwise(floor(col("start_off") / 512)))
       .select("id", "start_off", "first_win", "last_win")
-    val got = packed.df.select("id", "start_off", "first_win", "last_win")
+    val got = packed.select("id", "start_off", "first_win", "last_win")
     assert(got.exceptAll(naive).isEmpty && naive.exceptAll(got).isEmpty)
-    packed.release()
   }
 
   test("offsets are contiguous: each doc starts where the previous ended") {
     val docs = (1L to 200L).map(i => (i, i % 37)).toDF("id", "toks")
     val packed = SequencePacking.packWindows(docs, col("toks"), budget = 64L, col("id"))
-    val rows = packed.df.select("id", "start_off").orderBy("id").as[(Long, Long)].collect()
+    val rows = packed.select("id", "start_off").orderBy("id").as[(Long, Long)].collect()
     val toks = (1L to 200L).map(i => i % 37)
     val expected = toks.scanLeft(0L)(_ + _).init
     assert(rows.map(_._2).toSeq === expected)
-    packed.release()
   }
 
-  test("release() leaves the frame usable (recompute path)") {
+  test("inside a scope the pin is released at the scope's end") {
     val docs = Seq((1L, 5L), (2L, 6L)).toDF("id", "toks")
-    val packed = SequencePacking.packWindows(docs, col("toks"), budget = 4L, col("id"))
-    packed.release()
-    assert(packed.df.count() === 2L)
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val wins = graft.Materialize.scoped() {
+      val packed = SequencePacking.packWindows(docs, col("toks"), budget = 4L, col("id"))
+      assert(spark.sparkContext.getPersistentRDDs.size == before + 1)
+      packed.select("last_win").as[Long].collect().sorted.toSeq
+    }
+    assert(wins == Seq(1L, 2L))
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
   }
 
   test("rejects non-positive budget and empty ordering") {

@@ -35,12 +35,14 @@ class WeightedStatsSpec extends SparkSpecBase {
     assert(q(500) == 50.0) // smallest v with cum ≥ 50
   }
 
-  test("weightedQuantilesReleasable: release hook unpins without changing the answer") {
+  test("weightedQuantiles in a scope: the pin is released, the answer kept") {
     val df = Seq((1.0, 1L), (2.0, 1L)).toDF("v", "w")
-    val (out, release) = WeightedStats.weightedQuantilesReleasable(
-      df, col("v"), col("w"), Seq(500))
-    val got = out.collect().map(_.getAs[Double]("wq")).toSeq
-    release()
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val got = graft.Materialize.scoped() {
+      WeightedStats.weightedQuantiles(df, col("v"), col("w"), Seq(500))
+        .collect().map(_.getAs[Double]("wq")).toSeq
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
     assert(got == Seq(1.0))
   }
 }

@@ -54,9 +54,9 @@ class ScaleSpec extends SparkSpecBase {
       try {
         val cand = graft.dedup.Dedup
           .prefixJaccardCandidateCount(docs, "doc_id", "text", threshold = 0.9)
-        val (p, release) = graft.dedup.Dedup
-          .prefixJaccardPairsReleasable(docs, "doc_id", "text", threshold = 0.9)
-        try (cand, p.count()) finally release()
+        (cand, graft.Materialize.scoped() {
+          graft.dedup.Dedup.prefixJaccardPairs(docs, "doc_id", "text", threshold = 0.9).count()
+        })
       } finally docs.unpersist()
     }
     // measured ABOVE the generator's vocabulary floor (V = max(2000,
@@ -284,9 +284,9 @@ class ScaleSpec extends SparkSpecBase {
       try {
         val cand = graft.dedup.Dedup
           .prefixJaccardCandidateCount(docs, "doc_id", "text", threshold = 0.9)
-        val (p, release) = graft.dedup.Dedup
-          .prefixJaccardPairsReleasable(docs, "doc_id", "text", threshold = 0.9)
-        try (cand, p.count()) finally release()
+        (cand, graft.Materialize.scoped() {
+          graft.dedup.Dedup.prefixJaccardPairs(docs, "doc_id", "text", threshold = 0.9).count()
+        })
       } finally docs.unpersist()
     }
     val (c1, p1) = stats(5000L); val (c2, p2) = stats(50000L)
