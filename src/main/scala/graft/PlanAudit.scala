@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
 
 /** Reproducible plan-audit artifact: dumps `explain("formatted")` for the
   * headline queries together with the scale property each plan is expected
@@ -998,10 +997,9 @@ object PlanAudit {
       // the streaming query's interesting plan is the micro-batch execution
       // (StateStoreRestore/Save), not the drained memory-sink table the
       // batch contract returns — capture the stream's own explain
-      val plan = tools.DumpPlans.normalize(
-        if (name == "ev_stream_hourly") streamingPlan(spark, sfDir)
-        else SparkEntry.queries(name)(spark, sfDir)
-          .queryExecution.explainString(ExplainMode.fromString("formatted")))
+      val plan =
+        if (name == "ev_stream_hourly") tools.DumpPlans.normalize(streamingPlan(spark, sfDir))
+        else tools.DumpPlans.render(SparkEntry.queries(name)(spark, sfDir))
       sb ++= s"\n## `$name`\n\n"
       sb ++= why.stripMargin.linesIterator.map(_.trim).mkString(" ")
       sb ++= "\n\n```\n" + plan.trim + "\n```\n"

@@ -241,10 +241,12 @@ object Metrics {
     * ranking is informative. One aggregation over the scored frame.
     */
   def aucRocFromPredictions(scored: DataFrame, scoreCol: String, labelCol: String,
-      threshold: Double = 0.5): Double = {
-    val m = thresholdMetrics(scored, scoreCol, labelCol, threshold).collect()(0)
+      threshold: Double = 0.5): Double =
+    predictionAuc(thresholdMetrics(scored, scoreCol, labelCol, threshold).collect()(0))
+
+  /** [[aucRocFromPredictions]] read off a [[thresholdMetrics]] row. */
+  private[graft] def predictionAuc(m: org.apache.spark.sql.Row): Double =
     (m.getAs[Double]("recall") + m.getAs[Double]("specificity")) / 2.0
-  }
 
   /** The reference's PR-curve AUC quirk (Hap880_Final_Project.py:846-858,
     * cell 68): `auc(x=p, y=r, reorder=True)` where `p, r` come from

@@ -193,4 +193,37 @@ object Resamplers {
       .join(keep, majority(idCol) === keep("_maj_id"), "left_semi")
       .unionByName(minority)
   }
+
+  // LSH settings of the §3.3 table on the unstandardized MIMIC matrix:
+  // radii sized from measured minority NN distances in that space
+  // (median ≈ 8, p25 pair ≈ 14), so 12 captures the k-NN shell without
+  // bucket-cross-product blowup
+  private val LshBucketLength = 6.0
+  private val LshRadius = 12.0
+  private val NearMissSampleTarget = 2000L
+
+  /** The reference's cell-65 resamplers in its order: base, SMOTE,
+    * RandomOverSampler, NearMiss, RandomUnderSampler, each a function of
+    * (train, idCol, featuresCol, labelCol, seed).
+    */
+  private val byName: Seq[(String, (DataFrame, String, String, String, Long) => DataFrame)] = Seq(
+    "base" -> ((df, _, _, _, _) => df),
+    "smote" -> ((df, id, f, y, seed) => smote(df, id, y, f, seed, LshBucketLength, 5, LshRadius)),
+    "oversample" -> ((df, _, _, y, seed) => randomOversample(df, y, seed)),
+    "nearmiss" -> ((df, id, f, y, seed) =>
+      nearMiss(df, id, y, f, seed, LshBucketLength, LshRadius, NearMissSampleTarget)),
+    "undersample" -> ((df, _, _, y, seed) => randomUndersample(df, y, seed)))
+
+  /** The §3.3 strategy names, in the reference's cell-65 order. */
+  val strategies: Seq[String] = byName.map(_._1)
+
+  /** `strategy`'s resampled train (reference cells 64-65); an unknown
+    * name is rejected before any job runs.
+    */
+  def resample(strategy: String, train: DataFrame, idCol: String, featuresCol: String,
+      labelCol: String, seed: Long): DataFrame = {
+    val mk = byName.collectFirst { case (`strategy`, f) => f }.getOrElse(
+      throw new IllegalArgumentException(s"unknown resampler strategy: $strategy"))
+    mk(train, idCol, featuresCol, labelCol, seed)
+  }
 }

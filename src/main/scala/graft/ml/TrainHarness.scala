@@ -5,12 +5,13 @@ import org.apache.spark.ml.classification.{LogisticRegression, RandomForestClass
 import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The reference's modeling stage (M5–M8, M16): RF / L1-LR training,
-  * probability extraction, CV grid search, and the resampler×model
-  * benchmark harness (Hap880_Final_Project.py:471-534, 796-861).
+  * probability extraction, CV grid search, and the one §3.3 path
+  * ([[fitStrategy]]: resample → fit L1-LR → score → readout) that the
+  * resampler tables share (Hap880_Final_Project.py:471-534, 796-861).
   *
   * The training set is pinned around `fit` ([[Materialize.scoped]]) —
   * RF/LR iterate over it many times; without the pin every
@@ -252,13 +253,67 @@ object TrainHarness {
     }.toDF("n_features", "auc_roc"))
   }
 
-  /** The reference's CULMINATING benchmark (cells 64-69,
-    * Hap880_Final_Project.py:796-861) at full fidelity: for each
-    * resampler — base / SMOTE / RandomOverSampler / NearMiss /
-    * RandomUnderSampler — tune the L1-LR regularization by `numFolds`-fold
-    * CV (scoring = accuracy, the reference's GridSearchCV config), retrain
-    * at the tuned value on the full resampled train, and read out the
-    * published metric row on the fixed test set:
+  /** The sklearn regularization at train size `n`: liblinear minimizes
+    * ||w||₁ + C·Σloss, MLlib's L1-LR the mean loss plus λ||w||₁, so
+    * λ = 1/(n·C). The map is its own inverse: applied to a λ it gives
+    * that λ's C.
+    */
+  def sklearnReg(n: Long, c: Double): Double = 1.0 / (n * c)
+
+  /** One §3.3 strategy fitted and scored, for the caller's readout:
+    * `scored` is the test set with `score` and `margin`, pinned while the
+    * readout runs. Each metric runs its job only when the readout reads
+    * it, so a caller runs only the metric jobs it publishes.
+    */
+  final class L1Fit private[TrainHarness] (
+      val n: Long, val regParam: Double, val scored: DataFrame, labelCol: String) {
+    /** The 0.5-threshold [[Metrics.thresholdMetrics]] row: one job, on first read. */
+    lazy val at05: Row = Metrics.thresholdMetrics(scored, "score", labelCol, 0.5).collect()(0)
+    def metric(name: String): Double = at05.getAs[Double](name)
+    def cell(name: String): Long = at05.getAs[Long](name)
+    /** The reference's published `auc_roc`, from the same row. */
+    def predAuc: Double = Metrics.predictionAuc(at05)
+    /** The probability-ranking AUC. */
+    def aucRoc: Double = Metrics.aucRoc(scored, "score", labelCol)
+  }
+
+  /** The reference's §3.3 step for one strategy (cells 64-69,
+    * Hap880_Final_Project.py:796-861): resample the train
+    * ([[Resamplers.resample]]), fit L1-LR, score the test set, and hand
+    * the pinned scores to `readout`.
+    *
+    * The resampled `(features, label)` frame is pinned and counted (n),
+    * then compacted ([[compactForFit]]) and pinned again: the fit, and a
+    * CV grid before it, iterate that copy. `regParam(train, n)` picks λ
+    * over the pinned compacted train: a fixed value, [[sklearnReg]] at a
+    * fixed C, or a [[gridSearchLr]] over a C grid. Every pin goes when
+    * the call returns or throws; a frame the caller cached stays cached.
+    * Callers map over their strategies, in order or with [[inParallel]].
+    */
+  def fitStrategy[T](
+      strategy: String, train: DataFrame, test: DataFrame,
+      idCol: String, featuresCol: String, labelCol: String, seed: Long,
+      regParam: (DataFrame, Long) => Double
+  )(readout: L1Fit => T): T = {
+    val raw = Resamplers.resample(strategy, train, idCol, featuresCol, labelCol, seed)
+      .select(col(featuresCol), col(labelCol))
+    Materialize.scoped(raw) {
+      val n = raw.count()
+      val fit = compactForFit(raw, n)
+      Materialize.scoped(fit) {
+        fit.count()
+        val reg = regParam(fit, n)
+        val scored = logisticL1Margins(fit, test, featuresCol, labelCol, reg)
+        Materialize.scoped(scored)(readout(new L1Fit(n, reg, scored, labelCol)))
+      }
+    }
+  }
+
+  /** The reference's CULMINATING table (cells 64-69) at full fidelity:
+    * for each strategy in `include`, in that order, [[fitStrategy]] with
+    * λ tuned by 5-fold CV over the reference's GridSearchCV grid
+    * C ∈ {0.01, 0.1, 1, 10} (scoring = accuracy) at the strategy's n,
+    * then the published metric row on the fixed test set:
     * f1 / precision / recall / accuracy at threshold 0.5, the reference's
     * `auc_roc` — which it computes from `roc_curve(y, pred)` on BINARY
     * predictions, so it equals (recall + specificity) / 2; that quirk is
@@ -266,127 +321,43 @@ object TrainHarness {
     * swapped-axis `auc_pr` over decision margins ([[Metrics.aucPrReordered]]),
     * and the confusion-matrix cells.
     *
-    * Scale shape: each resampled train is pinned once around the CV grid
-    * + final fit (every fit iterates the frame), released before the next
-    * strategy; metrics are two aggregations over one pinned scored frame.
-    * The result is |strategies| driver-side scalar rows.
+    * `include` restricts the table to named strategies: the per-round
+    * bench row runs only the published winner ("undersample"); the full
+    * table is the one-off graft.tools.ResamplerTable, re-run when
+    * TrainHarness / MimicPipeline / Resamplers change (MimicTrainSpec's
+    * cell-66 test still fits all five strategies at the committed C
+    * values every suite run, so the published-table claim keeps
+    * per-round coverage). The result is one row per included strategy.
     */
   def resamplerBenchmark(
       train: DataFrame, test: DataFrame,
       idCol: String, featuresCol: String, labelCol: String,
-      // the reference's GridSearchCV C grid (sklearn C is INVERSE
-      // regularization normalized by n: λ ≈ 1/(n·C), so the faithful
-      // MLlib grid is per-strategy — computed from each resampled n)
-      cGrid: Seq[Double] = Seq(0.01, 0.1, 1.0, 10.0),
-      numFolds: Int = 5,
-      smoteRadius: Double = 3.0, smoteBucketLength: Double = 2.0,
-      nearMissRadius: Double = 3.0, nearMissSampleTarget: Long = 2000L,
       seed: Long = 42L,
-      // the CV grid only RANKS the four λ values — half the iteration
-      // budget of the final fit is enough for a stable ranking and halves
-      // the dominant cost (20 fits × 5 strategies)
-      cvMaxIter: Int = 25,
-      // r14 (verdict #6): restrict the table to named strategies. The
-      // per-round bench runs only the published winner ("undersample");
-      // the full 5x(CV+final) table moved to the one-off
-      // graft.tools.ResamplerTable, re-run when TrainHarness /
-      // MimicPipeline / Resamplers change (MimicTrainSpec's cell-66 test
-      // still fits all five strategies at the committed C values every
-      // suite run, so the published-table claim keeps per-round coverage)
-      include: Seq[String] = Seq("base", "smote", "oversample", "nearmiss", "undersample")
+      include: Seq[String] = Resamplers.strategies
   ): DataFrame = {
-    // the reference's cell-65 dataset order: base, SMOTE, ROS, NearMiss, RUS
-    val allStrategies: Seq[(String, () => DataFrame)] = Seq(
-      "base" -> (() => train),
-      "smote" -> (() => Resamplers.smote(train, idCol, labelCol, featuresCol,
-        seed, smoteBucketLength, 5, smoteRadius)),
-      "oversample" -> (() => Resamplers.randomOversample(train, labelCol, seed)),
-      "nearmiss" -> (() => Resamplers.nearMiss(train, idCol, labelCol, featuresCol,
-        seed, smoteBucketLength, nearMissRadius, nearMissSampleTarget)),
-      "undersample" -> (() => Resamplers.randomUndersample(train, labelCol, seed)))
-    val unknown = include.filterNot(allStrategies.map(_._1).toSet)
-    require(unknown.isEmpty, s"unknown resampler strategies: $unknown")
-    val strategies = allStrategies.filter(p => include.contains(p._1))
     val s = org.apache.spark.sql.SparkSession.active
     import s.implicits._
-    strategies.map { case (name, mk) =>
-      // one materialized copy per strategy: the CV grid re-reads it
-      // numFolds × |regParams| times and the final fit maxIter more.
-      // Compacted to a few SIZE-ADAPTED partitions first: a metrics-scale
-      // train spread over the session's full partition count makes every
-      // L-BFGS iteration a swarm of sub-millisecond tasks (measured
-      // 107 s → 17 s for the ROS grid at 8 partitions + concurrent fits;
-      // the 4,720-row NearMiss/RUS trains go to 2 partitions — per-task
-      // gradient buffers are 3,019-wide, so 8 near-empty tasks cost more
-      // merge than compute). The target is capped at the input's own
-      // partition count so a genuinely large train keeps its natural
-      // parallelism, and the shrink is a shuffle-free coalesce.
-      // The compacted copy reads the pinned raw one, which stays pinned
-      // until the strategy ends.
-      val raw = mk().select(col(featuresCol), col(labelCol))
-      Materialize.scoped(raw) {
-        val nTrain = raw.count()
-        val resampled = compactForFit(raw, nTrain)
-        Materialize.scoped(resampled) {
-          resampled.count()
-          // sklearn-equivalent λ per C at THIS strategy's n (liblinear
-          // minimizes ||w||₁ + C·Σloss ⇒ λ = 1/(n·C) in MLlib's mean-loss
-          // parameterization)
-          val regParams = cGrid.map(c => 1.0 / (nTrain * c))
-          val (bestReg, cvAcc) =
-            gridSearchLr(resampled, featuresCol, labelCol, regParams, numFolds,
-              seed, cvMaxIter, parallelism = 8)
-          val bestC = 1.0 / (nTrain * bestReg)
-          val scored = logisticL1Margins(resampled, test, featuresCol, labelCol,
-            regParam = bestReg)
-          Materialize.scoped(scored) {
-            val m = Metrics.thresholdMetrics(scored, "score", labelCol, 0.5).collect()(0)
-            val recall = m.getAs[Double]("recall")
-            val spec = m.getAs[Double]("specificity")
-            val aucPr = Metrics.aucPrReordered(scored, "margin", labelCol)
-            val prec = m.getAs[Double]("precision_")
-            val f1 = if (prec + recall == 0.0) 0.0 else 2 * prec * recall / (prec + recall)
-            (name, nTrain, bestC, cvAcc, f1, prec, recall,
-              m.getAs[Double]("accuracy"), (recall + spec) / 2.0, aucPr,
-              m.getAs[Long]("tn"), m.getAs[Long]("fp"),
-              m.getAs[Long]("fn"), m.getAs[Long]("tp"))
-          }
-        }
+    include.map { name =>
+      var cvAcc = 0.0
+      // the CV grid only RANKS the four λ values: half the final fit's
+      // iteration budget (25) is enough for a stable ranking and halves
+      // the dominant cost (20 fits per strategy)
+      def tune(fit: DataFrame, n: Long): Double = {
+        val (bestReg, acc) = gridSearchLr(fit, featuresCol, labelCol,
+          Seq(0.01, 0.1, 1.0, 10.0).map(sklearnReg(n, _)), 5, seed, 25, parallelism = 8)
+        cvAcc = acc
+        bestReg
+      }
+      fitStrategy(name, train, test, idCol, featuresCol, labelCol, seed, tune) { f =>
+        val recall = f.metric("recall")
+        val prec = f.metric("precision_")
+        val f1 = if (prec + recall == 0.0) 0.0 else 2 * prec * recall / (prec + recall)
+        (name, f.n, sklearnReg(f.n, f.regParam), cvAcc, f1, prec, recall,
+          f.metric("accuracy"), f.predAuc, Metrics.aucPrReordered(f.scored, "margin", labelCol),
+          f.cell("tn"), f.cell("fp"), f.cell("fn"), f.cell("tp"))
       }
     }.toDF("strategy", "n_train", "best_c", "cv_accuracy", "f1",
       "precision_", "recall", "accuracy", "auc_roc", "auc_pr",
       "tn", "fp", "fn", "tp")
-  }
-
-  /** The M16 benchmark: resampling strategy × metrics table. Returns one
-    * row per strategy with AUC-ROC and threshold metrics — the engine's
-    * top-level "query" (reference py:796-861 builds the same table).
-    */
-  def benchmark(
-      train: DataFrame, test: DataFrame,
-      idCol: String, featuresCol: String, labelCol: String,
-      seed: Long = 42L
-  ): DataFrame = {
-    val strategies: Seq[(String, DataFrame)] = Seq(
-      "base"       -> train,
-      "undersample" -> Resamplers.randomUndersample(train, labelCol, seed),
-      "oversample"  -> Resamplers.randomOversample(train, labelCol, seed),
-      "smote"       -> Resamplers.smote(train, idCol, labelCol, featuresCol, seed),
-      "nearmiss"    -> Resamplers.nearMiss(train, idCol, labelCol, featuresCol, seed)
-    )
-    val s = org.apache.spark.sql.SparkSession.active
-    import s.implicits._
-    strategies.map { case (name, resampled) =>
-      // AUC and threshold metrics are two actions over the same scored
-      // frame — pin it so the model transform (and everything above the
-      // cached feature table) runs once per strategy, not per metric
-      val scored = logisticL1Scores(resampled, test, featuresCol, labelCol)
-      Materialize.scoped(scored) {
-        val auc = Metrics.aucRoc(scored, "score", labelCol)
-        val m = Metrics.thresholdMetrics(scored, "score", labelCol, 0.5).collect()(0)
-        (name, auc, m.getAs[Double]("accuracy"), m.getAs[Double]("recall"),
-          m.getAs[Double]("precision_"), m.getAs[Double]("specificity"))
-      }
-    }.toDF("strategy", "auc_roc", "accuracy", "recall", "precision_", "specificity")
   }
 }

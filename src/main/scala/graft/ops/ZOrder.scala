@@ -69,21 +69,17 @@ object ZOrder {
                   bits: Int, nBuckets: Int): DataFrame = {
     val base = df.select(x.as("_x"), y.as("_y"), tie.as("_tie"))
       .withColumn("_z", zValue(col("_x"), col("_y"), bits))
-    // nBuckets-row result: materialized inside the scope, whose end drops
-    // the range-partition pin
-    graft.Materialize.scoped() {
-      val (numbered, n) = GlobalRowNumber.withRowNumberAndCount(
-        base, "_rn", col("_z").asc, col("_tie").asc)
-      val collected = numbered
-        .withColumn("bucket", GlobalRowNumber.ntileFromRank(col("_rn"), n, nBuckets))
-        .groupBy("bucket")
-        .agg(
-          count(lit(1)).as("n"),
-          min("_x").as("min_x"), max("_x").as("max_x"),
-          min("_y").as("min_y"), max("_y").as("max_y"))
-        .cache()
-      collected.count()
-      collected
-    }
+    val (numbered, n) = GlobalRowNumber.withRowNumberAndCount(
+      base, "_rn", col("_z").asc, col("_tie").asc)
+    // the ranged pin stays for the session (canonical-plan deduped, as in
+    // Metrics.liftTable): a cached readout would embed this run's sampled
+    // offsets in its plan and add a cache entry per invocation
+    numbered
+      .withColumn("bucket", GlobalRowNumber.ntileFromRank(col("_rn"), n, nBuckets))
+      .groupBy("bucket")
+      .agg(
+        count(lit(1)).as("n"),
+        min("_x").as("min_x"), max("_x").as("max_x"),
+        min("_y").as("min_y"), max("_y").as("max_y"))
   }
 }

@@ -102,6 +102,15 @@ object MimicPipeline {
   /** (HADM_ID, label, split, features) with features of width 3,019. */
   def assembled(s: SparkSession): DataFrame = memoized(s)._1
 
+  /** The [[assembled]] matrix's 36,047 / 9,012 split as (train, test),
+    * each (id, features, label).
+    */
+  def trainTest(s: SparkSession): (DataFrame, DataFrame) = {
+    val full = assembled(s)
+    (full.filter(col("split") === "train").select("id", "features", "label"),
+      full.filter(col("split") === "test").select("id", "features", "label"))
+  }
+
   /** The matrix build at `f`× MIMIC scale — NOT memoized (the Scale
     * harness times one build and unpersists the result; production
     * sessions use [[assembled]]). Returned frame is persisted and

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.Materialize
 import graft.core.Tables
-import graft.ml.{Features, Metrics, Resamplers, TrainHarness}
+import graft.ml.{Features, TrainHarness}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -65,32 +65,19 @@ object ReadmissionPipeline {
 
   /** Full composed pipeline → one metrics row per resampling strategy. */
   def run(s: SparkSession, dir: String, seed: Long = 42L): DataFrame = {
-    val full = featureTable(s, dir)
-
     // 4. split → resample → train → metrics (§3.3)
-    val (train, test) = Features.splitByHash(full, "id")
+    val (train, test) = Features.splitByHash(featureTable(s, dir), "id")
     // r14: run-scoped pins + overlapped strategies (the rfSweep
-    // pattern, guide §2.6) — previously each strategy's fit cache
-    // re-materialized the feature table (VectorAssembler + pivot join)
-    // from the memo, three times sequentially; now the split frames
-    // materialize once and the three independent seeded fits back-fill
-    // each other's few-task L-BFGS tails. Same fits, same metrics.
+    // pattern, guide §2.6): the split frames materialize once and the
+    // three independent seeded fits back-fill each other's few-task
+    // L-BFGS tails. Same fits, same metrics.
     import s.implicits._
     Materialize.scoped(train, test) {
-      val strategies = Seq(
-        "base"        -> (() => train),
-        "undersample" -> (() => Resamplers.randomUndersample(train, "label", seed)),
-        "oversample"  -> (() => Resamplers.randomOversample(train, "label", seed)))
-      TrainHarness.inParallel(strategies) { case (name, mk) =>
-        // two metric actions per strategy — pin the scored frame so the
-        // LR transform (and the resample above it) runs once
-        val scored = TrainHarness.logisticL1Scores(mk(), test, "features", "label")
-        Materialize.scoped(scored) {
-          val auc = Metrics.aucRoc(scored, "score", "label")
-          val m = Metrics.thresholdMetrics(scored, "score", "label", 0.5).collect()(0)
-          (name, auc, m.getAs[Double]("accuracy"), m.getAs[Double]("recall"),
-            m.getAs[Double]("precision_"), m.getAs[Double]("specificity"),
-            m.getAs[Long]("tp") + m.getAs[Long]("fn"))
+      TrainHarness.inParallel(Seq("base", "undersample", "oversample")) { name =>
+        TrainHarness.fitStrategy(name, train, test, "id", "features", "label", seed,
+            (_, _) => 0.01) { f =>
+          (name, f.aucRoc, f.metric("accuracy"), f.metric("recall"),
+            f.metric("precision_"), f.metric("specificity"), f.cell("tp") + f.cell("fn"))
         }
       }.toDF("strategy", "auc_roc", "accuracy", "recall", "precision_", "specificity", "n_pos_test")
     }

@@ -165,30 +165,16 @@ private[graft] object MimicRegistry {
     // balanced train predicts both classes. Bands pinned in
     // MimicTrainSpec.
     "mimic_train_bench" -> ((s, d) => {
-      val full = graft.pipeline.MimicPipeline.assembled(s)
-      val train = full.filter(col("split") === "train").select("id", "features", "label")
-      val test = full.filter(col("split") === "test").select("id", "features", "label")
-      val strategies = Seq(
-        "base" -> train,
-        "undersample" -> graft.ml.Resamplers.randomUndersample(train, "label", 42L))
+      val (train, test) = graft.pipeline.MimicPipeline.trainTest(s)
       import s.implicits._
       // r14: the two strategies are independent seeded fits over the
       // memoized matrix — overlap them (TrainHarness.inParallel, guide
       // §2.6). Same fits, same AUCs.
-      graft.ml.TrainHarness.inParallel(strategies) { case (name, tr) =>
-        val n = tr.count()
-        // size-adapted compaction before the iterated fit (shared
-        // contract: ~8k rows/task, capped at the input's own parallelism,
-        // shuffle-free coalesce when shrinking)
-        val fit = graft.ml.TrainHarness.compactForFit(
-          tr.select(col("features"), col("label")), n)
-        Materialize.scoped(fit) {
-          fit.count()
-          val scored = graft.ml.TrainHarness.logisticL1Scores(fit, test,
-            "features", "label", regParam = 1.0 / (n * 0.01))
-          Materialize.scoped(scored)((name, n,
-            math.round(graft.ml.Metrics.aucRoc(scored, "score", "label") * 1000) / 1000.0,
-            math.round(graft.ml.Metrics.aucRocFromPredictions(scored, "score", "label") * 1000) / 1000.0))
+      graft.ml.TrainHarness.inParallel(Seq("base", "undersample")) { name =>
+        graft.ml.TrainHarness.fitStrategy(name, train, test, "id", "features", "label",
+            42L, (_, n) => graft.ml.TrainHarness.sklearnReg(n, 0.01)) { f =>
+          (name, f.n, math.round(f.aucRoc * 1000) / 1000.0,
+            math.round(f.predAuc * 1000) / 1000.0)
         }
       }.toDF("strategy", "n_train", "auc_roc", "auc_pred")
     }),
@@ -199,8 +185,7 @@ private[graft] object MimicRegistry {
     // ipynb cell 64); this row is the 1:1 BENCH comparable at identical
     // data scale and shape
     "mimic_cv_grid" -> ((s, d) => {
-      val raw = graft.pipeline.MimicPipeline.assembled(s)
-        .filter(col("split") === "train").select("features", "label")
+      val raw = graft.pipeline.MimicPipeline.trainTest(s)._1.select("features", "label")
       // compacted before the grid: the memoized matrix carries the
       // session's shuffle-partition count, and 20 L-BFGS fits over a
       // 36k-row frame in 32 near-empty partitions are a per-iteration
@@ -224,9 +209,7 @@ private[graft] object MimicRegistry {
     // headline tree counts (their cell-40 config: n=300, AUC 0.695;
     // sklearn-default band 0.623) — AUC bands pinned in MimicTrainSpec
     "mimic_rf_bench" -> ((s, d) => {
-      val full = graft.pipeline.MimicPipeline.assembled(s)
-      val train = full.filter(col("split") === "train").select("id", "features", "label")
-      val test = full.filter(col("split") === "test").select("id", "features", "label")
+      val (train, test) = graft.pipeline.MimicPipeline.trainTest(s)
       val under = graft.ml.Resamplers.randomUndersample(train, "label", 42L)
       graft.ml.TrainHarness.rfSweep(under, test, "features", "label", Seq(100, 300))
     }),
@@ -247,13 +230,9 @@ private[graft] object MimicRegistry {
     // THIS row: the RUS smoke must land best_c 0.01 / auc_roc in the
     // committed band, so a drifted smoke can't ship silently.
     "mimic_resampler_bench" -> ((s, d) => {
-      val full = graft.pipeline.MimicPipeline.assembled(s)
-      val train = full.filter(col("split") === "train").select("id", "features", "label")
-      val test = full.filter(col("split") === "test").select("id", "features", "label")
+      val (train, test) = graft.pipeline.MimicPipeline.trainTest(s)
       val r = graft.ml.TrainHarness.resamplerBenchmark(
-        train, test, "id", "features", "label",
-        smoteRadius = 12.0, smoteBucketLength = 6.0,
-        nearMissRadius = 12.0, include = Seq("undersample"))
+        train, test, "id", "features", "label", include = Seq("undersample"))
       r.select(col("strategy"), col("n_train"), col("best_c"),
         round(col("cv_accuracy"), 3).as("cv_accuracy"),
         round(col("f1"), 3).as("f1"),
@@ -264,9 +243,6 @@ private[graft] object MimicRegistry {
         round(col("auc_pr"), 3).as("auc_pr"),
         col("tn"), col("fp"), col("fn"), col("tp"))
     }),
-      // radii sized from measured minority NN distances in this space
-      // (median ≈ 8, p25 pair ≈ 14): 12 captures the k-NN shell without
-      // bucket-cross-product blowup
 
     // The reference's most instructive NEGATIVE result (cell 56 /
     // py:683-737, rows-only — tree RNG): RF trained on the
@@ -284,9 +260,7 @@ private[graft] object MimicRegistry {
     // with the oversample row required to sit on the pathological side
     // of the undersample row on BOTH axes.
     "mimic_rf_oversample" -> ((s, d) => {
-      val full = graft.pipeline.MimicPipeline.assembled(s)
-      val train = full.filter(col("split") === "train").select("id", "features", "label")
-      val test = full.filter(col("split") === "test").select("id", "features", "label")
+      val (train, test) = graft.pipeline.MimicPipeline.trainTest(s)
       val over = graft.ml.Resamplers.randomOversample(train, "label", 42L)
       val scored = graft.ml.TrainHarness.randomForestScores(
         over, test, "features", "label", numTrees = 50, seed = 42L,
@@ -352,9 +326,7 @@ private[graft] object MimicRegistry {
     // asserts the saturation plateau (all points within a band, all well
     // above chance), the part of the published curve the data supports.
     "mimic_feature_sweep" -> ((s, d) => {
-      val full = graft.pipeline.MimicPipeline.assembled(s)
-      val train = full.filter(col("split") === "train").select("features", "label")
-      val test = full.filter(col("split") === "test").select("features", "label")
+      val (train, test) = graft.pipeline.MimicPipeline.trainTest(s)
       val vocab = graft.pipeline.MimicPipeline.vocabulary(s)
       val nv = vocab.length
       val cats = graft.pipeline.MimicPipeline.diagCats

@@ -343,20 +343,13 @@ private[graft] object MlRegistry {
     // M16: resampler benchmark table over L1 LR (rows-only)
     "ml_train_bench" -> ((s, d) => {
       val (train, test) = graft.ml.Features.splitByHash(graft.ml.Features.assembled(s, d), "id")
-      val strategies = Seq(
-        "base" -> train,
-        "undersample" -> graft.ml.Resamplers.randomUndersample(train, "label"),
-        "oversample" -> graft.ml.Resamplers.randomOversample(train, "label"))
       import s.implicits._
       // r14: three independent seeded fits — overlapped
       // (TrainHarness.inParallel, guide §2.6); same fits, same metrics
-      graft.ml.TrainHarness.inParallel(strategies) { case (name, resampled) =>
-        // pinned: AUC + threshold metrics are two actions on this frame
-        val scored = graft.ml.TrainHarness.logisticL1Scores(resampled, test, "features", "label")
-        Materialize.scoped(scored) {
-          val auc = graft.ml.Metrics.aucRoc(scored, "score", "label")
-          val m = graft.ml.Metrics.thresholdMetrics(scored, "score", "label", 0.5).collect()(0)
-          (name, auc, m.getAs[Double]("accuracy"), m.getAs[Double]("recall"))
+      graft.ml.TrainHarness.inParallel(Seq("base", "undersample", "oversample")) { name =>
+        graft.ml.TrainHarness.fitStrategy(name, train, test, "id", "features", "label",
+            42L, (_, _) => 0.01) { f =>
+          (name, f.aucRoc, f.metric("accuracy"), f.metric("recall"))
         }
       }.toDF("strategy", "auc_roc", "accuracy", "recall")
     }),

@@ -43,6 +43,23 @@ object DumpPlans {
       case (p, (re, to)) => re.replaceAllIn(p, to)
     }
 
+  /** The plan text of a registry row's frame, as both tools write it:
+    * [[normalize]]d `explain("formatted")`, headed by a note when the
+    * executed plan is a bare scan of data the builder already produced
+    * (a `LocalTableScan`, or an RDD scan of a `parallelize`d result): the
+    * row computed while it was built, so its plan shows none of that work.
+    */
+  private[graft] def render(df: org.apache.spark.sql.DataFrame): String = {
+    import org.apache.spark.sql.execution.{LocalTableScanExec, RDDScanExec, WholeStageCodegenExec}
+    val plan = normalize(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+    df.queryExecution.executedPlan match {
+      case _: LocalTableScanExec | _: RDDScanExec | WholeStageCodegenExec(_: RDDScanExec) =>
+        "-- computed at build time: the plan below is only the scan of the " +
+          "builder's collected result\n" + plan
+      case _ => plan
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
@@ -51,9 +68,8 @@ object DumpPlans {
     val spark = graft.Session.local(graft.Session.cpus)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
-      val plan = graft.SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.explainString(ExplainMode.fromString("formatted"))
-      Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), normalize(plan))
+      val plan = render(graft.SparkEntry.queries(name)(spark, sfDir))
+      Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), plan)
       println(s"[plans] $name -> $outDir/${name}_$suffix.txt")
     }
     spark.stop()

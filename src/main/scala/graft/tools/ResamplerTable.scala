@@ -1,13 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.functions._
-
 /** One-off evidence run (r14, closing the r13 verdict's #6): the FULL
   * five-strategy resampler table — 5-fold CV over the 4-value L1 grid
   * (= 20 fits per strategy at 36,047 x 3,019 and up to 67,374 x 3,019
   * resampled), final train at the tuned reg, the published 8-metric row
   * per strategy (reference cells 64-69 / `Hap880_Final_Project.py:796-861`),
-  * printed as the markdown table BENCH_NOTES.md records.
+  * printed as the markdown table BENCH_NOTES.md records. It takes no
+  * options: the C grid, folds and LSH radii are the table's own
+  * constants ([[graft.ml.TrainHarness.resamplerBenchmark]],
+  * [[graft.ml.Resamplers.resample]]).
   *
   * The per-round bench row `mimic_resampler_bench` runs only the RUS
   * smoke (the published winner); this main is its full-table twin.
@@ -22,14 +23,9 @@ import org.apache.spark.sql.functions._
 object ResamplerTable {
   def main(args: Array[String]): Unit = {
     val spark = graft.Session.local(graft.Session.cpus)
-    val full = graft.pipeline.MimicPipeline.assembled(spark)
-    val train = full.filter(col("split") === "train").select("id", "features", "label")
-    val test = full.filter(col("split") === "test").select("id", "features", "label")
+    val (train, test) = graft.pipeline.MimicPipeline.trainTest(spark)
     val t0 = System.nanoTime()
-    val rows = graft.ml.TrainHarness.resamplerBenchmark(
-        train, test, "id", "features", "label",
-        smoteRadius = 12.0, smoteBucketLength = 6.0,
-        nearMissRadius = 12.0)
+    val rows = graft.ml.TrainHarness.resamplerBenchmark(train, test, "id", "features", "label")
       .collect()
     val sec = (System.nanoTime() - t0) / 1e9
     println("| strategy | n_train | best_c | cv_acc | f1 | precision | recall | accuracy | auc_roc | auc_pr |")

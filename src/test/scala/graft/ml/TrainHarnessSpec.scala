@@ -86,6 +86,74 @@ class TrainHarnessSpec extends SparkSpecBase {
     assert(acc.value == 0L, s"compactForFit executed the input plan (${acc.value} rows read)")
   }
 
+  private def pins: Int = spark.sparkContext.getPersistentRDDs.size
+
+  test("fitStrategy: every named strategy fits; n is the resampled train's " +
+    "count, λ is the value passed") {
+    val names = Seq("undersample", "nearmiss", "base", "smote", "oversample")
+    val rows = TrainHarness.inParallel(names) { name =>
+      TrainHarness.fitStrategy(name, df, df, "id", "features", "label", 42L,
+          (_, n) => TrainHarness.sklearnReg(n, 0.5)) { f =>
+        (name, f.n, f.regParam, f.scored.count())
+      }
+    }
+    rows.foreach { case (name, n, reg, nScored) =>
+      val expected = Resamplers.resample(name, df, "id", "features", "label", 42L).count()
+      assert(n == expected, s"$name: n $n != the resampled train's $expected rows")
+      assert(reg == TrainHarness.sklearnReg(n, 0.5), s"$name: λ $reg is not the one passed")
+      assert(nScored == df.count(), s"$name: scored $nScored test rows")
+    }
+    // the regParam function sees the pinned train and its n
+    val seen = TrainHarness.fitStrategy("base", df, df, "id", "features", "label", 42L,
+      (train, n) => { assert(train.count() == n && n == df.count()); 0.02 })(_.regParam)
+    assert(seen == 0.02)
+  }
+
+  test("fitStrategy: readout metrics are the thresholdMetrics row; " +
+    "resamplerBenchmark gives one row per named strategy, in the given order") {
+    val (row, predAuc) = TrainHarness.fitStrategy("base", df, df, "id", "features", "label",
+        42L, (_, _) => 0.01) { f =>
+      (Metrics.thresholdMetrics(f.scored, "score", "label", 0.5).collect()(0), f.predAuc)
+    }
+    assert(predAuc == (row.getAs[Double]("recall") + row.getAs[Double]("specificity")) / 2.0)
+    val table = TrainHarness.resamplerBenchmark(df, df, "id", "features", "label",
+      include = Seq("undersample", "base")).collect()
+    assert(table.map(_.getString(0)).toSeq == Seq("undersample", "base"))
+    assert(table(1).getLong(1) == df.count())
+  }
+
+  test("fitStrategy leaves no pin, also when the readout throws, and keeps a " +
+    "caller's cache") {
+    val before = pins
+    TrainHarness.fitStrategy("undersample", df, df, "id", "features", "label", 42L,
+      (_, _) => 0.01)(_.aucRoc)
+    assert(pins == before, s"fitStrategy left ${pins - before} pin(s)")
+    val e = intercept[IllegalStateException] {
+      TrainHarness.fitStrategy("oversample", df, df, "id", "features", "label", 42L,
+          (_, _) => 0.01) { f =>
+        f.scored.count()
+        throw new IllegalStateException("readout failed")
+      }
+    }
+    assert(e.getMessage == "readout failed")
+    assert(pins == before, s"a throwing readout left ${pins - before} pin(s)")
+    val cached = df.filter(col("id") >= 0L).cache()
+    try {
+      cached.count()
+      TrainHarness.fitStrategy("base", cached, cached, "id", "features", "label", 42L,
+        (_, _) => 0.01)(_.at05)
+      assert(cached.storageLevel != StorageLevel.NONE, "fitStrategy released the caller's cache")
+    } finally cached.unpersist()
+  }
+
+  test("an unknown strategy name is rejected") {
+    val e = intercept[IllegalArgumentException] {
+      TrainHarness.fitStrategy("adasyn", df, df, "id", "features", "label", 42L,
+        (_, _) => 0.01)(_.n)
+    }
+    assert(e.getMessage.contains("adasyn"))
+  }
+
   test("logisticL1Margins: margin sign agrees with probability threshold (M15)") {
     val scored = TrainHarness.logisticL1Margins(df, df, "features", "label")
     val rows = scored.select("margin", "score").collect()

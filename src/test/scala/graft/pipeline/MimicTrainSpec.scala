@@ -1,7 +1,7 @@
 package graft.pipeline
 
-import graft.SparkSpecBase
-import org.apache.spark.sql.functions._
+import graft.{Materialize, SparkSpecBase}
+import graft.ml.{Metrics, Resamplers, TrainHarness}
 
 /** The §3.3 training surface at the reference's own scale: the
   * 45,059 × 3,019 matrix trains, the resampling story reproduces, and
@@ -21,29 +21,26 @@ class MimicTrainSpec extends SparkSpecBase {
   }
 
   test("base vs undersampled LR reproduces the reference's resampling finding") {
-    val full = MimicPipeline.assembled(spark)
-    val train = full.filter(col("split") === "train").select("id", "features", "label")
-    val test = full.filter(col("split") === "test").select("id", "features", "label")
+    val (train, test) = MimicPipeline.trainTest(spark)
     // sklearn-faithful regularization: λ = 1/(n·C) at the CV-winning
     // C = 0.01 (what cell 66's GridSearchCV lands on for both rows)
-    val nBase = train.count()
-    val baseScored = graft.ml.TrainHarness.logisticL1Scores(
-      train, test, "features", "label", regParam = 1.0 / (nBase * 0.01)).cache()
-    val under = graft.ml.Resamplers.randomUndersample(train, "label", 42L)
+    val fits = Seq("base", "undersample").map { name =>
+      name -> TrainHarness.fitStrategy(name, train, test, "id", "features", "label", 42L,
+          (_, n) => TrainHarness.sklearnReg(n, 0.01)) { f =>
+        (f.n, f.predAuc, f.aucRoc)
+      }
+    }.toMap
     // fraction-based sampling lands NEAR the reference's exact 4,720
     // balanced-train golden (the exact identity is the green
     // mimic_resample_counts row; the sampled membership is the RNG
     // surface, per SURVEY §5)
-    val n = under.count()
+    val (n, underPred, underAuc) = fits("undersample")
     assert(math.abs(n - 4720L) < 150, s"balanced train size $n far from 4,720")
-    val underScored = graft.ml.TrainHarness.logisticL1Scores(
-      under, test, "features", "label", regParam = 1.0 / (n * 0.01)).cache()
     // the PUBLISHED metric (cell 66's roc_curve on binary predictions =
     // (recall+specificity)/2): base 0.501 — the imbalanced fit predicts
     // ~all-negative at threshold 0.5 — vs undersampled 0.640, where the
     // balanced train makes the signal actionable at 0.5
-    val basePred = graft.ml.Metrics.aucRocFromPredictions(baseScored, "score", "label")
-    val underPred = graft.ml.Metrics.aucRocFromPredictions(underScored, "score", "label")
+    val basePred = fits("base")._2
     assert(basePred > 0.47 && basePred < 0.56,
       s"base predicted-auc $basePred outside the reference's 0.501 band")
     assert(underPred > 0.58 && underPred < 0.72,
@@ -51,17 +48,13 @@ class MimicTrainSpec extends SparkSpecBase {
     assert(underPred > basePred, "undersampling must beat base on the published metric")
     // and the probability RANKING stays informative on both (the engine's
     // sanity check — the reference never published these)
-    val underAuc = graft.ml.Metrics.aucRoc(underScored, "score", "label")
     assert(underAuc > 0.55 && underAuc < 0.80, s"undersampled ranking AUC $underAuc")
-    baseScored.unpersist(); underScored.unpersist()
   }
 
   test("RF on the undersampled MIMIC-scale train lands in the reference's AUC band") {
-    val full = MimicPipeline.assembled(spark)
-    val train = full.filter(col("split") === "train").select("id", "features", "label")
-    val test = full.filter(col("split") === "test").select("id", "features", "label")
-    val under = graft.ml.Resamplers.randomUndersample(train, "label", 42L)
-    val aucs = graft.ml.TrainHarness.rfSweep(under, test, "features", "label", Seq(300))
+    val (train, test) = MimicPipeline.trainTest(spark)
+    val under = Resamplers.randomUndersample(train, "label", 42L)
+    val aucs = TrainHarness.rfSweep(under, test, "features", "label", Seq(300))
       .collect().map(r => r.getAs[Int]("num_trees") -> r.getAs[Double]("auc_roc")).toMap
     // reference: 0.695 at n=300 on real notes; the synthetic signal
     // supports the same qualitative story — well above chance, below
@@ -80,30 +73,13 @@ class MimicTrainSpec extends SparkSpecBase {
     // engine's committed measurement (published/measured: base
     // 0.501/0.502, NearMiss 0.510/0.510, SMOTE 0.581/0.572, ROS
     // 0.588/0.582, RUS 0.640/0.676), so generator drift cannot silently
-    // reorder the interior slots (r9 verdict ask #5). LSH radii sized for
-    // the unstandardized feature space, same as the query.
-    val full = MimicPipeline.assembled(spark)
-    val train = full.filter(col("split") === "train").select("id", "features", "label")
-    val test = full.filter(col("split") === "test").select("id", "features", "label")
-    val strategies = Seq(
-      ("base", () => train, 0.01),
-      ("smote", () => graft.ml.Resamplers.smote(
-        train, "id", "label", "features", 42L, 6.0, 5, 12.0), 0.1),
-      ("oversample", () => graft.ml.Resamplers.randomOversample(train, "label", 42L), 10.0),
-      ("nearmiss", () => graft.ml.Resamplers.nearMiss(
-        train, "id", "label", "features", 42L, 6.0, 12.0, 2000L), 0.01),
-      ("undersample", () => graft.ml.Resamplers.randomUndersample(train, "label", 42L), 0.01))
-    val preds = strategies.map { case (name, mk, c) =>
-      val tr = mk().select(col("features"), col("label"))
-      val n = tr.count()
-      val fit = graft.ml.TrainHarness.compactForFit(tr, n).cache()
-      fit.count()
-      try {
-        val scored = graft.ml.TrainHarness.logisticL1Margins(
-          fit, test, "features", "label", regParam = 1.0 / (n * c)).cache()
-        try name -> graft.ml.Metrics.aucRocFromPredictions(scored, "score", "label")
-        finally scored.unpersist()
-      } finally fit.unpersist()
+    // reorder the interior slots (r9 verdict ask #5). The strategies,
+    // LSH radii included, are the query's (Resamplers.resample).
+    val (train, test) = MimicPipeline.trainTest(spark)
+    val preds = Seq("base" -> 0.01, "smote" -> 0.1, "oversample" -> 10.0,
+        "nearmiss" -> 0.01, "undersample" -> 0.01).map { case (name, c) =>
+      name -> TrainHarness.fitStrategy(name, train, test, "id", "features", "label", 42L,
+        (_, n) => TrainHarness.sklearnReg(n, c))(_.predAuc)
     }.toMap
     val bands = Map(
       "base" -> (0.48, 0.53), "nearmiss" -> (0.49, 0.56),
@@ -120,18 +96,15 @@ class MimicTrainSpec extends SparkSpecBase {
   }
 
   test("the three published RF rows: 0.623 default / 0.695 n=300 / 0.701 oversampled") {
-    val full = MimicPipeline.assembled(spark)
-    val train = full.filter(col("split") === "train").select("id", "features", "label")
-    val test = full.filter(col("split") === "test").select("id", "features", "label")
-    val under = graft.ml.Resamplers.randomUndersample(train, "label", 42L)
+    val (train, test) = MimicPipeline.trainTest(spark)
+    val under = Resamplers.randomUndersample(train, "label", 42L)
     // cell 44: sklearn-default RF on the undersampled train → 0.623;
     // MLlib defaults (20 trees, depth 5) tell the same story
-    val defScored = graft.ml.TrainHarness.randomForestScores(
-      under, test, "features", "label", numTrees = 20).cache()
-    val aucDefault = graft.ml.Metrics.aucRoc(defScored, "score", "label")
-    val mUnder = graft.ml.Metrics.thresholdMetrics(defScored, "score", "label", 0.5)
-      .collect()(0)
-    defScored.unpersist()
+    val defScored = TrainHarness.randomForestScores(
+      under, test, "features", "label", numTrees = 20)
+    val (aucDefault, mUnder) = Materialize.scoped(defScored)((
+      Metrics.aucRoc(defScored, "score", "label"),
+      Metrics.thresholdMetrics(defScored, "score", "label", 0.5).collect()(0)))
     assert(aucDefault > 0.55 && aucDefault < 0.72,
       s"default-RF AUC $aucDefault outside the 0.623 band")
     // (the 0.695 n=300 row is pinned by the test above)
@@ -142,14 +115,13 @@ class MimicTrainSpec extends SparkSpecBase {
     // memorization, so the DIRECTION is pinned (accuracy inflates and
     // recall collapses relative to the balanced-train row on BOTH axes),
     // not sklearn's full 0.003 magnitude.
-    val over = graft.ml.Resamplers.randomOversample(train, "label", 42L)
-    val overScored = graft.ml.TrainHarness.randomForestScores(
+    val over = Resamplers.randomOversample(train, "label", 42L)
+    val overScored = TrainHarness.randomForestScores(
       over, test, "features", "label", numTrees = 10, seed = 42L,
-      maxDepth = 26, maxBins = 16, maxMemoryMB = 2048).cache()
-    val aucOver = graft.ml.Metrics.aucRoc(overScored, "score", "label")
-    val mOver = graft.ml.Metrics.thresholdMetrics(overScored, "score", "label", 0.5)
-      .collect()(0)
-    overScored.unpersist()
+      maxDepth = 26, maxBins = 16, maxMemoryMB = 2048)
+    val (aucOver, mOver) = Materialize.scoped(overScored)((
+      Metrics.aucRoc(overScored, "score", "label"),
+      Metrics.thresholdMetrics(overScored, "score", "label", 0.5).collect()(0)))
     assert(aucOver > 0.60 && aucOver < 0.75,
       s"oversampled-RF AUC $aucOver outside the 0.701 band")
     assert(mOver.getAs[Double]("accuracy") > mUnder.getAs[Double]("accuracy"),
@@ -167,13 +139,9 @@ class MimicTrainSpec extends SparkSpecBase {
     // guard ties the smoke to the committed table row (RUS best_c 0.01,
     // measured auc_roc 0.676 vs published 0.640) so a drifted smoke (or
     // a CV-grid regression) cannot ship as a healthy bench number.
-    val full = MimicPipeline.assembled(spark)
-    val train = full.filter(col("split") === "train").select("id", "features", "label")
-    val test_ = full.filter(col("split") === "test").select("id", "features", "label")
-    val r = graft.ml.TrainHarness.resamplerBenchmark(
-        train, test_, "id", "features", "label",
-        smoteRadius = 12.0, smoteBucketLength = 6.0,
-        nearMissRadius = 12.0, include = Seq("undersample"))
+    val (train, test_) = MimicPipeline.trainTest(spark)
+    val r = TrainHarness.resamplerBenchmark(
+        train, test_, "id", "features", "label", include = Seq("undersample"))
       .collect()
     assert(r.length == 1 && r(0).getString(0) == "undersample",
       s"RUS smoke returned ${r.toSeq}")
