@@ -4,974 +4,517 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** Reproducible plan-audit artifact: dumps `explain("formatted")` for the
-  * headline queries together with the scale property each plan is expected
-  * to exhibit (pushdown, broadcast, single exchange, partition pruning,
-  * bounded-heap top-k, …). Run:
+import graft.plans.PlanCheck
+import graft.plans.PlanCheck._
+
+/** The registry's plan contract: each row named here, one sentence of why
+  * its plan shape scales, and the [[PlanCheck]]s its physical plan must
+  * pass. PlansSpec runs one test per row at sf0.001; this main writes the
+  * table, each check's verdict and each plan to a markdown file, and exits
+  * 1 when a check fails or a row's build-time status disagrees with
+  * [[Built]]:
   *
   *   sbt "runMain graft.PlanAudit /root/testdata/sf0.01 PLANS.md"
-  *
-  * The point is that the interesting plan shapes are INSPECTABLE claims,
-  * not code comments: regenerate after any optimizer-relevant change and
-  * diff. (PlansSpec pins the load-bearing ones as assertions; this file is
-  * the human-readable tour.)
   */
 object PlanAudit {
 
-  /** query name → what the plan must show, and why it matters at 100 TB. */
-  private val audited: Seq[(String, String)] = Seq(
-    "mimic_cohort_counts" ->
-      """The MIMIC-scale flagship: generation is a single Range scan (no
-        |files) feeding codegen'd md5 projections; the ONLY data-sized
-        |exchange is ONE hashpartitioning(SUBJECT_ID) feeding the
-        |per-subject gap cumsum AND both cohort windows (lead ×2 +
-        |backfill) — the windows share partitioning+ordering so Catalyst
-        |plans one shuffle for the whole labeling, then a partial-agg
-        |count to 2 rows. A 100 TB admissions table costs exactly one
-        |patient-keyed shuffle.""",
-    "mimic_pipeline_relational" ->
-      """The composed reference pipeline (cohort + diagnosis-category
-        |matrix + patients + age): the diagnosis explode partial-aggs to
-        |per-admission counts BEFORE joining, the patient side is
-        |generation-sized, and the final readout is one hash-agg to 2
-        |rows. No data-sized window beyond the shared cohort exchange,
-        |no cartesian anywhere.""",
-    "mimic_notes_vocab" ->
-      """The 45,076×3,000 bag-of-words vocabulary: the token stream is a
-        |generated explode (one codegen span per note), counts partial-agg
-        |map-side, and the top-3000 cut is a TakeOrderedAndProject — never
-        |a global sort of the vocabulary. At crawl scale the only cost is
-        |the token hash-agg.""",
-    "sql_q2_mincost" ->
-      """The correlated scalar-min subquery is DECORRELATED: the plan shows
-        |an aggregated self-join on ps_partkey (min per part computed once,
-        |joined back), not a per-row subquery execution. The derived
-        |partsupp CTE is a zero-shuffle 4× expansion of the part scan;
-        |dimensions broadcast.""",
-    "sql_q20_excess" ->
-      """The nested correlated quantity-sum decorrelates into ONE
-        |aggregated lineitem join on (l_partkey, l_suppkey) — the plan has
-        |no per-row probes, the shipdate filter is pushed to the lineitem
-        |scan, and the red-part IN-probe joins the derived partsupp before
-        |any lineitem work.""",
-    "sim_rrf_fusion" ->
-      """Hybrid-retrieval fusion: the lexical leg is the BM25 scoring join
-        |(broadcast df/stats, |docs|·|Q|-bounded tf frame) cut by a
-        |TakeOrderedAndProject; the dense leg broadcasts the single query
-        |vector over the corpus scan and ranks per query key. The fusion
-        |itself is a union of two ≤100-row lists → one hash-agg → a
-        |TakeOrdered top-20 — rank arithmetic only, nothing corpus-sized
-        |past the two producers.""",
-    "mimic_rrf_retrieval" ->
-      """The realistic-corpus hybrid: BM25 over the cohort's discharge
-        |summaries (one generated scan; the tf frame is |docs|·4-bounded
-        |by the query-term filter BEFORE any shuffle) fused with a
-        |BoW-cosine leg in the pipeline's own top-3000 vocabulary space.
-        |The dense leg's only data-sized exchange is the (hadm_id, word)
-        |count hash-agg; the ≤3,000-row query-side counts BROADCAST onto
-        |it, norms partial-agg map-side, and both legs end in
-        |TakeOrderedAndProject(100) cuts, so the rank windows and the RRF
-        |hash-agg run on ≤200 rows. At crawl scale the corpus is scanned
-        |twice (once per leg) and shuffled once.""",
-    "mimic_csv_roundtrip" ->
-      """The reference's persisted-artifact path at MIMIC scale. The
-        |roundtrip executes EAGERLY inside the query — the cohort is
-        |written one CSV file per partition by the distributed sink, re-
-        |read as a distributed scan with the declared schema, reduced by
-        |one hash-agg, and only the 2-row readout is collected (so the
-        |scratch CSV can be deleted before returning). The dumped plan is
-        |therefore just the 2-row local handoff; the distributed halves
-        |are pinned elsewhere: the sink's one-file-per-partition contract
-        |in Sinks.csv (+ its spec) and the content by the exact DuckDB
-        |oracle hash over all 45,321 rows.""",
-    "ml_feature_select" ->
-      """The MI ranking collapses the sampled feature table to ≤ a few
-        |hundred contingency rows in one explode + hash-agg; the rank
-        |window runs over the 5-row feature list (bounded by the declared
-        |feature set, never data). The top-n cut is a broadcast crossJoin
-        |of two tiny frames.""",
-    "mimic_feature_select" ->
-      """M14's selection half at MIMIC scale (3,019 features): the token
-        |stream explodes once and partial-aggs map-side to (word, doc,
-        |label) counts with the ≤3,000-word vocabulary BROADCAST onto it;
-        |zero-completion is a |features|×2 crossJoin of two tiny frames;
-        |the MI windows run over the ≤|features|×|values|×2 joint-count
-        |table (bounded by the value space, never the corpus), and the
-        |final rank window sees 3,019 rows. At crawl scale the corpus is
-        |scanned once per feature family and everything after the first
-        |hash-agg is feature-sized.""",
-    "q1_agg" ->
-      """Scan-level `PushedFilters` on `l_shipdate` and a `ReadSchema` of only
-        |the 7 touched columns (of 16): the filter and projection reach the
-        |parquet reader, so a 100 TB scan reads the pruned column pages only.
-        |Partial aggregation (`HashAggregate` before the exchange) means the
-        |shuffle carries 6 group rows per partition, not 600M input rows.""",
-    "p_proj_filter" ->
-      """Both predicates (`c_acctbal IS NOT NULL`, `c_acctbal > 0`) appear in
-        |`PushedFilters`, and `ReadSchema` lists only the 3 projected customer
-        |columns; one `WholeStageCodegen` span covers scan→filter→project —
-        |zero extra operators, zero shuffles.""",
-    "j3_threeway" ->
-      """Three `BroadcastHashJoin`s and ZERO shuffle exchanges on the fact
-        |side: customer/nation/region are dimension-sized, so the lineitem-
-        |scale probe stream never repartitions. At 1000 executors the
-        |dimensions ship once per executor; the alternative (sort-merge)
-        |would shuffle the full fact table three times.""",
-    "cohort_label" ->
-      """Exactly ONE `Exchange hashpartitioning(o_custkey…)` feeding BOTH
-        |window functions (lead × 2) and the downstream backfill — the windows
-        |share partitioning+ordering, so Catalyst reuses one sort+shuffle.
-        |The classic mistake (different orderings per window) doubles the
-        |shuffle volume of the biggest table in the pipeline.""",
-    "w3_last_per_group" ->
-      """`RowNumberTopKRule` rewrites the row_number()=1 pattern into the
-        |custom `TopKPerKeyExec` (partial bounded-heap per partition → final
-        |per key): the plan shows TopKPerKey instead of Window+Sort+Filter.
-        |Per-partition state is O(k·groups-in-partition), not a full sort of
-        |every partition — the difference between a heap insert and a
-        |spill-to-disk sort at 100 TB.""",
-    "w5_topk_per_key" ->
-      """The native form of the same operator, invoked directly through the
-        |Column API. Look for `TopKPerKeyPartial` → `Exchange` →
-        |`TopKPerKeyFinal`: partial top-k BEFORE the shuffle bounds shuffle
-        |volume to k rows per (partition, key) — the agg-style two-phase
-        |shape applied to ranking.""",
-    "sql_window_top" ->
-      """The same row_number()=1 pattern arriving through the SQL front-end:
-        |`RowNumberTopKRule` recognizes the parsed plan and the TopKPerKey
-        |operator appears here too — optimizer rules work per plan shape,
-        |not per API, so SQL users get the bounded-heap path for free.""",
-    "s7_partitioned_prune" ->
-      """`PartitionFilters: [isnotnull(o_orderpriority), (o_orderpriority =
-        |1-URGENT)]` on the scan and a 1-of-5 partition selection at planning
-        |time (asserted in PartitionPruneSpec). Row data for the other four
-        |priorities is never opened — directory-level pruning is the cheapest
-        |filter the engine has.""",
-    "d_minhash_pairs" ->
-      """MinHash rides ONE hash-aggregate over exploded shingles (k min-
-        |accumulators in a single pass), then the LSH band join appears as an
-        |equi-join on (band, bucket) — sub-quadratic candidate generation.
-        |No higher-order-function re-evaluation, no crossJoin anywhere.""",
-    "d_embed_neardup" ->
-      """Random-hyperplane LSH: sign-bit signatures per embedding, band
-        |bucket equi-join, exact cosine verify on candidates only. The plan
-        |is joins+aggregates — the O(n²) `crossJoin` tier (`sim_cosine_pairs`)
-        |exists only as the small-scale oracle.""",
-    "skew_salted_agg" ->
-      """Two-stage aggregation through a salted key: stage 1 groups on
-        |(key, salt) spreading the hot key over 16 reducers, stage 2 merges
-        |the 16 partials. The plan shows two `HashAggregate`+`Exchange` pairs
-        |— the second exchange carries ≤16 rows per hot key.""",
-    "a4_pivot_status" ->
-      """Pivot with LITERAL value list: a single aggregate job. Without the
-        |literals Spark first runs a distinct-values job over the full table
-        |— two scans instead of one.""",
-    "ev_stream_hourly" ->
-      """Streaming plan: `StateStoreRestore`/`StateStoreSave` around a
-        |partial/final aggregate pair, watermark bounding state. The drained
-        |result hash-matches the batch oracle — stream/batch parity checked
-        |per round.""",
-    "s11_bucketed_join" ->
-      """Both scans read bucketed layouts (`Bucketed: true`, 8 buckets on the
-        |join key) and the join path has NO Exchange on either side: the
-        |shuffle was paid once at write time. For a join repeated every
-        |pipeline run over 100 TB, this converts a per-run full-table shuffle
-        |into a one-time layout cost. (Small inputs may still broadcast —
-        |BucketingSpec pins the zero-exchange SMJ with broadcast disabled.)""",
-    "s12_dpp_prune" ->
-      """The partitioned fact scan's `PartitionFilters` contains a
-        |`dynamicpruningexpression` — the dim side's surviving join keys are
-        |injected into the scan AT RUNTIME, reusing the broadcast. At 100 TB
-        |a star-join touching 2 of 300 partitions scans those 2, not all 300;
-        |static pruning can't do this because the keys come from a filter on
-        |another table.""",
-    "w6_global_rownum" ->
-      """No `Exchange SinglePartition` anywhere: global row numbers come from
-        |a range repartition + per-partition windows + driver-side count
-        |offsets (P longs). The naive `Window.orderBy` plans every row
-        |through ONE task — correct, and dead at scale.""",
-    "j9_salted_join" ->
-      """The join key is (suppkey, salt): the fact side's hot keys spread
-        |over 16 sub-keys before the exchange, so no reducer receives a whole
-        |hot key's volume. Answer is hash-identical to the plain join the
-        |oracle runs.""",
-    "d_filter_pipeline" ->
-      """One Exchange total (the fingerprint window); every quality signal —
-        |tokenization, ratios, repetition, fingerprint — is a codegen'd
-        |expression evaluated on the scan side before the shuffle. The
-        |keep/drop decision for a 100 TB corpus costs one pass plus one
-        |dedup-group shuffle.""",
-    "j10_asof_join" ->
-      """No NestedLoop, no CartesianProduct: the as-of semantics ride a
-        |UNION of both inputs and one window over (key, time, side) — one
-        |exchange of |L|+|R| rows. Any per-row range probe (the θ-join
-        |encoding) explodes at scale; this shape is linear and hash-matches
-        |DuckDB's native ASOF JOIN.""",
-    "j11_range_join" ->
-      """`BroadcastNestedLoopJoin` IS the right plan here: the interval dim
-        |is 4 rows, so each probe row checks the bounds in memory with zero
-        |shuffles. The plan to avoid — shuffling both sides for a non-equi
-        |condition — cannot occur with a broadcast side.""",
-    "j12_bloom_semi" ->
-      """The `might_contain` probe sits in the Filter DIRECTLY over the
-        |lineitem scan — rows that cannot join die before the semi-join
-        |exchange, so the shuffle moves |matching|+ε rows, not |lineitem|.
-        |The sketch itself was built by a distributed aggregate; only the
-        |KB-scale bloom bytes crossed the driver. The trailing exact
-        |semi-join (broadcast) clears false positives — the answer equals
-        |the plain EXISTS the oracle runs.""",
-    "t_pack_windows" ->
-      """No `Exchange SinglePartition`: the global token-axis cumsum is a
-        |range repartition + per-partition windows + a literal map of
-        |driver-side partition token totals (P longs). The naive
-        |`sum().over(Window.orderBy(...))` would funnel the corpus through
-        |one task; this shape keeps packing fully parallel at 100 TB.""",
-    "sim_sq8_topk" ->
-      """The corpus is never shuffled at full width: one narrow projection
-        |computes int8 codes + integer self-dot per vector, the 10-query
-        |side broadcasts, and the rank<=k window rewrites to
-        |TopKPerKeyPartial/Final — the exchange carries k rows per
-        |(partition, query), not |corpus|×|queries|. The hot loop is exact
-        |integer arithmetic over 4×-compressed vectors.""",
-    "sim_pq_topk" ->
-      """Encode side: one broadcast of the (m×nCodes) codebook against the
-        |exploded corpus and a min_by AGGREGATE for the argmin (partial
-        |map-side, no window sort over |corpus|×nCodes rows). Score side:
-        |the ADC join touches m LUT rows per candidate — dim×4 bytes of
-        |vector read replaced by m codebook lookups. Top-k again rides the
-        |bounded-heap TopKPerKey rewrite.""",
-    "d_cluster_keep" ->
-      """The retention policy is ONE hash-aggregate over the labeled
-        |corpus: max_by(doc_id, (quality, -doc_id)) partial-aggregates
-        |map-side, so the exchange carries one candidate row per (partition,
-        |cluster) — no window sort, no per-cluster collect. Upstream, the
-        |label propagation itself is the iterated min-label join audited
-        |under d_dup_clusters.""",
-    "s13_zorder_stats" ->
-      """The z-value is pure bit arithmetic inside WholeStageCodegen — no
-        |UDF between the scan and the bucket stats — and the verification
-        |buckets are exact-ntile arithmetic over a GlobalRowNumber global
-        |rank: range-partitioned, parallel per-partition windows, NO
-        |SinglePartition sort of the table. (The PRODUCTION layout path is
-        |ZOrder.applyLayout = repartitionByRange(z) +
-        |sortWithinPartitions — ZOrderSpec pins its per-partition bounding
-        |boxes.)""",
-    "sim_prefix_rerank" ->
-      """Stage 1's corpus-wide pass ranks on a 16-of-64-dim prefix cosine
-        |(with dimension-sliced storage, a 4× smaller scan); stage 2 reranks
-        |only k×overfetch candidates per query at full width. Both stages'
-        |rank<=k windows rewrite to TopKPerKey, so neither stage shuffles
-        |more than its k·queries candidate rows.""",
-    "scd2_merge" ->
-      """ONE `Exchange hashpartitioning(o_orderkey)` + ONE Sort feed all
-        |three steps — the change-detection lag, the collapse filter, and
-        |the validity lead. The filter preserves the (key, ts) order, so
-        |Catalyst stacks both Window operators on the same shuffle: SCD2
-        |history over a 100 TB feed costs exactly one repartition of the
-        |snapshot union.""",
-    "fe_group_split" ->
-      """The entity→split assignment is computed on the broadcast (customer)
-        |side of a BroadcastHashJoin — the fact table never shuffles for the
-        |leakage-safe split. The count-distinct rides Spark's two-phase
-        |expand (partial per (split, customer), then per split) with
-        |map-side partial aggregation on both exchanges.""",
-    "fe_target_loo" ->
-      """The category table (one hash-agg of the input) broadcasts BACK onto
-        |the fact side: per-row leave-one-out encodings with zero fact-table
-        |shuffles. The global prior is a window over the category table
-        |itself, not a second scan of the input — the plan reads the fact
-        |table exactly twice (once per side), never three times.""",
-    "drift_psi" ->
-      """One hash-aggregate over the monitored slice (map-side partial
-        |combine, B bin rows out) and a B-row window for the totals — the
-        |whole drift gate is a single pass over the data. No second scan for
-        |the denominators, no driver-side histogram.""",
-    "drift_ks" ->
-      """The CDF is a DISTRIBUTED cumulative sum: per-value counts range-
-        |partition by value, each partition runs a local running-sum window,
-        |and cross-partition offsets ride a literal map built from P driver
-        |longs. No `Exchange SinglePartition` over the support — the same
-        |shape as w6_global_rownum/t_pack_windows, applied to a statistic.""",
-    "drift_jsd" ->
-      """Same single-pass shape as drift_psi (one hash-aggregate to B bin
-        |rows, totals via a B-row window) — the symmetric, bounded
-        |divergence costs exactly what PSI costs. Nothing about the JSD
-        |formula touches the data a second time.""",
-    "a_spearman" ->
-      """Spearman = Pearson on tie-averaged ranks, with BOTH rank tables
-        |built by the distributed-CDF pattern (range-partitioned per-value
-        |counts; partition offsets prefix-summed over ≤P rows and
-        |broadcast-JOINED back — since r11 fully lazy, so the whole
-        |derivation is ONE action with the ranged exchanges reused, where
-        |the r10 form paid an eager collect + pin per column: 20 AQE jobs
-        |/ 4.1 s → 7 / 1.5 s at sf0.1). Two shuffle joins map rows to
-        |integer ranks; ONE all-moments hash-aggregate (decimal(38,0)
-        |sums) ends the plan. No global sort of the DATA anywhere — the
-        |only SinglePartition exchanges feed the ≤P offset tables.""",
-    "ml_map" ->
-      """Average precision only ever ranks the TopKPerKey survivors (the
-        |bounded-heap pair, ≤ k rows per group cross the exchange); the
-        |total-relevant denominator is one partial-agg count. Per-term
-        |precision contributions are micro-scaled LONGs — order-independent
-        |sums, partition-invariant metric.""",
-    "t_zipf" ->
-      """Term frequencies come from one exploded hash-aggregate with
-        |map-side combine; the top-200 cut is a TakeOrdered (bounded
-        |driver-side heap merge, no global sort), and the OLS fit runs over
-        |200 rows. The only single-partition window in the plan is bounded
-        |by topN, not the corpus.""",
-    "ab_ipw" ->
-      """One hash-aggregation over the data to an S-row stratum table
-        |(map-side combine), then scalar arithmetic to a single row — the
-        |causal-adjustment readout costs exactly one pass regardless of
-        |stratum count. Positivity drops are CASE arms, not filters that
-        |would need a second aggregation.""",
-    "w10_rolling_median" ->
-      """The exact percentile window runs over the PRE-AGGREGATED day-grain
-        |table (days × priorities rows), never the raw orders — at 100 TB
-        |the rolling median costs what the daily rollup costs. The 7-row
-        |frame bounds per-row work to a constant.""",
-    "mm_phash_sigs" ->
-      """Signature extraction is one mapPartitions pass over (id, payload)
-        |— the payload column is read once, nothing shuffles, and a real
-        |media decoder amortizes init per partition. ReadSchema shows only
-        |the two touched columns.""",
-    "mm_phash_pairs" ->
-      """Same 4×15-bit pigeonhole blocking as d_simhash_pairs: the only
-        |join is an equi-join on (chunk_idx, chunk) — recall-lossless for
-        |hamming ≤ 3 by pigeonhole, no quadratic candidate generation. The
-        |signature table is 1 row per payload, so the exploded block table
-        |is 4 rows per payload.""",
-    "t_bigram_lm" ->
-      """The corpus is tokenized ONCE: unigram and bigram count tables hang
-        |off the same exploded scan, the vocabulary size is a window over
-        |the unigram table (not a re-scan), and the model joins back as
-        |keyed shuffle hash joins with partial aggregation before every
-        |exchange. Per-doc means use micro-scaled integer sums — exact
-        |under any partitioning.""",
-    "a11_corr" ->
-      """All k² pairwise moment sums are ONE full-pass HashAggregate (the
-        |pair rows unpivot from a single 1-row result): correlating k
-        |columns of a 100 TB table costs one scan, not k² jobs. Sums
-        |accumulate as exact decimals, so the statistics are bit-identical
-        |under any partitioning — reproducible data-card numbers.""",
-    "ev_funnel" ->
-      """Each stage's scan carries the `event_type = <stage>` predicate in
-        |`PushedFilters` and aggregates min-time PER ENTITY before its join
-        |— so the stage-chain joins run between |users|-sized frames, never
-        ||events|-sized ones, and every join + aggregation reuses the same
-        |user_id hash partitioning. A funnel over a 100 TB event log costs
-        |k pruned scans and k user-cardinality joins.""",
-    "ev_transitions" ->
-      """ONE Exchange (the per-user window) and a |types|²-bounded final
-        |aggregate: the Markov transition table of an arbitrarily large
-        |event log shuffles each event exactly once and emits at most
-        |25 rows. The lead() rides the same sort the window already pays.""",
-    "a12_ols_group" ->
-      """All five moment sums (Σx, Σy, Σx², Σy², Σxy) for every group in
-        |ONE HashAggregate with map-side partial combine; the OLS formulas
-        |run on the 1-row-per-group result. Per-segment regression over
-        |100 TB costs one scan — and the decimal accumulation makes the
-        |coefficients bit-identical under any partitioning.""",
-    "fe_quantile_bin" ->
-      """No `Exchange SinglePartition` over the data: the exact cutpoints
-        |come from per-value counts range-partitioned by value with
-        |per-partition running sums + a ≤P-long driver offset map (the
-        |DriftOps-CDF shape), NOT from the builtin `percentile` whose
-        |plan funnels every value into one reducer. All cutpoints fall
-        |out of one aggregation over the cum frame; the 1-row cut frame
-        |broadcasts onto the binning scan. percentile_disc semantics —
-        |cut(p) is an actual data value, so no interpolation arithmetic
-        |exists to disagree about between engines.""",
-    "t_bm25" ->
-      """The explode is filtered to the query's terms BEFORE the tf
-        |aggregation — the shuffled frame is |docs|·|Q|-bounded, not
-        |corpus-token-sized. Document length comes from the same scan
-        |without a second explode (`size(tokens)`), and both corpus-stat
-        |frames (df per term, N/avgdl) are broadcast, so scoring adds zero
-        |fact-side exchanges beyond the tf groupBy.""",
-    "d_editdist_pairs" ->
-      """PassJoin segment blocking (r8): the candidate join is an EQUI-join
-        |on (slot, indexed length, segment) — d+1 exact segments indexed,
-        |±d aligned substrings probed — no CartesianProduct node anywhere,
-        |and no bucket is a whole length class (a band holds every
-        |similar-length string; a segment bucket only strings sharing d+1
-        |exact aligned chars). The levenshtein verify runs once per
-        |DISTINCT unordered candidate pair, after the dedup aggregate.
-        |Provably lossless: the oracle runs the unblocked quadratic and
-        |hash-matches.""",
-    "dp_profile" ->
-      """One Expand-based HashAggregate computes every column's null /
-        |exact-distinct / min / max simultaneously — the plan shows a
-        |single scan feeding Expand (one replicated row per distinct-agg),
-        |never k per-column jobs. Profiling a 100 TB table costs one pass
-        |regardless of how many columns the data card covers.""",
-    "d_prefix_jaccard" ->
-      """Only each doc's rarest (1−t)·len+1 tokens are exploded into the
-        |candidate join (slice of the df-sorted token array), so the
-        |inverted index holds ~1/(1−t) fewer postings AND its hottest
-        |(stopword) tokens are exactly the ones never indexed — prefix
-        |filtering is skew relief with a lossless-recall proof, which the
-        |unrestricted-oracle hash match certifies. Since r11 the join is
-        |size-oriented with the INDEXED side pruned to its short
-        |2t/(1+t) prefix (the AllPairs asymmetric refinement), carries
-        |the PPJoin positional filter as a per-match-row predicate, and
-        |salts only postings above 1,024 entries (two-tier — the cold
-        |tail joins unreplicated). Verification joins the token arrays
-        |back only for surviving candidates (~430 match rows per
-        |verified pair, measured in SCALE.md; was ~2,400).""",
-    "inc_agg_maintain" ->
-      """The base table feeds ONE aggregation (the snapshot); the delta
-        |aggregates separately with map-side ±1 signing, and the merge is
-        |a full-outer join of two GROUP-cardinality frames — the plan
-        |never rescans base rows to apply a delta. This is the refresh
-        |shape that keeps a 100 TB rollup current at |delta| cost.""",
-    "ev_peak_concurrency" ->
-      """No `Exchange SinglePartition` over the timeline: ±1 marks hash-
-        |aggregate per instant, range-partition by time, and the running
-        |sum is per-partition windows + a literal offset map built from
-        |≤ P driver longs (the DriftOps-CDF shape). The final peak is a
-        |1-row max(struct) aggregate — interval analytics at event-log
-        |scale without a global sort through one task.""",
-    "g_pagerank3" ->
-      """Each of the 3 iterations is one join of the node-sized score
-        |table against the edge table plus one HashAggregate keyed on dst
-        |with map-side partial sums — the Pregel step as DataFrames. All
-        |arithmetic is scaled-integer (e12), so the scores are
-        |bit-identical under any partitioning and hash-match the oracle's
-        |unrolled CTEs; no floats, no merge-order dependence, no driver
-        |state beyond the node count.""",
-    "g_triangles" ->
-      """Degree-ordered orientation before wedge generation: every join in
-        |the plan is an explicit-key hash join (degree attach, wedge
-        |self-join on the corner, closing-edge equi-join) — the only
-        |nested-loop is the final 1-row × 1-row scalar combine. The
-        |orientation bounds per-node wedge fan-out at O(√m), so a hub that
-        |would generate deg² wedges un-oriented stays √-bounded — the
-        |"curse of the last reducer" fix, visible as the absence of any
-        |skewed-key blowup path in the plan.""",
-    "j13_interval_overlap" ->
-      """Both interval sides explode onto a fixed time grid and meet in an
-        |equi-join on the cell — no CartesianProduct, no
-        |BroadcastNestedLoopJoin, even though the predicate is a range
-        |overlap and NEITHER side is broadcastable. Duplicate suppression
-        |is the first-overlap-cell-owns-the-pair filter, so no post-join
-        |DISTINCT exchange appears either.""",
-    "ml_lift" ->
-      """Global decile ranking WITHOUT the single-task window:
-        |rangepartitioning carries the data (GlobalRowNumber), bucket
-        |assignment is a literal-map lookup + integer arithmetic inside
-        |codegen, and the only SinglePartition windows run on the 10-row
-        |bucket aggregate. The naive ntile() form funnels every row
-        |through one task.""",
-    "d_contamination" ->
-      """The probe (benchmark) shingle set rides a BroadcastHashJoin —
-        |the corpus explodes its shingles once and hash-probes locally,
-        |then one partial-agg count per doc. No corpus self-join exists in
-        |the plan, so there is no O(df²) skew bomb: decontamination cost
-        |is O(corpus tokens), the property that makes the gate runnable
-        |per-snapshot at 100 TB.""",
-    "ev_rolling24h" ->
-      """ONE Exchange (entity hash) and a RANGE frame over epoch seconds:
-        |the rolling sum is streaming accumulation inside each sorted
-        |partition — no self-join, no per-row probe, state bounded by the
-        |horizon. The window-frame form is the only trailing-aggregate
-        |shape that survives an unbounded event table.""",
-    "sk_cms_err" ->
-      """The sketch build is explode(depth) → partial HashAggregate: each
-        |input partition collapses to at most depth×width cells BEFORE the
-        |exchange, so the shuffle moves O(sketch), never O(token stream).
-        |The probe side joins the d×w-row sketch via BroadcastHashJoin —
-        |the corpus-sized relation never shuffles for the estimate. This
-        |is how a 100 TB stream summarizes to KBs with no driver-side
-        |accumulator anywhere in the plan.""",
-    "dq_volume_anomaly" ->
-      """Monitoring runs on the AGGREGATE, not the events: one partial-agg
-        |count per (type, day) reduces the scan to |types × days| rows,
-        |and the rolling z-score machinery (RANGE frame, decimal moments)
-        |adds one type-keyed exchange over that tiny frame. Volume
-        |anomaly detection over a 100 TB event table costs one scan plus
-        |arithmetic on a few thousand rows.""",
-    "g_common_neighbors" ->
-      """Wedge pairs are generated ARRAY-SIDE (a combination explode over
-        |each degree-capped center's sorted neighbor array) and feed a
-        |partially-aggregated count — the naive form's wedge self-join,
-        |whose shuffled row count is Σ deg², never appears. The degree cap
-        |bounds candidate volume by |V|·maxDeg²/2 by construction, the
-        |same frequency-cap contract as the Jaccard DF cap; the final
-        |adjacency exclusion is a left-anti hash join.""",
-    "fe_binned_woe" ->
-      """The 1-row cutpoint frame reaches the fact scan as a
-        |`BroadcastNestedLoopJoin` (a broadcast of ~9 doubles), so bin
-        |assignment is a projection over one read of the data; the WOE/IV
-        |arithmetic and its totals window run over the 10-row per-bin
-        |aggregate. The cutpoints themselves come from the distributed-CDF
-        |shape — per-value counts range-partitioned with literal offsets —
-        |never the builtin exact percentile's single-reducer funnel.""",
-    "ev_attribution" ->
-      """One `Exchange hashpartitioning(user_id)` feeds the single window
-        |pass; both ignore-nulls `last` calls share the frame, and the
-        |conversion filter + channel aggregation ride on top. The naive
-        |formulation — conversions range-joined against all earlier
-        |touches — is a per-row probe the optimizer can only nested-loop;
-        |it never appears here.""",
-    "ev_rolling_wau" ->
-      """No Window operator anywhere: the sliding 7-day distinct count is
-        |(user, day) distinct → explode onto visible days → per-day
-        |distinct count, all partially-aggregated hash aggs. A windowed
-        |COUNT(DISTINCT) over raw events would hold an unbounded distinct
-        |set per frame; here every operator's state is bounded by its
-        |aggregate's output size.""",
-    "a15_pareto_abc" ->
-      """The revenue ranking collapses the fact table to |customers|
-        |decimal sums first; the cumulative share is then a RunningTotal
-        |distributed prefix sum in integer cents — range-partitioned
-        |per-partition windows plus broadcast partition offsets (lazy
-        |since r11: the offsets and grand total are plan subtrees reusing
-        |the ranged exchange, not driver collects), NO SinglePartition
-        |exchange over the |customers| frame (at 100× that frame is ~10⁹
-        |rows; a one-task running sum would be the plan's death — the two
-        |SinglePartitions in the plan feed the ≤P offsets and the 1-row
-        |total, both plan-asserted in PlansSpec). The class thresholds
-        |compare decimal·integer products, so the A/B/C boundary cannot
-        |flip on a double ulp at any scale.""",
-    "d_chunk_dedup" ->
-      """Boilerplate-chunk removal is LINEAR in corpus size: the exploded
-        |(doc, idx, chunk) rows hash-aggregate once on chunk text for
-        |document frequency, equi-join back on chunk, and re-aggregate per
-        |doc — three keyed shuffles, nothing pairwise, no candidate blow-up.
-        |Contrast with similarity dedup where candidate generation is the
-        |scale risk; here a 100 TB corpus costs 100 TB of shuffle, period.""",
-    "ml_survival_km" ->
-      """The only data-sized stages are the fact join and ONE hash
-        |aggregation keyed on duration. The n_risk running sum is a
-        |SinglePartition window BY CONSTRUCTION over per-timepoint rows —
-        |bounded by the time domain (thousands of days), not subject count —
-        |so 100 TB of subjects still collapse before any window runs.""",
-    "o14_group_sample_k" ->
-      """The per-stratum draw plans as TopKPerKeyPartial → exchange →
-        |TopKPerKeyFinal: bounded k-row heaps on the map side, ONE exchange
-        |carrying ≤ k·partitions rows per stratum, no full per-stratum sort
-        |and no row_number window over the table. The md5-permille order
-        |makes the same k rows come back on any engine, any partitioning.""",
-    "a16_weighted_quantiles" ->
-      """One hash aggregation collapses data to per-distinct-value weight
-        |sums; a range exchange orders those rows; the cumulative weight is
-        |a per-partition window plus a P-entry literal offset map (P =
-        |shuffle partitions — KBs to the driver, never data). Quantile
-        |selection compares 1000·cum ≥ p·W in LONG arithmetic: no double
-        |threshold, no SinglePartition window, no sort of raw rows.""",
-    "fe_quantile_match" ->
-      """Both global rankings ride GlobalRowNumber (range exchange +
-        |per-partition window + offset map); the interpolation endpoints
-        |arrive by integer EQUI-joins of floor/ceil positions against the
-        |reference ranks. No SinglePartition window, no range probe join,
-        |and the float lerp mirrors the oracle token-for-token.""",
-    "ml_ndcg" ->
-      """NDCG@k only ever examines k rows per group: the plan shows the
-        |TopKPerKey bounded-heap pair instead of a per-group sort, then
-        |windows over the ≤ k·|groups| survivors. DCG weights are
-        |micro-scaled LONGs — the sum is order-independent, so the metric
-        |is partition-invariant by construction.""",
-    "fe_rfm" ->
-      """ONE hash-agg collapses the fact table to the |customers| frame;
-        |each quintile score is then a GlobalRowNumber global rank (range
-        |exchange + parallel per-partition windows + broadcast offsets)
-        |turned into its exact ntile(5) bucket by integer arithmetic —
-        |three ranked passes, ZERO SinglePartition windows. At 100×
-        |(customers ~10⁹) the old three-ntile form was three sequential
-        |one-task sorts; this plan keeps all 32+ cores on every pass.""",
-    "ml_auc_rank" ->
-      """Exact Mann-Whitney AUC over CONTINUOUS scores: per-distinct-score
-        |(pos, neg) counts hash-aggregate first, then the rank prefix sums
-        |ride RunningTotal's distributed CDF (range-partitioned local
-        |cumsums + broadcast offsets). Distinct scores ≈ |rows| for a raw
-        |price score, so the former global ORDER BY window was a one-task
-        |sort of the fact table; now the only SinglePartition exchange is
-        |the 1-row final aggregate merge.""",
-    "p14_unpivot" ->
-      """The melt is a pure executor-side Expand: zero shuffles, zero
-        |joins — each input row fans out to 4 (measure, value) rows inside
-        |the same task. ReadSchema lists only the 6 touched columns.""",
-    "ev_attribution_linear" ->
-      """Linear multi-touch attribution WITHOUT the conversions×touches
-        |range join: all four per-channel in-window counts plus the total
-        |are RANGE-frame window functions sharing ONE (user) exchange and
-        |one sort — the plan shows a single Window node computing every
-        |count. The credit stack is an executor-side Expand (generate) and
-        |the final agg is |channels|-sized. At 100 TB: one keyed shuffle of
-        |events, nothing pairwise, integer credits immune to sum order.""",
-    "a19_gini" ->
-      """The concentration statistic never funnels data through one task:
-        |the fact table collapses to |customers| decimal sums, the global
-        |ascending rank is a RANGE exchange + per-partition row_number +
-        |literal offset map (GlobalRowNumber — no SinglePartition window),
-        |and the weighted sum accumulates decimal(38,0) so the one double
-        |division at the end is exact-in on any partitioning.""",
-    "sim_mmr_rerank" ->
-      """Greedy diversity re-ranking with the corpus never shuffled: the
-        |candidate stage is the SQ8 shape (queries broadcast onto the
-        |corpus scan, per-query top-N window), then ONE grouping exchange
-        |feeds a per-query MapGroups that runs the whole k-step greedy
-        |argmax loop executor-locally over its ≤ nCand candidates (r12 —
-        |replacing k−1 chained join+window rounds; queries parallelize
-        |across executors, the per-group work is the ≤ nCand² arithmetic
-        |MMR inherently costs). Integer dots keep every argmax
-        |engine-deterministic, so the greedy output stays oracle-exact.""",
-    "sk_kmv_merge" ->
-      """Sketch mergeability exercised as a plan: the per-shard k-min pass
-        |is ONE hash exchange on (shard) with a window row_number bounded
-        |by k, and everything downstream of the truncation operates on
-        |≤ shards·k rows — the whole-stream side exists only to prove
-        |equality. On a cluster the shard pass IS the executor-local
-        |sketch; the reduce combines k-sized sets, never rows.""",
-    "o16_balanced_batches" ->
-      """Class-balanced batch assignment without a per-label single-reducer
-        |window: GlobalRowNumber contributes a RANGE exchange on
-        |(label, hash) + per-partition row_number + a literal cumulative-
-        |count offset map, and the per-label min-rank offsets come back via
-        |one BroadcastHashJoin. No SinglePartition anywhere: batch ids for
-        |10^10 training rows cost one range shuffle and a P-row driver map.""",
-    "s16_dynamic_overwrite" ->
-      """The read-back scan after the dynamic-partition overwrite shows the
-        |hive-style partition layout (o_orderstatus as a partition column in
-        |`PartitionFilters`-capable position): the incoming half-slice of
-        |'F' replaced ONLY that directory — the plan's scan enumerates the
-        |surviving partitions, proving backfills rewrite their partitions
-        |and nothing else. At 100 TB a day-level backfill touches one day's
-        |files, not the table.""",
-    "p15_dynamic_pivot" ->
-      """Two-phase runtime pivot: the values-discovery job is a distinct on
-        |ONE column (scan prunes to o_orderpriority, partial-agg before its
-        |exchange), and the main job is a single hash aggregate whose pivot
-        |branches are literal CASE arms — the unknown-domain pivot costs
-        |one k-row job plus the same one-pass agg a static pivot gets;
-        |never a per-value scan.""",
-    "d_simhash_pairs" ->
-      """Near-dup candidate generation is an EQUI-join on (chunk_idx, chunk)
-        |— never a cross join: the 4×15-bit pigeonhole guarantees every
-        |hamming≤3 pair shares a chunk, so recall-lossless blocking costs 4
-        |rows per signature (BroadcastHashJoin at test scale; the same
-        |equi-key hash-shuffles at corpus scale). The hamming filter
-        |(xor+bit_count) runs inside codegen on the joined pairs.""",
-    "ev_streaks" ->
-      """Two exchanges total: the distinct's (user, day) shuffle — with its
-        |partial aggregate map-side, so same-day repeats collapse before the
-        |wire — then one user_id shuffle for the window; the island
-        |aggregate rides the window's partitioning with NO third shuffle
-        |(hash(user_id) already clusters (user_id, anchor)). No self-join,
-        |no gap rows: islands come from the anchor arithmetic, so a
-        |10-year-sparse user costs their active days only.""",
-    "dq_table_checksum" ->
-      """One scan, one partial HashAggregate per partition, ONE single-row
-        |exchange: the fingerprint's three combiners (count, decimal SUM,
-        |bit XOR) are all commutative, so each partition ships three scalars
-        |and the result is row-order/partitioning-invariant by construction
-        |— table equality at 100 TB costs a scan, not a sort or a compare.""",
-    "inc_join_maintain" ->
-      """The three delta-join terms each probe with a BroadcastHashJoin
-        |(customer-side frames are dim-sized); the base tables NEVER join
-        |each other in the maintenance path — the only full-size work is
-        |the one-time snapshot. Maintenance cost scales with |Δ|, and the
-        |final merge is a full-outer join on the |groups|-sized rollup.""",
-    "sk_kmv_intersect" ->
-      """Both sides funnel through TakeOrderedAndProject(k=64) — a bounded
-        |heap per partition, never a global sort — and everything after the
-        |funnels (union, membership tags, estimate arithmetic) is k-row
-        |work on broadcast joins. The raw sets meet ONLY inside the exact
-        |check that ships beside the estimate.""",
-    "ts_acf" ->
-      """Two exchanges: the daily rollup on (key, day), then one on key
-        |feeding a SINGLE window pass that materializes every lag column in
-        |one sort; the per-key corr aggregate reuses the window's
-        |partitioning with no third shuffle. No per-lag self-joins of the
-        |series against itself — maxLag more lags cost zero extra passes.""",
-    "o18_priority_sample" ->
-      """Weighted sampling without replacement plans as
-        |`TakeOrderedAndProject(limit=500)` — a bounded heap per partition
-        |merged once, never a global Sort: the clock-key expression
-        |(hash → u → −ln(u)/w) evaluates in codegen on the scan side, so
-        |sampling a 100 TB corpus costs one pass and k rows of state.""",
-    "ts_cusum" ->
-      """The sequential CUSUM recursion planned as pure windows: ONE
-        |exchange on the series key feeds both the cumulative-sum and
-        |running-min passes (same partitioning+ordering → one sort), and
-        |all arithmetic is integer cents — no iteration, no driver loop,
-        |no mean division anywhere in the plan.""",
-    "ev_attribution_position" ->
-      """Same single-window shape as the linear form even though U-shaped
-        |credit needs first/last touch identity: MIN/MAX over the encoded
-        |(sec,id,channel) string ride the SAME RANGE frame as the counts —
-        |still one exchange on user, still no touch×conversion join, and
-        |ties resolve identically on every engine.""",
-    "j15_nearest_event" ->
-      """Nearest-in-time matching with NO NestedLoop and NO CartesianProduct
-        |anywhere: two linear union-window as-of passes (backward then
-        |forward over the backward output) and a per-row CASE pick — the
-        |naive |L|×|R| "min abs distance" join the ORACLE runs is exactly
-        |what this plan avoids at scale.""",
-    "a24_trimmed_mean" ->
-      """One exchange on the group key serves the rank window, the count
-        |window, AND the final grouped mean (hash(status) clusters all
-        |three) — trimming is a rank predicate inside codegen, the mean
-        |accumulates in decimal, and no second scan or self-join touches
-        |the trimmed complement.""",
-    "t_chunk_windows" ->
-      """Context-window chunking is a PURE executor-side map: tokenize →
-        |sequence over stride starts → explode → slice, zero Exchange
-        |nodes anywhere (plan-asserted in ChunkingSpec). Output fan-out is
-        |⌈n/stride⌉ per document — the only scale knob is output volume,
-        |never shuffle or state.""",
-    "t_quality_cascade" ->
-      """The whole Gopher-style cascade is ONE scan + ONE ≤4-row hash
-        |aggregation: every rule is a codegen'd column expression over the
-        |shared tokenizer, the first-failure CASE collapses to a single
-        |projection, and partial aggregation hands the exchange at most
-        |four rows per partition.""",
-    "o20_domain_mix" ->
-      """Mixture rebalancing never collects data: the |domains|-row count
-        |table joins the broadcast target weights, the feasible-total
-        |reduction is a 1-row aggregate broadcast back, and the only
-        |data-sized operation is the per-domain rank — a GlobalRowNumber
-        |RANGE-partitioned numbering over (domain, hash, id) whose window
-        |is partitioned by the range pid (~1/P of the corpus per task,
-        |regardless of domain cardinality), with the per-domain rank
-        |recovered as global_rank − broadcast offset. No task ever sorts
-        |a whole domain; the only unpartitioned window runs over the
-        ||domains|-row count table (spec-pinned in PlansSpec).""",
-    "w7_rank_ntile" ->
-      """rank/dense_rank/ntile over a 3-value partition key would funnel
-        |the whole orders table through 3 tasks at any scale. Under the
-        |total (price, orderkey) tiebreak rank = dense_rank = row_number,
-        |so all three columns ride ONE per-status GlobalRowNumber group
-        |rank (range-partitioned, parallel per-partition windows) and the
-        |decile is exact ANSI ntile arithmetic on (rank, group size) — no
-        |data-sized window keyed on the 3-value column anywhere in the
-        |plan. w8_percent_rank shares the shape (percent_rank/cume_dist
-        |become arithmetic on the same rank).""",
-    "pipeline_relational" ->
-      """The reference's cohort ⋈ diagnosis-pivot ⋈ patients ⋈ first-admit
-        |⋈ last-note join chain in one plan: cohort windows share one
-        |exchange on the entity key, the pivot is FILTER-count aggregation
-        |with map-side partials, the patients dim joins broadcast, and the
-        |last-note pick is a per-subject row_number over the high-
-        |cardinality subject key (bounded per-key groups). All five inputs
-        |are column-pruned at their scans.""",
-    "er_link_scores" ->
-      """Record linkage plans as ONE equi-join on the blocking fragment
-        |(no CartesianProduct, no BroadcastNestedLoopJoin — spec-pinned):
-        |candidate cardinality is Σ_block |A|·|B|, bounded by the ~100-member
-        |name-digit blocks at any scale, and the Fellegi–Sunter score is
-        |per-row CASE arithmetic inside codegen.""",
-    "sk_hist_quantiles" ->
-      """The sketch build is explode-free: one (min,max) broadcast agg
-        |fixes the grid, bucket assignment is codegen'd arithmetic, and
-        |partial aggregation bounds the exchange at ≤B cells per
-        |partition. The only unpartitioned window runs over the ≤B-row
-        |histogram (sketch-sized); the EXACT comparison side rides the
-        |RunningTotal distributed CDF, so even the ground-truth order
-        |statistics avoid a one-task sort.""",
-    "sim_kmeans_lloyd" ->
-      """Each Lloyd round is a BroadcastNestedLoopJoin against the k-row
-        |centroid table (k rows — broadcast is the right plan) with the
-        |argmin as a partial-aggregable min_by: the exchange moves one
-        |candidate per vector, never the n×k frame, and the centroid
-        |update is a (cluster, dim)-keyed hash agg with map-side combine.
-        |Three rounds = three such stages; no window over the corpus, no
-        |driver-resident model state.""",
-    "sim_ivf_topk" ->
-      """The r13 shape: the coarse quantizer is the repo's deterministic
-        |Lloyd (2 rounds of broadcast-argmin + hash-agg — sim_kmeans_lloyd's
-        |audited plan), whose k=16-row centroid export then BROADCASTS into
-        |both IVF assignment joins: the corpus side argmaxes per row via a
-        |partial-aggregable max_by (one candidate per vector crosses the
-        |exchange, never the n×k frame), the 10-query side takes its nprobe
-        |probe set through a tiny window, and the in-list ranking windows
-        |only within (query, probed-cluster) candidates — the corpus is
-        |never self-joined and never globally sorted. Replacing the MLlib
-        |k-means kept the physical shape and made every stage
-        |DuckDB-replayable (the 355th green row).""",
-    "sql_q21_blame" ->
-      """Spark decorrelates both subqueries: the EXISTS becomes a
-        |LeftSemi and the NOT EXISTS a LeftAnti join on l_orderkey
-        |(spec-pinned; no per-row probe, no nested loop). The fact table
-        |is read once per subquery with only the two join columns — at
-        |100× the whole statement is three keyed joins plus a bounded
-        |top-100.""",
-    "g_components" ->
-      """Label propagation is the dupClusters iterated min-join over a
-        |hash-sampled edge list — each round is one keyed join + agg plus
-        |a pointer-jump self-join (label ← label(label)), so convergence
-        |is O(log diameter); the 3‰ sample keeps the graph subcritical, so
-        |components stay small at any scale. The size histogram is two
-        |hash aggs. The quadratic transitive closure exists only in the
-        |ORACLE's recursive CTE, never in the engine plan.""",
-    "s17_synth_source" ->
-      """A custom DSv2 source, planned like a native one: the scan node
-        |reports the CONSUMED id range (PushedRange — no residual Filter
-        |operator survives) and a pruned column list; splits parallelize
-        |the generator with zero files and zero shuffle below the
-        |aggregate. The bucket hash is computed per emitted row only for
-        |columns the query actually reads.""",
-    "s18_checksum_sink" ->
-      """The write path is scan → codegen'd rowHash projection → DSv2
-        |append: each task folds to an O(1) (count, sum, xor) triple, the
-        |driver merges commit messages commutatively, and NOTHING
-        |data-sized crosses the wire or lands on disk. The readout plan is
-        |a 1-row LocalRelation from the committed registry entry.""",
-    "ts_backtest_naive" ->
-      """One hash-agg collapses events to the per-(series, day) frame;
-        |the seasonal-naive forecast is an equi-join against the same
-        |frame shifted 7 days (no window, no per-row probe); MAE sums
-        |exact decimals and MAPE sums nano-scaled integers, so both means
-        |are order-independent. Everything after the first agg is
-        ||series×days|-sized.""",
-    "mm_frame_sample" ->
-      """Decode planning from metadata only: zero Exchange nodes
-        |(spec-pinned) — frame counts, phases, and sampled indexes are
-        |integer arithmetic + sequence/explode on the scan, with fan-out
-        |capped per doc. The payload column is never read, so Parquet
-        |never even decompresses the media bytes.""",
-    "t_bpe_merges" ->
-      """The corpus is scanned ONCE (word-count hash-agg, map-side
-        |combined); every training round then runs on the |distinct
-        |words| frame: a pair-explode hash-agg, a 1-row TakeOrdered
-        |argmax, and a broadcast of that single winning pair back over
-        |the vocab. No shuffle grows with rounds, localCheckpoint keeps
-        |the plan flat, and the merge application is a codegen'd literal
-        |replace — tokenizer training with zero driver-side data
-        |structures beyond the k merge rows.""",
-    "pipeline_curation" ->
-      """The composed curation funnel: stages 1–2 (lang gate + quality
-        |cascade) are pure codegen'd column expressions on one corpus
-        |scan; exact dedup is one fingerprint hash-agg plus a doc_id join
-        |back; the near-dup gate explodes only the SURVIVOR set through
-        |the stateless per-row MinHash kernel (no shuffle to build bands)
-        |and self-joins on (band, bucket); the benchmark probe shingle
-        |set BROADCASTS. The final labeling is three doc_id-keyed left
-        |joins against duplicate/contamination-sized id sets — no
-        |cartesian anywhere (spec-pinned), nothing data-sized on the
-        |driver.""",
-    "sim_ivfpq_topk" ->
-      """The staged ANN composition: pivots and the m×nCodes codebook
-        |broadcast; corpus coarse-assignment and PQ encoding are each ONE
-        |broadcast join + map-side aggregate (max_by/min_by argmax — the
-        |corpus is never window-sorted); the candidate join touches the
-        |probed nprobe/nPivots fraction per query; ADC is a subspace-
-        |ordered fold after a (query, neighbor)-keyed partial agg; exact
-        |cosines are paid for `rerank` rows per query, never the corpus.""",
-    "t_unigram_segment" ->
-      """Vocab building is explode → ONE hash-agg over the |distinct
-        |words| frame (substring expansion is codegen'd HOFs, never a
-        |corpus-sized explode); the trained model is a bounded artifact
-        |that broadcasts; segmentation is one shuffle-free typed pass.
-        |The tetranacci-many-subtree DataFrame-DP formulation this
-        |replaces is documented in the scaladoc — the oracle runs that DP
-        |as MATERIALIZED CTE levels instead.""",
-    "ev_stream_psi" ->
-      """The online drift gate's state is ≤ buckets rows (associative
-        |(bin, slice) counts — batching-invariant by construction); the
-        |PSI readout is the batch psiFromCounts arithmetic over the
-        |drained B-row table, with totals riding a window over those B
-        |rows. Nothing event-sized survives the micro-batch boundary.""",
-    "sql_q17_smallqty" ->
-      """Catalyst decorrelates the per-part mean subquery into an
-        |aggregate joined back on l_partkey — no per-row probe. The
-        |lineitem scan is read once per side with only the three needed
-        |columns; at 100× the statement is two keyed aggregations and
-        |one equi-join.""",
-    "pipeline_pretrain" ->
-      """Funnel → token counts → 512-token packing end to end: the
-        |packing offsets ride SequencePacking's distributed two-pass
-        |cumsum (range-partition + per-partition offsets broadcast back),
-        |so no single task ever holds the keep-set. Session-memoized —
-        |the funnel's typed MinHash kernel defeats canonical-plan cache
-        |dedup, so the layout is computed once per (session, dataset) and
-        |every consumer reads the persisted |kept|-row frame (the
-        |production shard-layout contract).""",
-    "pipeline_rag" ->
-      """Curated index retrieval: the keep-set join prunes the embedding
-        |side BEFORE any scoring; the bounded query set broadcasts (one
-        |BroadcastExchange, no cartesian — plan-asserted); cosine is a
-        |codegen'd fold per (query, candidate); the final metadata join
-        |is k·|queries|-sized. The index side is never shuffled — at
-        |100 TB the corpus streams through scan → join-prune → score →
-        |bounded top-k.""",
-    "t_wordpiece_encode" ->
-      """Same shape as the unigram segmenter: positional vocab = explode
-        |→ ONE hash-agg over |distinct words| (initial pieces add ONE row
-        |per (word, length) — no quadratic blow-up); the model broadcasts;
-        |the greedy walk is one shuffle-free typed pass. The oracle
-        |unrolls the walk to MATERIALIZED CTE levels with per-level
-        |argmax-by-length.""",
-    "sim_pqtrain_topk" ->
-      """K-means-trained PQ: the subspace axis rides INSIDE each Lloyd
-        |round's frames (posexplode), so 8 subspaces cost the same job
-        |count as one; the m×kCodes centroid table broadcasts every
-        |round; assignment argmins are map-side-combining min_by
-        |aggregates (never a window over corpus×k rows); centroid updates
-        |are one (subspace, cluster, dim)-keyed hash-agg of exact longs.
-        |ADC scoring reuses the broadcast LUT + subspace-ordered fold.
-        |Since r11 the trained codebook is materialized once as a local
-        |m×kCodes-row table, so the encode and query-LUT legs — which
-        |both reference the centroids — structurally cannot re-run the
-        |iterated training subtree (previously exchange-reuse-dependent);
-        |the plan below shows the codebook as a local scan.""",
-    "sim_ivfpq_recall" ->
-      """The ANN recall audit's plan is the union of its two legs: the
-        |full production-config IVF-PQ composition (coarse probe → ADC →
-        |exact re-rank — sim_ivfpq_topk's audited shape) and ONE exact
-        |brute-force pass bounded to |queries|×|corpus| cosine rows with
-        |a per-query TopK window, joined on (query, neighbor) with a
-        |left-semi and reduced to |queries| exact hit counts. The
-        |expensive exactness leg is |queries|-bounded, never
-        |corpus×corpus — recall accounting costs one brute top-k more
-        |than the query it audits.""",
-    "d_dup_spans" ->
-      """Sequence-level dedup: window fingerprints are md5-narrowed
-        |before the ONE corpus-wide hash-agg that issues duplicate
-        |verdicts (map-side combine; the shuffle carries 16-byte keys,
-        |not window text); the island merge partitions by doc_id — a
-        |high-cardinality key bounded by one document's length, so there
-        |is no corpus funnel (plan-asserted: no SinglePartition).""",
-    "o21_temp_mix" ->
-      """Temperature mixture: quotas are closed-form over the |domains|-
-        |row count table (sqrt/multiply are IEEE-correctly-rounded, so
-        |the ⌊⌋ is engine-exact); selection rides the same GlobalRowNumber
-        |range-partitioned rank as o20 — plan-asserted that no window
-        |PARTITIONs by the 5-value lang key; the only lang-ordered window
-        |runs over the |domains|-row offsets frame.""",
-    "inc_lsh_maintain" ->
-      """Incremental dedup-index maintenance: the delta (10%) is the only
-        |corpus that runs the MinHash kernel; the probe is an equi-join
-        |on (band, bucket) against the persisted index — base is read
-        |zero times, matching the IVM family's maintained-state contract.
-        |At 100 TB the daily batch costs |delta| band rows + the touched
-        |buckets, not a corpus recompute.""",
-    "t_unigram_em" ->
-      """Hard-EM round: two broadcast-model typed passes over |distinct
-        |words| plus ONE piece-count hash-agg whose readout IS the
-        |(bounded) re-estimated model — the corpus is never re-read
-        |between E and M steps. Both DPs stay shuffle-free; only the
-        |word-count build shuffles, once.""",
-    "ml_isotonic_bins" ->
-      """The corpus-sized work is ONE binning hash-agg (map-side
-        |combine); the monotone fit closes over the ≤B-row readout via
-        |the minimax identity — order statistics over exact-long range
-        |averages, so there is no PAVA iteration in the plan at all. The
-        |alternative (a B³-triple DataFrame self-join) would re-execute
-        |the corpus agg once per join arm.""",
-    "g_kcore" ->
-      """Each peel round is one degree hash-agg over 2|E| node mentions
-        |plus two node-keyed trim joins; the surviving edge set only
-        |shrinks, so round cost is non-increasing. localCheckpoint
-        |truncates round lineage — without it round r re-inlines every
-        |earlier round's joins into an exponentially-referenced tree
-        |(the Dedup pointer-jumping discipline)."""
+  /** When a row's checks read its plan. */
+  sealed trait Mode
+  /** The physical plan as planned, before the query runs. */
+  case object Planned extends Mode
+  /** The final plan after the query ran (adaptive execution's stages,
+    * exchange reuse and codegen are only there). */
+  case object Executed extends Mode
+  /** The row computes while it is built, so its plan is only a scan of the
+    * result: it has no checks, and it is not a test. */
+  case object Built extends Mode
+
+  final case class Row(name: String, reason: String, mode: Mode, checks: Seq[PlanCheck]) {
+    def title: String = s"$name: $reason"
+  }
+
+  /** One row's plan, checked. */
+  final case class Audit(row: Row, computedAtBuild: Boolean, plan: String,
+      verdicts: Seq[(PlanCheck, Boolean)]) {
+    def buildStatusHolds: Boolean = computedAtBuild == (row.mode == Built)
+    def ok: Boolean = buildStatusHolds && verdicts.forall(_._2)
+    def report: String = {
+      val status =
+        if (buildStatusHolds) Nil
+        else Seq(s"- FAIL: the table lists it as ${row.mode}, but it " +
+          (if (computedAtBuild) "computes at build time" else "builds lazily"))
+      val checks = verdicts.map { case (c, held) =>
+        s"- ${if (held) "pass" else "FAIL"}: ${c.describe}"
+      }
+      (status ++ checks).mkString("\n")
+    }
+  }
+
+  private def planned(name: String, reason: String)(checks: PlanCheck*) =
+    Row(name, reason, Planned, checks)
+  private def executed(name: String, reason: String)(checks: PlanCheck*) =
+    Row(name, reason, Executed, checks)
+  private def built(name: String, reason: String) = Row(name, reason, Built, Nil)
+
+  private def shuffles(n: Int) = Shuffles(Exactly(n))
+  private def shufflesAtMost(n: Int) = Shuffles(AtMost(n))
+  private def singlePartition(c: Count) = Shuffles(c, Single)
+  private val noSinglePartition = singlePartition(Exactly(0))
+  private def ranged(c: Count) = Shuffles(c, Range)
+  private def hashOn(key: String, c: Count) = Shuffles(c, HashOn(key))
+  private def has(op: String) = Node(op, AtLeast(1))
+  private def no(op: String) = Node(op, Exactly(0))
+  private val noCartesian = no("CartesianProduct")
+  private val noNestedLoop = no("BroadcastNestedLoopJoin")
+  private def pushed(text: String) = ScanFilter(text)
+  private def partitionFilter(text: String) = ScanFilter(text, partition = true)
+  private val noUnpartitionedWindow = WindowBy("", Exactly(0))
+
+  /** Every row with a plan claim, in the order PLANS.md prints them. */
+  val table: Seq[Row] = Seq(
+    planned("mimic_cohort_counts", "generation is a file-free Range scan, and the cohort " +
+      "labeling costs one patient-keyed shuffle shared by the gap cumsum and both cohort " +
+      "windows, then a partial-agg count")(
+      no("FileSourceScan"), has("Range"), hashOn("s", Exactly(1)), shuffles(2),
+      WindowBy("SUBJECT_ID", AtLeast(2))),
+    planned("mimic_pipeline_relational", "the diagnosis explode partial-aggregates to " +
+      "per-admission counts before joining, and nothing joins as a cartesian or funnels " +
+      "through one task")(
+      has("Generate"), noCartesian, noNestedLoop, noSinglePartition),
+    planned("mimic_notes_vocab", "the top-3,000 cut is a TakeOrderedAndProject over the " +
+      "map-side token counts, never a global sort of the vocabulary")(
+      has("TakeOrderedAndProject"), ranged(Exactly(0)), hashOn("word", Exactly(1))),
+    planned("sql_q2_mincost", "the correlated scalar-min subquery decorrelates into an " +
+      "aggregate on ps_partkey joined back, and the dimensions broadcast")(
+      hashOn("ps_partkey", AtLeast(1)), has("BroadcastHashJoin"), noCartesian),
+    planned("sql_q20_excess", "the nested correlated quantity sum decorrelates into one " +
+      "aggregated lineitem join on (l_partkey, l_suppkey), with the shipdate filter " +
+      "pushed to the scan")(
+      hashOn("l_partkey", Exactly(1)), pushed("GreaterThanOrEqual(l_shipdate"),
+      Joins("LeftSemi", AtLeast(1)), noCartesian),
+    planned("sim_rrf_fusion", "the dense leg broadcasts the query vector over the corpus " +
+      "scan, and the fusion of the two ranked lists ends in a TakeOrdered top-20")(
+      has("TakeOrderedAndProject"), has("BroadcastExchange"), noCartesian),
+    planned("mimic_rrf_retrieval", "both legs are TakeOrdered-bounded, the query-side " +
+      "counts broadcast, and nothing corpus-sized crosses a cartesian")(
+      has("TakeOrderedAndProject"), has("BroadcastExchange"), noCartesian),
+    built("mimic_csv_roundtrip", "the CSV roundtrip writes, re-reads and deletes its " +
+      "scratch files while the row is built; the sink's one-file-per-partition contract " +
+      "is spec'd in Sinks.csv's spec and the content by the oracle hash"),
+    planned("ml_feature_select", "the MI ranking collapses the sampled features in one " +
+      "explode and hash-agg, and the top-n cut is a broadcast cross join of two tiny frames")(
+      has("Generate"), Joins("Cross", AtLeast(1)), noCartesian),
+    built("mimic_feature_select", "the MIMIC-scale MI selection ranks its 3,019 features " +
+      "while the row is built"),
+    planned("q1_agg", "shipdate filter is pushed to the parquet scan; columns pruned")(
+      pushed("IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"), Unread("l_partkey"),
+      Unread("l_orderkey"), Unread("l_suppkey"), Unread("l_linenumber"),
+      Node("HashAggregate", Exactly(2)), shuffles(1)),
+    planned("p_proj_filter", "both acctbal predicates are pushed to the scan, only the " +
+      "projected columns are read, and nothing shuffles")(
+      pushed("IsNotNull(c_acctbal)"), pushed("GreaterThan(c_acctbal,0.0)"),
+      Unread("c_nationkey"), Unread("c_mktsegment"), shuffles(0)),
+    planned("j3_threeway", "the three dimension joins broadcast, so the fact side never " +
+      "repartitions")(
+      Node("BroadcastHashJoin", Exactly(3)), no("SortMergeJoin"), shuffles(1)),
+    executed("cohort_label", "both windows share ONE exchange (same partition key), and " +
+      "whole-stage codegen covers the pipeline")(
+      shuffles(1), hashOn("o_custkey", Exactly(1)), WindowBy("o_custkey", Exactly(2)),
+      has("WholeStageCodegen")),
+    planned("w3_last_per_group", "RowNumberTopKRule rewrites row_number() = 1 into the " +
+      "bounded-heap TopKPerKey pair, with no window and no sort")(
+      Node("TopKPerKey", Exactly(2)), no("Window"), no("Sort"), shuffles(1)),
+    planned("w5_topk_per_key", "the native TopKPerKey partial runs before the one " +
+      "exchange and the final after it")(
+      Node("TopKPerKey", Exactly(2)), no("Window"), shuffles(1)),
+    planned("sql_window_top", "the same row_number() = 1 pattern through SQL plans as the " +
+      "TopKPerKey pair too")(
+      Node("TopKPerKey", Exactly(2)), no("Window")),
+    planned("s7_partitioned_prune", "the priority predicate prunes partition directories " +
+      "at planning time")(
+      partitionFilter("(o_orderpriority = 1-URGENT)")),
+    planned("d_minhash_pairs", "MinHash rides one aggregate over exploded shingles and " +
+      "the band join is an equi-join, never a cross join")(
+      has("Generate"), noCartesian, noNestedLoop),
+    planned("d_embed_neardup", "random-hyperplane LSH blocks candidates by band-bucket " +
+      "equi-joins, so no quadratic pair join exists")(
+      noCartesian, noNestedLoop),
+    planned("skew_salted_agg", "two aggregate and exchange pairs: the salted stage spreads " +
+      "a hot key over 16 reducers, the second merges the partials")(
+      shuffles(2), hashOn("l_returnflag", Exactly(2)), Node("HashAggregate", Exactly(4))),
+    planned("a4_pivot_status", "explicit pivot values run no distinct-values job; " +
+      "exactly 2 shuffles")(
+      shuffles(2), Node("FileSourceScan", Exactly(1))),
+    executed("ev_stream_hourly", "the micro-batch plan keeps the windowed counts in a " +
+      "state store around the partial and final aggregates, bounded by the watermark")(
+      has("StateStoreRestore"), has("StateStoreSave"), has("EventTimeWatermark")),
+    planned("s11_bucketed_join", "the join reads bucketed layouts, so neither side " +
+      "shuffles on the join key")(
+      hashOn("o_custkey", Exactly(0)), hashOn("c_custkey", Exactly(0))),
+    planned("s12_dpp_prune", "fact scan carries a dynamic partition pruning filter")(
+      partitionFilter("dynamicpruningexpression")),
+    executed("w6_global_rownum", "no SinglePartition exchange (the naive window's funnel)")(
+      noSinglePartition, ranged(Exactly(1)), WindowBy("_pid", AtLeast(1))),
+    planned("j9_salted_join", "the dimension side is salted by an explode and the join " +
+      "stays a keyed hash join, never a nested loop")(
+      has("Generate"), noNestedLoop, noCartesian),
+    planned("d_filter_pipeline", "every quality signal is a codegen'd expression on the " +
+      "scan side, and the one data-sized shuffle feeds the fingerprint window")(
+      hashOn("fp", Exactly(1)), WindowBy("fp", Exactly(1)), Node("FileSourceScan", Exactly(1))),
+    planned("j10_asof_join", "the as-of match is a union of both inputs and one window " +
+      "over one exchange, never a nested loop or cartesian")(
+      has("Union"), hashOn("_asof_k", Exactly(1)), WindowBy("_asof_k", Exactly(1)),
+      noNestedLoop, noCartesian),
+    planned("j11_range_join", "the 4-row interval dimension broadcasts into a nested-loop " +
+      "join, so the probe side never shuffles for the non-equi condition")(
+      Node("BroadcastNestedLoopJoin", Exactly(1)), no("SortMergeJoin"), noCartesian),
+    planned("j12_bloom_semi", "the exact semi-join that clears the bloom filter's false " +
+      "positives broadcasts")(
+      Joins("LeftSemi", AtLeast(1)), has("BroadcastHashJoin")),
+    planned("t_pack_windows", "the global token-axis cumsum is a range repartition plus " +
+      "per-partition windows, with no SinglePartition exchange")(
+      noSinglePartition, ranged(Exactly(1)), WindowBy("_pid", AtLeast(1))),
+    planned("sim_sq8_topk", "the query side broadcasts and the per-query rank is bounded " +
+      "before its one exchange")(
+      has("BroadcastExchange"), has("WindowGroupLimit"), hashOn("query_id", Exactly(1))),
+    planned("sim_pq_topk", "the codebook broadcasts, the argmin is an aggregate, and the " +
+      "only window is the bounded per-query rank")(
+      has("BroadcastHashJoin"), Node("Window", Exactly(1)), has("WindowGroupLimit"),
+      noCartesian),
+    planned("d_cluster_keep", "the keep-policy is one max_by aggregate per cluster, with " +
+      "no window sort")(
+      no("Window"), hashOn("rep_id", Exactly(1))),
+    planned("s13_zorder_stats", "the verification buckets are a GlobalRowNumber rank over " +
+      "a range exchange, with no SinglePartition sort")(
+      noSinglePartition, ranged(Exactly(1)), WindowBy("_pid", AtLeast(1))),
+    planned("sim_prefix_rerank", "the corpus-wide stage ranks through the TopKPerKey pair, " +
+      "so neither stage shuffles more than its per-query candidates")(
+      Node("TopKPerKey", AtLeast(2)), hashOn("query_id", Exactly(1)), has("BroadcastExchange")),
+    planned("scd2_merge", "one exchange and one sort feed the lag, the collapse filter and " +
+      "the lead")(
+      shuffles(1), hashOn("o_orderkey", Exactly(1)), Node("Sort", Exactly(1)),
+      Node("Window", Exactly(2))),
+    planned("fe_group_split", "the split assignment rides the broadcast customer side, and " +
+      "the distinct count is two partial-aggregated exchanges")(
+      has("BroadcastHashJoin"), shuffles(2), Node("HashAggregate", Exactly(4))),
+    planned("fe_target_loo", "the category table broadcasts back onto the fact side, which " +
+      "is read exactly twice")(
+      has("BroadcastHashJoin"), Node("FileSourceScan", Exactly(2)),
+      hashOn("o_orderpriority", Exactly(1))),
+    planned("drift_psi", "one aggregate over one scan and a bin-sized window are the whole " +
+      "drift gate")(
+      Node("FileSourceScan", Exactly(1)), shuffles(2)),
+    planned("drift_ks", "the CDF is a distributed cumulative sum: range exchange plus " +
+      "per-partition windows, no unpartitioned window")(
+      ranged(Exactly(1)), WindowBy("_pid", AtLeast(1)), noUnpartitionedWindow),
+    planned("drift_jsd", "the same single pass as drift_psi: one aggregate over one scan " +
+      "and a bin-sized window")(
+      Node("FileSourceScan", Exactly(1)), shuffles(2)),
+    planned("a_spearman", "both rank tables are distributed CDFs over range exchanges, and " +
+      "the only unpartitioned windows run over the offset tables")(
+      ranged(AtLeast(2)), WindowBy("_pid", AtLeast(2)), WindowBy("", Exactly(2)), noCartesian),
+    planned("ml_map", "average precision ranks only the TopKPerKey survivors")(
+      Node("TopKPerKey", Exactly(2))),
+    planned("t_zipf", "term frequencies come from one exploded aggregate, and the top-200 " +
+      "rank is range-partitioned, not one task")(
+      has("Generate"), hashOn("term", Exactly(1)), ranged(Exactly(1)), noUnpartitionedWindow),
+    planned("ab_ipw", "one aggregation to the stratum table, then scalar arithmetic: one " +
+      "pass, no join")(
+      Node("FileSourceScan", Exactly(1)), shuffles(2), no("Join")),
+    planned("w10_rolling_median", "the percentile window runs over the day-grain rollup, " +
+      "not the raw orders")(
+      WindowBy("prio", Exactly(1)), shuffles(2)),
+    planned("mm_phash_sigs", "signature extraction is one mapPartitions pass that reads " +
+      "only the id and payload columns and shuffles nothing")(
+      shuffles(0), has("MapPartitions"), Unread("lang"), Unread("source")),
+    planned("mm_phash_pairs", "the only join is the pigeonhole equi-join on (chunk_idx, " +
+      "chunk)")(
+      Node("Join", Exactly(1)), noCartesian, noNestedLoop),
+    planned("t_bigram_lm", "the model joins back as keyed hash joins, never a cartesian")(
+      noCartesian, no("SortMergeJoin")),
+    planned("a11_corr", "all pairwise moment sums are one full-pass aggregate")(
+      shuffles(1), singlePartition(Exactly(1)), Node("FileSourceScan", Exactly(1))),
+    planned("ev_funnel", "every stage's type predicate is pushed into its parquet scan")(
+      pushed("EqualTo(event_type,view)"), pushed("EqualTo(event_type,click)"),
+      pushed("EqualTo(event_type,purchase)")),
+    planned("ev_transitions", "one per-user exchange feeds the window, and a type-pair " +
+      "aggregate ends the plan")(
+      hashOn("user_id", Exactly(1)), shuffles(2), Node("Window", Exactly(1))),
+    planned("a12_ols_group", "all five moment sums per group are one partial-aggregated " +
+      "HashAggregate")(
+      shuffles(1), Node("HashAggregate", Exactly(2))),
+    executed("fe_quantile_bin", "cutpoints never funnel the data through one task")(
+      ranged(AtLeast(1)), WindowBy("_pid", AtLeast(1)), has("BroadcastNestedLoopJoin"),
+      singlePartition(Exactly(1))),
+    planned("t_bm25", "both corpus-stat frames broadcast, so scoring adds no fact-side " +
+      "exchange")(
+      Node("BroadcastExchange", AtLeast(2)), no("SortMergeJoin")),
+    planned("d_editdist_pairs", "PassJoin blocking makes the candidate join an equi-join, " +
+      "with no cartesian")(
+      noCartesian, noNestedLoop),
+    planned("dp_profile", "all columns profile through ONE Expand scan, not k jobs")(
+      has("Expand"), Node("FileSourceScan", Exactly(1))),
+    planned("d_prefix_jaccard", "candidate generation is an equi-join, never a cartesian")(
+      noCartesian, noNestedLoop),
+    planned("inc_agg_maintain", "the delta merges into the snapshot through one full-outer " +
+      "join of two group-sized frames")(
+      Joins("FullOuter", Exactly(1)), hashOn("o_orderstatus", Exactly(2))),
+    planned("ev_peak_concurrency", "the running sum is range exchange plus per-partition " +
+      "windows, with no unpartitioned window over the timeline")(
+      ranged(Exactly(1)), WindowBy("_pid", AtLeast(1)), noUnpartitionedWindow,
+      singlePartition(AtMost(1))),
+    planned("g_pagerank3", "each iteration is a keyed join and aggregate, never a nested " +
+      "loop or window")(
+      noCartesian, noNestedLoop, no("Window")),
+    planned("g_triangles", "wedge and closing joins are hash joins, never nested loops")(
+      noCartesian, Node("BroadcastNestedLoopJoin", AtMost(1)), has("HashJoin")),
+    planned("j13_interval_overlap", "grid join is an equi-join, never a nested loop")(
+      noCartesian, noNestedLoop),
+    planned("ml_lift", "global ranking is range-partitioned, never a data-sized single task")(
+      ranged(AtLeast(1)), WindowBy("_pid", AtLeast(1))),
+    planned("d_contamination", "probe shingle set broadcasts; corpus side is never " +
+      "self-joined")(
+      has("BroadcastHashJoin"), noCartesian, no("SortMergeJoin")),
+    planned("ev_rolling24h", "exactly one exchange (entity hash), frame is streaming")(
+      shuffles(1), hashOn("user_id", Exactly(1))),
+    planned("sk_cms_err", "the d x w sketch BROADCASTS to the probe side")(
+      has("BroadcastHashJoin"), noCartesian),
+    planned("dq_volume_anomaly", "monitoring runs on the per-(type, day) aggregate of one " +
+      "scan, with one type-keyed window")(
+      Node("FileSourceScan", Exactly(1)), shuffles(2), WindowBy("event_type", Exactly(1))),
+    executed("g_common_neighbors", "no cartesian/nested-loop; wedge pairs stay array-side")(
+      noCartesian, noNestedLoop, Joins("LeftAnti", Exactly(1))),
+    planned("fe_binned_woe", "the 1-row cutpoint frame broadcasts onto the scan")(
+      has("BroadcastNestedLoopJoin"), no("SortMergeJoin"), ranged(AtLeast(1))),
+    planned("ev_attribution", "window + final agg only — never a conversions×touches join")(
+      no("Join"), shufflesAtMost(3), hashOn("user_id", Exactly(1))),
+    planned("ev_rolling_wau", "sliding distinct rides aggs, never a window over raw events")(
+      no("Window"), shufflesAtMost(3)),
+    executed("a15_pareto_abc", "cumulative share is a distributed prefix sum — the only " +
+      "SinglePartition exchange feeds the ≤P-row offsets table, never the |customers| frame")(
+      singlePartition(Exactly(2)), ranged(Exactly(1)), hashOn("_pid", Exactly(2)),
+      has("ReusedExchange")),
+    planned("d_chunk_dedup", "frequency join is an equi-join; chunk and doc aggs only")(
+      shufflesAtMost(4), noCartesian, noNestedLoop),
+    planned("ml_survival_km", "the n_risk window never sees data-sized input")(
+      has("HashAggregate"), singlePartition(AtLeast(1)), shufflesAtMost(4)),
+    planned("o14_group_sample_k", "per-stratum draw rides TopKPerKey, not a window sort")(
+      has("TopKPerKey"), shuffles(1), no("Window")),
+    planned("a16_weighted_quantiles", "the cumulative weight is range exchange plus " +
+      "per-partition windows, with no unpartitioned window")(
+      ranged(Exactly(1)), WindowBy("_pid", AtLeast(1)), noUnpartitionedWindow),
+    planned("fe_quantile_match", "both rankings ride GlobalRowNumber range exchanges, and " +
+      "the endpoints arrive by equi-joins")(
+      ranged(AtLeast(2)), noSinglePartition, noUnpartitionedWindow, noNestedLoop,
+      noCartesian),
+    planned("ml_ndcg", "NDCG@k ranks only the TopKPerKey survivors")(
+      Node("TopKPerKey", AtLeast(2))),
+    executed("fe_rfm", "quintile ranks are range-partitioned — no SinglePartition window")(
+      noSinglePartition, hashOn("o_custkey", Exactly(1)), ranged(Exactly(3)),
+      WindowBy("_pid", Exactly(3))),
+    built("ml_auc_rank", "aucRocDf computes while it is built (one ranged job, at most P " +
+      "partials to the driver); PlansSpec checks its value against the windowed form"),
+    planned("p14_unpivot", "melt is an executor-side Expand — zero shuffles")(
+      shuffles(0), has("Expand"), no("Join")),
+    planned("ev_attribution_linear", "every per-channel count is one RANGE-frame Window " +
+      "over one user exchange, with no touch-by-conversion join")(
+      Node("Window", Exactly(1)), hashOn("user_id", Exactly(1)), no("Join"), has("Generate")),
+    planned("a19_gini", "the global rank is range exchange plus per-partition row_number, " +
+      "with no unpartitioned window")(
+      ranged(Exactly(1)), WindowBy("_pid", AtLeast(1)), noUnpartitionedWindow),
+    planned("sim_mmr_rerank", "one grouping exchange feeds a per-query MapGroups that " +
+      "runs the greedy loop executor-locally")(
+      Node("MapGroups", Exactly(1)), Node("TopKPerKey", Exactly(2)), shuffles(2),
+      has("BroadcastExchange")),
+    planned("sk_kmv_merge", "the per-shard k-min pass is one exchange on the shard, " +
+      "bounded by TopKPerKey")(
+      hashOn("shard", Exactly(1)), has("TopKPerKey")),
+    planned("o16_balanced_batches", "batch ids come from a range-partitioned rank and one " +
+      "broadcast join of per-label offsets, with no SinglePartition exchange")(
+      noSinglePartition, ranged(AtLeast(1)), Node("BroadcastHashJoin", Exactly(1))),
+    planned("s16_dynamic_overwrite", "the read-back is one scan of the partitioned table " +
+      "and one aggregate")(
+      Node("FileSourceScan", Exactly(1)), shuffles(1)),
+    planned("p15_dynamic_pivot", "the main job is one scan and one two-phase aggregate " +
+      "with literal CASE arms")(
+      Node("FileSourceScan", Exactly(1)), shuffles(2)),
+    planned("d_simhash_pairs", "candidate generation is an equi-join on (chunk_idx, " +
+      "chunk), never a cross join")(
+      noCartesian, noNestedLoop, has("BroadcastHashJoin")),
+    planned("ev_streaks", "two exchanges, both on the user: the day-distinct and the " +
+      "window; the island aggregate adds none")(
+      shuffles(2), hashOn("user_id", Exactly(2)), no("Join")),
+    planned("dq_table_checksum", "one scan, one partial aggregate, one single-row exchange")(
+      shuffles(1), singlePartition(Exactly(1)), Node("FileSourceScan", Exactly(1))),
+    planned("inc_join_maintain", "the delta terms probe by broadcast joins, and the merge is " +
+      "one full-outer join on the rollup")(
+      Node("BroadcastHashJoin", AtLeast(3)), Joins("FullOuter", Exactly(1))),
+    planned("sk_kmv_intersect", "both sides funnel through TakeOrderedAndProject(k = 64), " +
+      "never a global sort")(
+      Node("TakeOrderedAndProject", AtLeast(2)), ranged(Exactly(0)), noCartesian),
+    planned("ts_acf", "the daily rollup and one per-key exchange feed a single window that " +
+      "builds every lag, with no self-join")(
+      shuffles(2), Node("Window", Exactly(1)), no("Join")),
+    planned("o18_priority_sample", "weighted sampling is a TakeOrderedAndProject(500) " +
+      "over one scan, never a global sort")(
+      has("TakeOrderedAndProject"), no("Sort"), shuffles(0)),
+    planned("ts_cusum", "one exchange on the series key feeds both window passes, with no " +
+      "join")(
+      hashOn("_k", Exactly(1)), shuffles(2), no("Join")),
+    planned("ev_attribution_position", "first and last touch ride the same one Window " +
+      "over one user exchange, with no touch-by-conversion join")(
+      Node("Window", Exactly(1)), hashOn("user_id", Exactly(1)), no("Join")),
+    planned("j15_nearest_event", "two union-window as-of passes, never a nested loop or " +
+      "cartesian")(
+      Node("Union", Exactly(2)), WindowBy("_asof_k", Exactly(2)), noNestedLoop, noCartesian),
+    planned("a24_trimmed_mean", "one exchange on the group key serves the rank window, the " +
+      "count window and the grouped mean")(
+      shuffles(1), hashOn("o_orderstatus", Exactly(1)), Node("Window", Exactly(2)),
+      no("Join")),
+    planned("t_chunk_windows", "chunking is a pure executor-side map with no exchange")(
+      shuffles(0), has("Generate")),
+    planned("t_quality_cascade", "one scan, one exchange — the whole cascade is codegen'd " +
+      "column expressions feeding a tiny agg")(
+      shufflesAtMost(1), Node("FileSourceScan", Exactly(1))),
+    planned("o20_domain_mix", "the data-sized rank window is partitioned by the range pid, " +
+      "never by the domain key")(
+      WindowBy("_pid", AtLeast(1)), WindowBy("lang", Exactly(0)), ranged(AtLeast(1))),
+    planned("w7_rank_ntile", "rank, dense_rank and ntile ride one range-partitioned " +
+      "GlobalRowNumber rank, with no window keyed on the 3-value status")(
+      WindowBy("o_orderstatus", Exactly(0)), WindowBy("_pid", AtLeast(1)),
+      ranged(AtLeast(1))),
+    planned("pipeline_relational", "patients dim broadcast; no cartesian; cohort windows " +
+      "partitioned (no SinglePartition funnel over the fact side)")(
+      has("BroadcastHashJoin"), noCartesian, noSinglePartition),
+    planned("er_link_scores", "record linkage is one equi-join on the blocking fragment")(
+      Node("Join", Exactly(1)), noCartesian, noNestedLoop),
+    planned("sk_hist_quantiles", "the sketch build is explode-free, and the exact side " +
+      "rides the range-partitioned distributed CDF")(
+      no("Generate"), ranged(AtLeast(1)), WindowBy("_pid", AtLeast(1))),
+    planned("sim_kmeans_lloyd", "each of the three Lloyd rounds broadcasts the k-row " +
+      "centroids into a nested-loop join, with no window over the corpus")(
+      Node("BroadcastNestedLoopJoin", Exactly(3)), no("Window"), noCartesian),
+    planned("sim_ivf_topk", "the centroids broadcast into both assignment joins, and the " +
+      "corpus is never self-joined or globally sorted")(
+      has("BroadcastExchange"), ranged(Exactly(0)), noCartesian),
+    planned("sql_q21_blame", "EXISTS/NOT EXISTS plan as semi + anti joins, not per-row " +
+      "subquery probes")(
+      Joins("LeftSemi", AtLeast(1)), Joins("LeftAnti", AtLeast(1)), noCartesian, noNestedLoop),
+    planned("g_components", "the size histogram is two hash aggregates over the labeled " +
+      "components, with no cartesian")(
+      Node("HashAggregate", Exactly(4)), noCartesian, noNestedLoop),
+    planned("s17_synth_source", "the DSv2 scan takes the consumed id range, so no residual " +
+      "Filter survives, and nothing reads a file")(
+      has("BatchScan"), no("Filter"), no("FileSourceScan"), shuffles(1)),
+    built("s18_checksum_sink", "the checksum sink appends while the row is built; the " +
+      "readout is the committed 1-row entry"),
+    planned("ts_backtest_naive", "the seasonal-naive forecast is one equi-join of the " +
+      "daily frame with itself shifted, with no window")(
+      Node("Join", Exactly(1)), no("Window")),
+    planned("mm_frame_sample", "frame sampling is arithmetic and explode on the scan, " +
+      "with no exchange")(
+      shuffles(0), has("Generate")),
+    planned("t_bpe_merges", "localCheckpoint keeps the plan flat: the rounds read " +
+      "checkpointed frames and the readout shuffles nothing")(
+      has("RDDScan"), shuffles(0)),
+    planned("pipeline_curation", "staged funnel plan — every join is hash/broadcast " +
+      "keyed (no cartesian), and the benchmark probe side broadcasts")(
+      noCartesian, has("BroadcastExchange")),
+    planned("sim_ivfpq_topk", "pivots/codebook/query side broadcast; the corpus is never " +
+      "cartesian-joined against itself")(
+      noCartesian, has("BroadcastExchange")),
+    planned("t_unigram_segment", "the vocabulary is one hash-agg, and segmentation is a " +
+      "shuffle-free typed pass")(
+      shuffles(1), has("MapPartitions")),
+    planned("ev_stream_psi", "the readout runs over the drained bin table, with nothing " +
+      "event-sized left to scan")(
+      no("FileSourceScan"), shuffles(1)),
+    planned("sql_q17_smallqty", "the per-part mean decorrelates into one aggregate on " +
+      "l_partkey joined back")(
+      hashOn("l_partkey", Exactly(1)), noNestedLoop, noCartesian),
+    planned("pipeline_pretrain", "the packing offsets ride a range-partitioned two-pass " +
+      "cumsum over the persisted keep-set, with no SinglePartition exchange")(
+      noSinglePartition, ranged(AtLeast(1)), has("InMemoryTableScan")),
+    planned("pipeline_rag", "queries broadcast against the curated index; no cartesian; " +
+      "the corpus-sized frames join hash-keyed")(
+      noCartesian, has("BroadcastExchange")),
+    planned("t_wordpiece_encode", "the positional vocabulary is one hash-agg, and the " +
+      "greedy walk shuffles nothing")(
+      shuffles(1)),
+    planned("sim_pqtrain_topk", "centroids and LUT broadcast every round; the corpus is " +
+      "never cartesian-joined")(
+      noCartesian, has("BroadcastExchange")),
+    planned("sim_ivfpq_recall", "the exact leg meets the ANN leg in a semi-join, and " +
+      "nothing corpus-by-corpus is joined")(
+      Joins("LeftSemi", AtLeast(1)), noCartesian),
+    planned("d_dup_spans", "island merge windows partition by doc_id (high-cardinality, " +
+      "bounded by one doc's length) — no corpus-wide funnel")(
+      noSinglePartition, noCartesian, WindowBy("doc_id", AtLeast(1))),
+    executed("o21_temp_mix", "like o20, the rank window is bounded by the range-partition " +
+      "pid, never the low-cardinality domain key")(
+      WindowBy("_pid", AtLeast(1)), WindowBy("lang", Exactly(0))),
+    planned("inc_lsh_maintain", "the delta probes the persisted index in one equi-join on " +
+      "(band, bucket)")(
+      Node("Join", Exactly(1)), noCartesian, has("InMemoryTableScan")),
+    planned("t_unigram_em", "only the word-count build shuffles, once")(
+      shuffles(1)),
+    built("ml_isotonic_bins", "the monotone fit closes over the collected bin readout " +
+      "while the row is built"),
+    planned("g_kcore", "localCheckpoint truncates each peel round's lineage, so the " +
+      "readout is one aggregate over checkpointed edges")(
+      has("RDDScan"), shuffles(1), no("Join")),
+    planned("a14_mode_per_group", "the row_number runs over the counts table (2 shuffles)")(
+      shuffles(2)),
+    planned("ev_cum_uniques", "running sum is post-aggregation — data shuffles only to " +
+      "aggs")(
+      shuffles(3)),
+    planned("ev_ohlc", "single agg pass, no per-(key,hour) window sort")(
+      no("Window"), shuffles(1)),
+    executed("fe_crossfit_encode", "one data-sized aggregation; windows run on the cell " +
+      "table")(
+      Node("FileSourceScan", Exactly(1))),
+    planned("fe_lag_features", "daily hash-agg plus ONE window exchange")(
+      shuffles(2)),
+    planned("fe_mix_sample", "keep thresholds broadcast; no window over the corpus")(
+      has("BroadcastHashJoin"), no("Window")),
+    planned("fe_neg_pairs", "probes meet candidates in a bucket equi-join, no cross join")(
+      noCartesian, noNestedLoop),
+    planned("j2_join_agg", "dimension side is broadcast, not shuffled")(
+      has("BroadcastHashJoin")),
+    planned("o2_shuffle_hash", "hash-order 'shuffle' plans as TakeOrdered, never a " +
+      "global sort")(
+      has("TakeOrderedAndProject")),
+    planned("p8_regex_filter", "regex filter reaches the scan as a data filter, not a " +
+      "post-shuffle step")(
+      shuffles(0)),
+    planned("sk_bloom_fp", "the bit relation reaches probes via broadcast")(
+      has("BroadcastHashJoin")),
+    planned("sk_kmv_distinct", "the k-smallest funnel is a TakeOrdered, never a global sort")(
+      has("TakeOrderedAndProject"), no("Sort")),
+    planned("sql_q18_bigorders", "the HAVING-IN subquery plans as a join, not a per-row " +
+      "probe")(
+      has("Join"), noNestedLoop, noCartesian),
+    planned("sql_q5_local", "the dimension chain broadcasts (no fact-side re-shuffle per " +
+      "dim)")(
+      Node("BroadcastHashJoin", AtLeast(3)), noCartesian),
+    planned("t_ngram_novelty", "first-occurrence agg and join share the shingle exchange")(
+      shufflesAtMost(4), noNestedLoop),
+    planned("t_scrub_pii", "redaction is scan-speed — zero shuffles, pure projection")(
+      shuffles(0), no("Window")),
+    planned("t_tfidf", "the tf→df join does not re-shuffle the tf side (partitioning " +
+      "reused)")(
+      shufflesAtMost(4)),
+    planned("w9_window_suite", "all four window functions share ONE exchange")(
+      shuffles(1))
   )
 
-  private def streamingPlan(spark: SparkSession, sfDir: String): String = {
+  /** The micro-batch plan of `ev_stream_hourly`'s windowed counts: the
+    * registry row returns the drained memory-sink table, whose plan shows
+    * none of the state-store operators. */
+  private def streamingPlan(spark: SparkSession, sfDir: String)
+      : (String, org.apache.spark.sql.execution.SparkPlan) = {
     import graft.streaming.StreamOps
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val agg = StreamOps.windowedCountsExact(StreamOps.eventsStream(spark, sfDir))
     spark.catalog.dropTempView("plan_audit_stream")
@@ -980,7 +523,25 @@ object PlanAudit {
     q.awaitTermination()
     val buf = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(buf, true, "UTF-8"))(q.explain())
-    buf.toString("UTF-8")
+    (tools.DumpPlans.normalize(buf.toString("UTF-8")),
+      q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan)
+  }
+
+  /** Build `row`'s frame (in a [[Materialize.scoped]] scope, so its pins go
+    * with it), run it first when the row is [[Executed]], and check it. */
+  def audit(spark: SparkSession, sfDir: String, row: Row): Audit = Materialize.scoped() {
+    val (computed, plan, executedPlan) =
+      if (row.name == "ev_stream_hourly") {
+        val (text, p) = streamingPlan(spark, sfDir)
+        (false, text, p)
+      } else {
+        val df = SparkEntry.queries(row.name)(spark, sfDir)
+        if (row.mode == Executed) df.collect()
+        (tools.DumpPlans.computedAtBuild(df), tools.DumpPlans.render(df),
+          df.queryExecution.executedPlan)
+      }
+    val operators = PlanCheck.operators(executedPlan)
+    Audit(row, computed, plan, row.checks.map(c => c -> c.holds(operators)))
   }
 
   def main(args: Array[String]): Unit = {
@@ -989,23 +550,28 @@ object PlanAudit {
     val spark = Session.local(Session.cpus)
 
     val sb = new StringBuilder
-    sb ++= "# PLANS — physical-plan audit of the headline queries\n\n"
-    sb ++= s"Generated by `sbt \"runMain graft.PlanAudit $sfDir $outPath\"` — regenerate after optimizer-relevant changes.\n"
-    sb ++= "Each section states the scale property the plan must exhibit, then the `explain(\"formatted\")` output proving it.\n"
+    sb ++= "# PLANS — the registry's plan contract, checked\n\n"
+    sb ++= s"Generated by `SPARK_GRAFT_CPUS=${Session.cpus} sbt \"runMain graft.PlanAudit $sfDir " +
+      "PLANS.md\"` from the table in " +
+      "`PlanAudit.scala`; PlansSpec runs the same checks at sf0.001.\n"
+    sb ++= "Each section gives the row's reason, each check with its verdict, then the " +
+      "`explain(\"formatted\")` plan the checks read.\n"
 
-    audited.foreach { case (name, why) =>
-      // the streaming query's interesting plan is the micro-batch execution
-      // (StateStoreRestore/Save), not the drained memory-sink table the
-      // batch contract returns — capture the stream's own explain
-      val plan =
-        if (name == "ev_stream_hourly") tools.DumpPlans.normalize(streamingPlan(spark, sfDir))
-        else tools.DumpPlans.render(SparkEntry.queries(name)(spark, sfDir))
-      sb ++= s"\n## `$name`\n\n"
-      sb ++= why.stripMargin.linesIterator.map(_.trim).mkString(" ")
-      sb ++= "\n\n```\n" + plan.trim + "\n```\n"
-      println(s"[plans] $name ok")
+    val audits = table.map { row =>
+      val a = audit(spark, sfDir, row)
+      sb ++= s"\n## `${row.name}`\n\n${row.reason}.\n\n"
+      sb ++= (if (a.report.isEmpty) "Computed at build time: no checks." else a.report) + "\n"
+      sb ++= "\n```\n" + a.plan.trim + "\n```\n"
+      println(s"[plans] ${row.name} ${if (a.ok) "ok" else "FAIL\n" + a.report}")
+      a
     }
     Files.writeString(Paths.get(outPath), sb.toString)
     spark.stop()
+    val failed = audits.filterNot(_.ok).map(_.row.name)
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[plans] ${failed.size} row(s) fail the plan contract: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

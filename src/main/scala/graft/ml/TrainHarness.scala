@@ -284,9 +284,12 @@ object TrainHarness {
     *
     * The resampled `(features, label)` frame is pinned and counted (n),
     * then compacted ([[compactForFit]]) and pinned again: the fit, and a
-    * CV grid before it, iterate that copy. `regParam(train, n)` picks λ
-    * over the pinned compacted train: a fixed value, [[sklearnReg]] at a
-    * fixed C, or a [[gridSearchLr]] over a C grid. Every pin goes when
+    * CV grid before it, iterate that copy. When the compaction keeps the
+    * partition count, it is not pinned here: the readout holds one train
+    * pin, and the fit pins the coalesced view only while it runs.
+    * `regParam(train, n)` picks λ over the compacted train: a fixed
+    * value, [[sklearnReg]] at a fixed C, or a [[gridSearchLr]] over a C
+    * grid. Every pin goes when
     * the call returns or throws; a frame the caller cached stays cached.
     * Callers map over their strategies, in order or with [[inParallel]].
     */
@@ -297,14 +300,23 @@ object TrainHarness {
   )(readout: L1Fit => T): T = {
     val raw = Resamplers.resample(strategy, train, idCol, featuresCol, labelCol, seed)
       .select(col(featuresCol), col(labelCol))
+    def fitAndRead(fit: DataFrame, n: Long): T = {
+      val reg = regParam(fit, n)
+      val scored = logisticL1Margins(fit, test, featuresCol, labelCol, reg)
+      Materialize.scoped(scored)(readout(new L1Fit(n, reg, scored, labelCol)))
+    }
     Materialize.scoped(raw) {
       val n = raw.count()
       val fit = compactForFit(raw, n)
-      Materialize.scoped(fit) {
+      // partition counts of a pinned frame and of a coalesce over it are
+      // read without a job. A coalesce that keeps the count need not keep
+      // the layout (fitting the pinned train itself changed ResamplerTable's
+      // SMOTE row), and the CV folds and the fit's sums follow it, so the
+      // fit reads the coalesced view; only the fit's own pin copies it.
+      if (fit.rdd.getNumPartitions == raw.rdd.getNumPartitions) fitAndRead(fit, n)
+      else Materialize.scoped(fit) {
         fit.count()
-        val reg = regParam(fit, n)
-        val scored = logisticL1Margins(fit, test, featuresCol, labelCol, reg)
-        Materialize.scoped(scored)(readout(new L1Fit(n, reg, scored, labelCol)))
+        fitAndRead(fit, n)
       }
     }
   }

@@ -43,21 +43,28 @@ object DumpPlans {
       case (p, (re, to)) => re.replaceAllIn(p, to)
     }
 
+  /** Whether a registry row computed while it was built: its executed
+    * plan is a bare scan of data the builder already produced (a
+    * `LocalTableScan`, or an RDD scan of a `parallelize`d result), so the
+    * plan shows none of that work. */
+  private[graft] def computedAtBuild(df: org.apache.spark.sql.DataFrame): Boolean = {
+    import org.apache.spark.sql.execution.{LocalTableScanExec, RDDScanExec, WholeStageCodegenExec}
+    df.queryExecution.executedPlan match {
+      case _: LocalTableScanExec | _: RDDScanExec | WholeStageCodegenExec(_: RDDScanExec) => true
+      case _ => false
+    }
+  }
+
   /** The plan text of a registry row's frame, as both tools write it:
-    * [[normalize]]d `explain("formatted")`, headed by a note when the
-    * executed plan is a bare scan of data the builder already produced
-    * (a `LocalTableScan`, or an RDD scan of a `parallelize`d result): the
-    * row computed while it was built, so its plan shows none of that work.
+    * [[normalize]]d `explain("formatted")`, headed by a note when the row
+    * [[computedAtBuild]].
     */
   private[graft] def render(df: org.apache.spark.sql.DataFrame): String = {
-    import org.apache.spark.sql.execution.{LocalTableScanExec, RDDScanExec, WholeStageCodegenExec}
     val plan = normalize(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
-    df.queryExecution.executedPlan match {
-      case _: LocalTableScanExec | _: RDDScanExec | WholeStageCodegenExec(_: RDDScanExec) =>
-        "-- computed at build time: the plan below is only the scan of the " +
-          "builder's collected result\n" + plan
-      case _ => plan
-    }
+    if (computedAtBuild(df))
+      "-- computed at build time: the plan below is only the scan of the " +
+        "builder's collected result\n" + plan
+    else plan
   }
 
   def main(args: Array[String]): Unit = {

@@ -146,6 +146,18 @@ class TrainHarnessSpec extends SparkSpecBase {
     } finally cached.unpersist()
   }
 
+  test("fitStrategy: a compaction that keeps the partition count pins the " +
+    "train once") {
+    // one partition against compactForFit's floor of 2: the coalesce is a
+    // no-op, so the readout holds the train's pin and the scores' pin only
+    val onePartition = df.coalesce(1)
+    val before = pins
+    val held = TrainHarness.fitStrategy("base", onePartition, df, "id", "features", "label",
+      42L, (_, _) => 0.01) { f => f.scored.count(); pins - before }
+    assert(held == 2, s"the readout held $held pins: the train was pinned twice")
+    assert(pins == before)
+  }
+
   test("an unknown strategy name is rejected") {
     val e = intercept[IllegalArgumentException] {
       TrainHarness.fitStrategy("adasyn", df, df, "id", "features", "label", 42L,

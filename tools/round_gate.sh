@@ -5,6 +5,9 @@
 # demands (BENCH_NOTES, memory notes — now encoded here):
 #   1. no concurrent heavy jobs (load check up front, hard refusal)
 #   2. sbt test            — the spec tier
+#   2b. PlanAudit at sf0.01 — the plan contract (PlanAudit.table), written
+#      to a temp path; any failing check fails the gate, and the output
+#      is compared with the committed PLANS.md
 #   3. Verify + verify_local at sf0.01 — the DuckDB correctness gate
 #   4. ORACLE_TIMES freshness check — every oracled query must have a
 #      committed DuckDB baseline at the bench SF (regen is a separate,
@@ -68,6 +71,22 @@ else
     tail -30 /tmp/round_gate_sbt_test.log
     record "sbt test" "FAIL (log: /tmp/round_gate_sbt_test.log)"
   fi
+fi
+
+step "PlanAudit @ sf0.01 (plan contract)"
+PLANS_OUT=/tmp/round_gate_PLANS.md
+if SPARK_GRAFT_CPUS=4 sbt -batch "runMain graft.PlanAudit $VERIFY_SF $PLANS_OUT" \
+     > /tmp/round_gate_plans.log 2>&1; then
+  if cmp -s "$PLANS_OUT" PLANS.md; then
+    record "plan audit" PASS
+  else
+    echo "PLANS.md is stale: regenerate with" >&2
+    echo "  SPARK_GRAFT_CPUS=4 sbt \"runMain graft.PlanAudit $VERIFY_SF PLANS.md\"" >&2
+    record "plan audit" "FAIL (PLANS.md differs from $PLANS_OUT)"
+  fi
+else
+  grep -E "FAIL|fail the plan contract" /tmp/round_gate_plans.log | tail -20
+  record "plan audit" "FAIL (log: /tmp/round_gate_plans.log)"
 fi
 
 step "Verify @ sf0.01 + DuckDB compare"
