@@ -6,15 +6,54 @@ import graft.plans.PlanCheck
 
 /** Physical-plan shape, the scale contract: one test per row of
   * [[PlanAudit.table]] (a row that computes while it is built has no plan
-  * to check), then the plan claims about frames the registry does not
-  * build and the one value check a build-time row needs.
+  * to check), claims about single rows checked apart from their table row,
+  * then the plan claims about frames the registry does not build and the
+  * one value check a build-time row needs.
   */
 class PlansSpec extends SparkSpecBase {
 
-  for (row <- PlanAudit.table if row.mode != PlanAudit.Built) test(row.title) {
+  private def audited(title: String, row: PlanAudit.Row): Unit = test(title) {
     val audit = PlanAudit.audit(spark, sfDir, row)
     assert(audit.ok, s"${audit.report}\n${audit.plan}")
   }
+
+  /** A claim about one registry row's plan, checked apart from its table row. */
+  private def claim(title: String, query: String, mode: PlanAudit.Mode)(checks: PlanCheck*): Unit =
+    audited(title, PlanAudit.Row(query, title, mode, checks))
+
+  for (row <- PlanAudit.table if row.mode != PlanAudit.Built) audited(row.title, row)
+
+  // one shuffle for Window(partitionBy o_custkey); lead + backfill reuse it
+  claim("cohort labeling: both windows share ONE exchange (same partition key)",
+    "cohort_label", PlanAudit.Planned)(
+    PlanCheck.Shuffles(PlanCheck.Exactly(1)),
+    PlanCheck.Shuffles(PlanCheck.Exactly(1), PlanCheck.HashOn("o_custkey")))
+
+  // codegen stages appear once the query has run and adaptive execution
+  // has finalized the plan
+  claim("whole-stage codegen covers the cohort expression pipeline",
+    "cohort_label", PlanAudit.Executed)(
+    PlanCheck.Node("WholeStageCodegen", PlanCheck.AtLeast(1)))
+
+  // the orders collapse to per-customer rows in one o_custkey exchange; the
+  // recency, frequency and monetary quintiles are three range-partitioned
+  // GlobalRowNumber passes over that frame, none through one task
+  claim("fe_rfm: data collapses once; three parallel ranked passes score the " +
+    "per-customer frame", "fe_rfm", PlanAudit.Planned)(
+    PlanCheck.Shuffles(PlanCheck.Exactly(1), PlanCheck.HashOn("o_custkey")),
+    PlanCheck.Shuffles(PlanCheck.Exactly(3), PlanCheck.Range),
+    PlanCheck.Shuffles(PlanCheck.Exactly(0), PlanCheck.Single))
+
+  // the lazy RunningTotal references its ranged subtree from three places
+  // (main cumsum, offsets, grand total), so the static plan repeats the
+  // upstream exchanges; the executed plan must collapse the duplicates
+  // into reused exchanges. Distinct shuffles: custkey agg, range
+  // partition, _pid totals agg, offsets SinglePartition (≤P rows), 1-row
+  // grand-total SinglePartition, the window's _pid clustering, class agg.
+  claim("a15_pareto_abc: distributed prefix sum + class agg — duplicated " +
+    "subtrees collapse to reused exchanges at runtime", "a15_pareto_abc", PlanAudit.Executed)(
+    PlanCheck.Shuffles(PlanCheck.Exactly(7)),
+    PlanCheck.Node("ReusedExchange", PlanCheck.AtLeast(1)))
 
   test("sim_ivf_recall: corpus cluster assignment is an aggregate, not a window sort") {
     val df = graft.sim.Similarity.ivfRecall(
