@@ -52,6 +52,12 @@ object Materialize {
     * (the sample is seeded per RDD id), while the per-partition offsets
     * the operator collected still describe the first partitioning: the
     * ids or sums come out wrong, not just slow.
+    *
+    * So a result over a range pass is a lazy frame over the ranged pin,
+    * and a caller inside a scope acts on it inside that scope. It is not
+    * cached: its plan embeds the collected offsets, which a rep that
+    * samples the range bounds afresh may change, so the cache manager
+    * would keep one more readout per rep.
     */
   def pin(df: DataFrame): DataFrame = {
     if (persistNew(df)) open.get.headOption.foreach(_ += df)

@@ -95,45 +95,44 @@ object DomainMix {
     *
     * Readout: (domain, n_domain, n_kept, kept_id_sum) — the id sum pins
     * WHICH rows the hash-rank selection kept, not just how many.
-    * Same scale shape as [[rebalance]]; the |domains|-row result is
-    * materialized inside a `Materialize.scoped` body, whose end releases
-    * the internal pin.
+    * Same scale shape as [[rebalance]], over the slim (domain, id, hash)
+    * projection; the |domains|-row result is a lazy frame over the rank's
+    * ranged pin ([[graft.Materialize.pin]]): a caller inside a
+    * `Materialize.scoped` body acts on it inside that body.
     */
   def temperatureMixCounts(docs: DataFrame, domainCol: String,
                            idCol: String, hash: Column): DataFrame = {
-    val counts = docs.groupBy(col(domainCol)).agg(count(lit(1)).as("_n_d"))
+    val kept = slim(docs, domainCol, idCol, hash)
+    val counts = kept.groupBy(col(domainCol)).agg(count(lit(1)).as("_n_d"))
     val tRow = counts.agg(min(sqrt(col("_n_d").cast("double"))).as("_sq"))
     val quota = counts.crossJoin(broadcast(tRow))
       .select(col(domainCol),
         floor(sqrt(col("_n_d").cast("double")) * col("_sq"))
           .cast("long").as("_k_d"))
-    graft.Materialize.scoped() {
-      val collected = selectByQuota(docs, counts, domainCol, idCol, hash, quota)
-        .groupBy(col(domainCol))
-        .agg(count(lit(1)).as("n_kept"), sum(col(idCol)).as("kept_id_sum"))
-        .join(counts, domainCol)
-        .select(col(domainCol).as("domain"), col("_n_d").as("n_domain"),
-          col("n_kept"), col("kept_id_sum"))
-        .cache()
-      collected.count()
-      collected
-    }
+    selectByQuota(kept, counts, domainCol, idCol, col("_h"), quota)
+      .groupBy(col(domainCol))
+      .agg(count(lit(1)).as("n_kept"), sum(col(idCol)).as("kept_id_sum"))
+      .join(counts, domainCol)
+      .select(col(domainCol).as("domain"), col("_n_d").as("n_domain"),
+        col("n_kept"), col("kept_id_sum"))
   }
 
-  /** Per-domain kept counts — the mix-readout form of [[rebalance]].
-    * |domains|-row result: materialized inside a `Materialize.scoped`
-    * body, whose end releases the internal pin.
+  /** Per-domain kept counts — the mix-readout form of [[rebalance]], over
+    * the slim (domain, id, hash) projection. The |domains|-row result is
+    * a lazy frame over the rank's ranged pin ([[graft.Materialize.pin]]):
+    * a caller inside a `Materialize.scoped` body acts on it inside that
+    * body.
     */
   def mixCounts(docs: DataFrame, domainCol: String, idCol: String,
                 hash: Column, targets: Map[String, Double]): DataFrame =
-    graft.Materialize.scoped() {
-      val collected = rebalance(docs, domainCol, idCol, hash, targets)
-        .groupBy(col(domainCol).as("domain"))
-        .agg(count(lit(1)).as("n_kept"))
-        .cache()
-      collected.count()
-      collected
-    }
+    rebalance(slim(docs, domainCol, idCol, hash), domainCol, idCol, col("_h"), targets)
+      .groupBy(col(domainCol).as("domain"))
+      .agg(count(lit(1)).as("n_kept"))
+
+  /** What a count readout ranks: the ranged pin lives as long as its
+    * caller's scope or the session, so it holds no payload columns. */
+  private def slim(docs: DataFrame, domainCol: String, idCol: String, hash: Column): DataFrame =
+    docs.select(col(domainCol), col(idCol), hash.as("_h"))
 
   /** DuckDB mirror of [[temperatureMixCounts]]: `hashSql` must render
     * the same hash over the table's own column names.

@@ -19,7 +19,9 @@ import org.apache.spark.sql.functions._
   * and re-samples the range bounds the offsets were computed against.
   * The pin is spill-safe (MEMORY_AND_DISK) and bounded by the operator
   * contract: callers pass slim (key, ord, measure) projections, not
-  * payload tables.
+  * payload tables. A caller's result is a lazy frame over the ranged pin
+  * (never a cached readout: its plan embeds the offsets), and a caller
+  * inside a scope acts on it inside that scope.
   */
 private[ops] object RangedCounts {
 

@@ -90,34 +90,30 @@ object StatsOps {
     * in decimal(38,0), so the one double division at the end is exact-in,
     * bit-identical across partitionings and engines. Ties in `value` are
     * rank-order-invariant for the statistic (equal values commute under
-    * the weight sum); `tie` only pins the numbering itself.
+    * the weight sum); `tie` only pins the numbering itself. The 1-row
+    * result is a lazy frame over the rank's ranged pin
+    * ([[graft.Materialize.pin]]): a caller inside a `Materialize.scoped`
+    * body acts on it inside that body.
     *
     * @param value non-negative integral measure (cast cents upstream).
     * @param tie   unique-per-row tiebreak column for deterministic ranks.
     */
   def gini(df: DataFrame, value: Column, tie: Column): DataFrame = {
     val base = df.select(value.cast("long").as("_v"), tie.as("_tie"))
-    // single-action derivation: the aggregate is the materialization,
-    // inside the scope that holds the rank's internal pin
-    graft.Materialize.scoped() {
-      val (ranked, n) =
-        GlobalRowNumber.withRowNumberAndCount(base, "_rn", col("_v").asc, col("_tie").asc)
-      val weight = (lit(2L) * col("_rn") - lit(n) - lit(1L)).cast("decimal(19,0)")
-      val collected = ranked.agg(
-        count(lit(1)).as("n_units"),
-        sum(col("_v").cast("decimal(38,0)")).as("_s"),
-        sum((weight * col("_v").cast("decimal(19,0)")).cast("decimal(38,0)")).as("_w"))
-        .select(
-          col("n_units"),
-          col("_s").cast("double").as("total"),
-          when(col("_s") === lit(0).cast("decimal(38,0)"), lit(0.0))
-            .otherwise(round(
-              col("_w").cast("double") / (lit(n.toDouble) * col("_s").cast("double")), 6))
-            .as("gini"))
-        .cache()
-      collected.count()
-      collected
-    }
+    val (ranked, n) =
+      GlobalRowNumber.withRowNumberAndCount(base, "_rn", col("_v").asc, col("_tie").asc)
+    val weight = (lit(2L) * col("_rn") - lit(n) - lit(1L)).cast("decimal(19,0)")
+    ranked.agg(
+      count(lit(1)).as("n_units"),
+      sum(col("_v").cast("decimal(38,0)")).as("_s"),
+      sum((weight * col("_v").cast("decimal(19,0)")).cast("decimal(38,0)")).as("_w"))
+      .select(
+        col("n_units"),
+        col("_s").cast("double").as("total"),
+        when(col("_s") === lit(0).cast("decimal(38,0)"), lit(0.0))
+          .otherwise(round(
+            col("_w").cast("double") / (lit(n.toDouble) * col("_s").cast("double")), 6))
+          .as("gini"))
   }
 
   /** Average-rank table (×2 to stay integral) for one column:

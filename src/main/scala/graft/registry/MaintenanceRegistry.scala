@@ -143,26 +143,19 @@ private[graft] object MaintenanceRegistry {
           dsum(col("o_totalprice")).as("monetary"))
         .withColumn("recency",
           datediff(lit("1998-08-02").cast("date"), col("last_order")).cast("long"))
-      // materialize the |customers|-sized result once inside the scope,
-      // whose end drops the three internal range-partition pins — one
-      // session pin instead of three widening ones (they otherwise
-      // accumulate across a 300-query bench)
-      graft.Materialize.scoped() {
-        val (r1, n) = GlobalRowNumber.withRowNumberAndCount(
-          per, "_rr", col("recency").asc, col("o_custkey").asc)
-        val r2 = GlobalRowNumber.withRowNumber(
-          r1, "_fr", col("frequency").desc, col("o_custkey").asc)
-        val r3 = GlobalRowNumber.withRowNumber(
-          r2, "_mr", col("monetary").desc, col("o_custkey").asc)
-        val collected = r3.select(
-          col("o_custkey"), col("recency"), col("frequency"), col("monetary"),
-          GlobalRowNumber.ntileFromRank(col("_rr"), n, 5).as("r_score"),
-          GlobalRowNumber.ntileFromRank(col("_fr"), n, 5).as("f_score"),
-          GlobalRowNumber.ntileFromRank(col("_mr"), n, 5).as("m_score"))
-          .cache()
-        collected.count()
-        collected
-      }
+      // a lazy readout over the three ranked pins (Materialize.pin), which
+      // stay for the session when no scope is open: a rep reuses them
+      val (r1, n) = GlobalRowNumber.withRowNumberAndCount(
+        per, "_rr", col("recency").asc, col("o_custkey").asc)
+      val r2 = GlobalRowNumber.withRowNumber(
+        r1, "_fr", col("frequency").desc, col("o_custkey").asc)
+      val r3 = GlobalRowNumber.withRowNumber(
+        r2, "_mr", col("monetary").desc, col("o_custkey").asc)
+      r3.select(
+        col("o_custkey"), col("recency"), col("frequency"), col("monetary"),
+        GlobalRowNumber.ntileFromRank(col("_rr"), n, 5).as("r_score"),
+        GlobalRowNumber.ntileFromRank(col("_fr"), n, 5).as("f_score"),
+        GlobalRowNumber.ntileFromRank(col("_mr"), n, 5).as("m_score"))
     }),
 
     // Pareto/ABC analysis — rank customers by spend, classify by exact

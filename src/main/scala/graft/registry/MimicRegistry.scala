@@ -456,12 +456,11 @@ private[graft] object MimicRegistry {
     // BROADCAST; both legs end in TakeOrdered(100) cuts and the fusion
     // works on ≤200 rows.
     "mimic_rrf_retrieval" -> ((s, d) => {
-      val docs = graft.sources.MimicSynth.dischargeSummariesAt(s, 1L)
+      val docs = Materialize.pin(graft.sources.MimicSynth.dischargeSummariesAt(s, 1L)
         .join(graft.sources.MimicSynth.admissions(s).filter(survivor)
           .select("HADM_ID"), Seq("HADM_ID"), "left_semi")
         .join(graft.sources.MimicSynth.diagnoses(s).select("HADM_ID"),
-          Seq("HADM_ID"), "left_semi")
-        .cache()
+          Seq("HADM_ID"), "left_semi"))
       val lex = graft.text.Bm25.scores(docs, "HADM_ID", "TEXT",
           Seq("pneumonia", "chronic", "renal", "failure"))
         .orderBy(desc("score"), asc("HADM_ID")).limit(100)
@@ -475,14 +474,13 @@ private[graft] object MimicRegistry {
       // times (query counts, doc norms, the dot itself) and a plain plan
       // re-runs the explode + vocab join + 1.4M-group aggregation per
       // reference (profile: three 13.8 MB exchanges, ~12-16 s task-time
-      // each, for one query's numbers). cache(), NOT localCheckpoint():
+      // each, for one query's numbers). A pin, NOT localCheckpoint():
       // the CacheManager dedups the canonical plan across invocations so
       // the bench's 3 reps share ONE pin (PinHygieneSpec), where a
       // per-invocation checkpoint pins a fresh RDD every rep and only
       // the ContextCleaner's GC race releases them.
-      val counts = toks.join(vocab, "word")
-        .groupBy("HADM_ID", "word").agg(count(lit(1)).cast("double").as("c"))
-        .cache()
+      val counts = Materialize.pin(toks.join(vocab, "word")
+        .groupBy("HADM_ID", "word").agg(count(lit(1)).cast("double").as("c")))
       val qid = docs.select(col("HADM_ID"), size(split(col("TEXT"), " ")).as("n"))
         .orderBy(desc("n"), asc("HADM_ID")).limit(1)
         .select(col("HADM_ID").as("_qid"))

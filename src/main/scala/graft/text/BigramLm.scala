@@ -126,7 +126,10 @@ object BigramLm {
     // re-scans the corpus 4×. N₁₊(··) doubles as the materializing
     // count() action (never a Window.partitionBy() pass over the type
     // table, which is 10⁹⁺ rows at corpus scale). The topK readout is
-    // cached and the type-table pin released before return.
+    // cached and the type-table pin released before return: unlike a
+    // readout over a range pass, this one's scoped pin is the data-sized
+    // type table and its plan embeds no sampled offsets, so the readout
+    // cache dedups across reps.
     val bcCounts = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     graft.Materialize.scoped(bcCounts) {
       val ntot = bcCounts.count()

@@ -27,42 +27,36 @@ object CorpusStats {
     * (range partition + per-partition offsets — no global Window.orderBy,
     * whose single sort task a 10⁸⁺-term crawl vocabulary would not fit),
     * filtered to `rank ≤ topN`; then an O(topN) fit. The 1-row result is
-    * materialized inside a `Materialize.scoped` body, whose end releases
-    * the rank's internal pin.
+    * a lazy frame over the rank's ranged pin ([[graft.Materialize.pin]]):
+    * a caller inside a `Materialize.scoped` body acts on it inside that
+    * body.
     */
   def zipfSlope(docs: DataFrame, text: Column, topN: Int = 200): DataFrame = {
     val tf = docs
       .select(explode(TextOps.tokens(text)).as("term"))
       .groupBy("term").agg(count(lit(1)).as("freq"))
-    // 1-row readout: materialized inside the scope, whose end drops the
-    // rank's internal pin
-    graft.Materialize.scoped() {
-      val ranked = graft.ops.GlobalRowNumber.withRowNumber(
-        tf, "rank", col("freq").desc, col("term").asc)
-        .filter(col("rank") <= topN)
-      val lx = round(log(col("rank").cast("double")) * 1e6).cast("long")
-      val ly = round(log(col("freq").cast("double")) * 1e6).cast("long")
-      val agg = ranked.select(lx.as("_x"), ly.as("_y"))
-        .agg(
-          count(lit(1)).as("n_terms"),
-          sum(col("_x")).as("sx"), sum(col("_y")).as("sy"),
-          sum((col("_x").cast("decimal(19,0)") * col("_y").cast("decimal(19,0)"))
-            .cast("decimal(38,0)")).cast("double").as("sxy"),
-          sum((col("_x").cast("decimal(19,0)") * col("_x").cast("decimal(19,0)"))
-            .cast("decimal(38,0)")).cast("double").as("sxx"))
-      val nD = col("n_terms").cast("double")
-      val sxD = col("sx").cast("double")
-      val syD = col("sy").cast("double")
-      val slope = (nD * col("sxy") - sxD * syD) / (nD * col("sxx") - sxD * sxD)
-      val collected = agg.select(
-        col("n_terms"),
-        round(slope, 6).as("slope"),
-        // back to ln units: sums are micro-scaled, the ratio cancels the 1e6
-        round((syD - slope * sxD) / (nD * 1e6), 6).as("intercept"))
-        .cache()
-      collected.count()
-      collected
-    }
+    val ranked = graft.ops.GlobalRowNumber.withRowNumber(
+      tf, "rank", col("freq").desc, col("term").asc)
+      .filter(col("rank") <= topN)
+    val lx = round(log(col("rank").cast("double")) * 1e6).cast("long")
+    val ly = round(log(col("freq").cast("double")) * 1e6).cast("long")
+    val agg = ranked.select(lx.as("_x"), ly.as("_y"))
+      .agg(
+        count(lit(1)).as("n_terms"),
+        sum(col("_x")).as("sx"), sum(col("_y")).as("sy"),
+        sum((col("_x").cast("decimal(19,0)") * col("_y").cast("decimal(19,0)"))
+          .cast("decimal(38,0)")).cast("double").as("sxy"),
+        sum((col("_x").cast("decimal(19,0)") * col("_x").cast("decimal(19,0)"))
+          .cast("decimal(38,0)")).cast("double").as("sxx"))
+    val nD = col("n_terms").cast("double")
+    val sxD = col("sx").cast("double")
+    val syD = col("sy").cast("double")
+    val slope = (nD * col("sxy") - sxD * syD) / (nD * col("sxx") - sxD * sxD)
+    agg.select(
+      col("n_terms"),
+      round(slope, 6).as("slope"),
+      // back to ln units: sums are micro-scaled, the ratio cancels the 1e6
+      round((syD - slope * sxD) / (nD * 1e6), 6).as("intercept"))
   }
 
   /** DuckDB mirror of [[zipfSlope]] (tokenizer = the vocab_topdf split). */

@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.SparkSpecBase
+import graft.plans.PlanCheck
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 
 class DomainMixSpec extends SparkSpecBase {
@@ -51,6 +53,19 @@ class DomainMixSpec extends SparkSpecBase {
       val expect = byHash.filter(_._1 == d).sortBy(t => (t._2, t._3))
         .take(k.toInt).map(_._3).sum
       assert(idSum === expect, s"domain $d")
+    }
+  }
+
+  test("the mix readouts rank a slim frame: no cached relation they read holds the text") {
+    val withText = docs.withColumn("text", concat(lit("body of "), col("id").cast("string")))
+    val readouts = Seq(
+      DomainMix.mixCounts(withText, "dom", "id", hash, Map("a" -> 0.5, "b" -> 0.3, "c" -> 0.2)),
+      DomainMix.temperatureMixCounts(withText, "dom", "id", hash))
+    readouts.foreach { out =>
+      out.collect()
+      val cached = PlanCheck.operators(out.queryExecution.executedPlan)
+        .collect { case m: InMemoryTableScanExec => m.relation.output.map(_.name) }
+      assert(cached.nonEmpty && cached.forall(!_.contains("text")), cached)
     }
   }
 
